@@ -4,10 +4,10 @@ JVM-side higher-order-function arithmetic (zip_with + aggregate) — stays in
 whole-stage codegen, no Python boundary. Mirrors the reference distance
 kernels l2/cosine/dot/hamming (rust/lance-linalg/src/distance.rs:36-70).
 
-For large-batch scoring (index build, brute-force KNN at scale) the
-pandas_udf numpy path in operators/knn.py is ~5-10× faster than per-row
-aggregate; these expressions are the exact-semantics reference and fine for
-oracle-checked queries.
+These expressions are the exact-semantics reference that brute-force KNN
+and the oracle-checked queries run. The index paths score in numpy
+(indexes/vector.py ``_prep``/``_score``/``_finalize_distance``) and
+follow the same rules: a NULL here is a NaN there, ranked last.
 """
 
 from __future__ import annotations

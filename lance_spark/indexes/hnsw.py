@@ -41,6 +41,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lance_spark.indexes.vector import (
+    _MAX_REFINE_CANDIDATES,
+    _adc_table,
+    _exact_refine_local,
+    _finalize_distance,
+    _gated_broadcast,
+    _normalize,
+    _prep,
+    _query_prep,
+    _score,
+    probe_partitions,
+)
+
 HNSW_M = 16  # max degree, upper layers
 HNSW_M0 = 32  # max degree, layer 0
 HNSW_EF_CONSTRUCTION = 100
@@ -65,7 +78,8 @@ def _search_layer(
 ):
     """Standard HNSW ef-bounded best-first layer search → [(dist, idx)]
     sorted ascending. ``dfun(i)`` scores node i against the query — raw
-    squared-L2 for FLAT, an ADC lookup for the PQ variant. Ties break on
+    squared-L2 for FLAT, an ADC lookup for the PQ variant; it must be
+    NaN-free (search maps undefined scores to +inf). Ties break on
     index for determinism. ``exhaustive`` (query-time only — construction
     must stay layer-respecting) sweeps up nodes a disconnected component
     would hide when ef covers the whole partition.
@@ -116,10 +130,6 @@ def _search_layer(
     return out
 
 
-def _l2_dfun(vecs: np.ndarray, q: np.ndarray):
-    return lambda i: float(((vecs[i] - q) ** 2).sum())
-
-
 def _greedy_descent(dfun, nbrs, cur: int, from_lvl: int, to_lvl: int) -> int:
     """Hop to the closest neighbor until a local minimum, one layer at a
     time (the upper-layer zoom-in both build and search use)."""
@@ -150,11 +160,9 @@ def _select_neighbors_heuristic(
     for d, e in cand_sorted:
         if len(chosen) >= cap:
             break
-        ve = vecs[e]
-        for _, c in chosen:
-            if float(((ve - vecs[c]) ** 2).sum()) < d:
-                pruned.append(e)
-                break
+        kept = [c for _, c in chosen]
+        if kept and (_score(vecs[kept], vecs[e], "l2") < d).any():
+            pruned.append(e)
         else:
             chosen.append((d, e))
     out = [e for _, e in chosen]
@@ -174,8 +182,8 @@ def _build_graph(vecs: np.ndarray, m: int = HNSW_M, ef_c: int = HNSW_EF_CONSTRUC
     entry, max_lvl = 0, levels[0]
     for i in range(1, n):
         lvl = levels[i]
-        q = vecs[i]
-        dfun = _l2_dfun(vecs, q)
+        # distances to every node inserted so far, in one vectorized pass
+        dfun = _score(vecs[:i], vecs[i], "l2").item
         cur = _greedy_descent(dfun, nbrs, entry, max_lvl, lvl)
         for lc in range(min(lvl, max_lvl), -1, -1):
             cap = HNSW_M0 if lc == 0 else m
@@ -188,9 +196,7 @@ def _build_graph(vecs: np.ndarray, m: int = HNSW_M, ef_c: int = HNSW_EF_CONSTRUC
                 if len(lst) > cap:
                     # re-select with the same diversity heuristic, with
                     # distances taken to the node being pruned
-                    ds = sorted(
-                        (float(((vecs[x] - vecs[c]) ** 2).sum()), x) for x in lst
-                    )
+                    ds = sorted(zip(_score(vecs[lst], vecs[c], "l2").tolist(), lst))
                     nbrs[c][lc] = _select_neighbors_heuristic(ds, cap, vecs)
             cur = found[0][1]
         if lvl > max_lvl:
@@ -220,8 +226,6 @@ def build_hnsw_graphs(
     def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["partition_id"].iloc[0])
         pdf = pdf.sort_values("id").reset_index(drop=True)
-        from lance_spark.indexes.vector import _normalize
-
         vecs = np.asarray(pdf["vec"].tolist(), dtype=np.float32)
         if cosine:
             vecs = _normalize(vecs)
@@ -282,14 +286,6 @@ def hnsw_search(
     prefilter, traversal still walks the full graph (filtered-out nodes
     remain routing waypoints — the reference's prefilter keeps graph
     connectivity too) and only the emitted candidates are filtered."""
-    from lance_spark.indexes.vector import (
-        _MAX_REFINE_CANDIDATES,
-        _exact_refine_local,
-        _normalize,
-        _query_prep,
-        probe_partitions,
-    )
-
     pq = index.index_type == "IVF_HNSW_PQ"
     sq = index.index_type == "IVF_HNSW_SQ"
     # q stays float64: the exact refine and the FLAT scorer must match the
@@ -303,7 +299,8 @@ def hnsw_search(
         segs = g if segs is None else segs.unionByName(g)
     graph = segs.filter(F.col("partition_id").isin(probes))
     metric = index.metric
-    qb = spark.sparkContext.broadcast(q.astype(np.float64))
+    cosine = metric == "cosine"
+    qb = spark.sparkContext.broadcast(q)
     n_cand = min(k * max(refine_factor, 1), _MAX_REFINE_CANDIDATES)
     # PQ/SQ refine draws from the ef-bounded emission: ef must cover the
     # requested refine width or refine_factor is silently neutered
@@ -331,8 +328,6 @@ def hnsw_search(
             )
         ok_col = F.col("__ok_excl")
     if prefilter_rowids is not None:
-        from lance_spark.indexes.vector import _gated_broadcast
-
         allow = prefilter_rowids.toDF("id").withColumn("__allow", F.lit(True))
         graph = graph.join(_gated_broadcast(allow), "id", "left")
         ok_col = (
@@ -354,53 +349,30 @@ def hnsw_search(
         ]
         levels = pdf["level"].to_numpy()
         entry = int(np.lexsort((ids, -levels))[0])  # max level, min id
-        qv = qb.value  # float64
+        # every node's distance to the query in one vectorized pass; the
+        # traversal then only looks scores up
         if pq:
             tbl = adc_b.value[int(pdf["partition_id"].iloc[0])]
             codes_arr = np.asarray(pdf["pq_code"].tolist(), dtype=np.int64)
-            mm = np.arange(tbl.shape[0])
-
-            def dfun(i):
-                return float(tbl[mm, codes_arr[i]].sum())
-
-            def batch_dfun(idx):
-                return tbl[mm[None, :], codes_arr[idx]].sum(axis=1)
+            d = tbl[np.arange(tbl.shape[0])[None, :], codes_arr].sum(axis=1)
         elif sq:
             lo, span = sq_b.value
-            codes_arr = np.asarray(pdf["pq_code"].tolist(), dtype=np.float64)
-            deq = lo + codes_arr / 255.0 * span  # (n, dim) dequantized
-            if metric == "cosine":
-                # remove the quantization norm-error component before
-                # scoring (vector.py sq_dist does the same — skipping it
-                # degrades the candidate pool only for HNSW_SQ + cosine)
-                deq = _normalize(deq)
-
-            def dfun(i):
-                d = deq[i] - qv
-                return float((d * d).sum())
-
-            def batch_dfun(idx):
-                d = deq[idx] - qv
-                return (d * d).sum(axis=1)
+            deq = lo + _prep(pdf["pq_code"]) / 255.0 * span
+            # cosine renormalizes: drops the quantization norm error
+            d = _score(_prep(deq, cosine=cosine), qb.value, metric)
         else:
-            # float64 accumulation: FLAT distances are FINAL (no refine) —
-            # float32 error could flip the round(d, 4) oracle comparison
-            vecs = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            dfun = _l2_dfun(vecs, qv)
-
-            def batch_dfun(idx):
-                d = vecs[idx] - qv
-                return (d * d).sum(axis=1)
-
-        cur = _greedy_descent(dfun, nbrs, entry, int(levels[entry]), 0)
+            # stored vectors are already normalized; float64 accumulation
+            # because FLAT distances are FINAL (no refine)
+            d = _score(_prep(pdf["vec"]), qb.value, metric)
+        # an undefined (NaN) score routes as +inf and is emitted as NULL
+        routed = np.where(np.isnan(d), np.inf, d)
+        cur = _greedy_descent(routed.item, nbrs, entry, int(levels[entry]), 0)
         found = _search_layer(
-            dfun, len(ids), nbrs, cur, ef, 0, exhaustive=True,
-            emit_ok=emit_ok, batch_dfun=batch_dfun,
+            routed.item, len(ids), nbrs, cur, ef, 0, exhaustive=True,
+            emit_ok=emit_ok, batch_dfun=routed.__getitem__,
         )
-        top = found[:ef]
-        return pd.DataFrame(
-            {"id": [int(ids[i]) for _, i in top], "_d2": [d for d, _ in top]}
-        )
+        top = [i for _, i in found[:ef]]
+        return pd.DataFrame({"id": ids[top].astype(np.int64), "_distance": d[top]})
 
     adc_b = sq_b = None
     if sq:
@@ -409,38 +381,19 @@ def hnsw_search(
             (sqb[0].astype(np.float64), sqb[1].astype(np.float64))
         )
     if pq:
-        cents, cbs = index.centroids, index.codebooks
-        m, _, sub = cbs.shape
-        adc = {}
-        q64 = q.astype(np.float64)
-        for pid in probes:
-            rq = (q64 - cents[pid].astype(np.float64)).astype(np.float32)
-            tbl = np.empty((m, 256), dtype=np.float32)
-            for j in range(m):
-                diff = rq[j * sub : (j + 1) * sub] - cbs[j]
-                tbl[j] = (diff * diff).sum(axis=1)
-            adc[pid] = tbl
+        adc = {
+            pid: _adc_table(index.codebooks, index.centroids[pid], q, metric)
+            for pid in probes
+        }
         adc_b = spark.sparkContext.broadcast(adc)
 
     cands = graph.groupBy("__seg", "partition_id").applyInPandas(
-        search_one, "id long, _d2 double"
-    )
+        search_one, "id long, _distance double"
+    ).orderBy(F.asc_nulls_last("_distance"), "id")
     if pq or sq:
         # quantized distances are approximate: exact-refine the bounded set
         # (n_cand already capped at _MAX_REFINE_CANDIDATES — the suite's
         # k=100k × refine=100 gate would otherwise collect 10M rows)
-        top = cands.orderBy("_d2", "id").limit(n_cand).collect()
-        return _exact_refine_local(
-            spark, index, probes, [r["id"] for r in top], q, k, metric == "cosine"
-        )
-    if metric == "cosine":
-        dist = F.col("_d2") / 2.0
-    elif metric == "l2":
-        dist = F.sqrt("_d2")
-    else:
-        dist = F.col("_d2")
-    return (
-        cands.select("id", dist.alias("_distance"))
-        .orderBy("_distance", "id")
-        .limit(k)
-    )
+        top = cands.limit(n_cand).collect()
+        return _exact_refine_local(spark, index, probes, [r["id"] for r in top], q, k)
+    return _finalize_distance(cands.limit(k), metric)

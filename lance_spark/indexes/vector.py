@@ -76,8 +76,10 @@ def _as_matrix(series: pd.Series) -> np.ndarray:
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
+    # a zero row stays zero (the zero-norm rule in _score reads it back);
+    # every other row is divided by its exact norm, however tiny
     n = np.linalg.norm(m, axis=-1, keepdims=True)
-    return m / np.maximum(n, 1e-12)
+    return m / np.where(n > 0, n, 1.0)
 
 
 def train_kmeans(x: np.ndarray, k: int, iters: int = 12, seed: int = 42) -> np.ndarray:
@@ -334,6 +336,94 @@ def _unpack_bits(x: np.ndarray) -> np.ndarray:
     return np.unpackbits(x.astype(np.uint8), axis=1).astype(np.float64)
 
 
+# --------------------------------------------------------------------------
+# Scoring kernel: the ONE numpy form of vector distance every index path
+# calls (flat / SQ / refine / range scans, HNSW traversal, PQ lookup tables,
+# the stored residual norms). Its NULL rules mirror the JVM expressions in
+# functions/vector.py: wherever ``distance_expr`` yields NULL, ``_score``
+# yields NaN (which Arrow hands back to Spark as NULL, ranked last).
+# --------------------------------------------------------------------------
+
+
+def _prep(x, packed: bool = False, cosine: bool = False) -> np.ndarray:
+    """Rows (ndarray, pandas Series or list of arrays) → the float64 matrix
+    the kernel scores: widened from the float32 storage form, bit-unpacked
+    for packed binary vectors, unit-normalized for cosine (a zero-norm row
+    stays all-zero). A NULL row, or one whose length differs from the
+    batch's common length, becomes a NaN row."""
+    if isinstance(x, np.ndarray) and x.dtype != object:
+        x = x.astype(np.float64)
+    else:
+        rows = list(x)
+        lens = [-1 if v is None else len(v) for v in rows]
+        dim = max(set(lens), key=lens.count, default=0)
+        if dim >= 0 and all(n == dim for n in lens):
+            x = np.asarray(rows, dtype=np.float64).reshape(len(rows), dim)
+        else:  # NULL or ragged rows in the batch
+            x = np.full((len(rows), max(dim, 0)), np.nan)
+            for i, v in enumerate(rows):
+                if lens[i] == dim:
+                    x[i] = v
+    if packed:
+        bad = np.isnan(x).any(axis=1)
+        x = _unpack_bits(x)
+        x[bad] = np.nan
+    return _normalize(x) if cosine else x
+
+
+def _score(x: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
+    """Internal distance of prepared rows ``x`` to a prepared query ``q``:
+    −q·x for dot, squared L2 otherwise (cosine on unit vectors, hamming on
+    bits). ``q`` may also be one row per ``x`` row (residual norms). NaN —
+    ranked last — for a NULL row, a row of the wrong length, and under
+    cosine a zero-norm row or query (cosine is undefined there)."""
+    if x.shape[1] != q.shape[-1]:
+        return np.full(len(x), np.nan)
+    d = -(x @ q) if metric == "dot" else ((x - q) ** 2).sum(axis=1)
+    if metric == "cosine":
+        d[~x.any(axis=1) | ~np.any(q, axis=-1)] = np.nan
+    return d
+
+
+def _adc_table(
+    codebooks: np.ndarray, centroid: np.ndarray, q: np.ndarray, metric: str
+) -> np.ndarray:
+    """PQ asymmetric-distance lookup table (m, ncode) for one partition:
+    entry [j, c] is the subspace-j share of ``_score`` between the query
+    and ``centroid + code_c``, so a row's approximate distance is the sum
+    of its m gathered entries. Squared L2 on the residual query ``q − c``
+    (float32, the codebooks' precision); for dot, −q_j·code_c with the
+    partition constant −q·c folded into subspace 0 (float64 products). The
+    width is the trained ``ncode``, not 256: a small corpus trains
+    narrower codebooks."""
+    m, ncode, sub = codebooks.shape
+    tbl = np.empty((m, ncode), dtype=np.float32)
+    if metric == "dot":
+        for j in range(m):
+            tbl[j] = -(codebooks[j] @ q[j * sub : (j + 1) * sub])
+        tbl[0] += -float(q @ centroid.astype(np.float64))
+    else:
+        rq = (q - centroid).astype(np.float32)
+        for j in range(m):
+            diff = rq[j * sub : (j + 1) * sub] - codebooks[j]
+            tbl[j] = (diff * diff).sum(axis=1)
+    return tbl
+
+
+def _finalize_distance(d, metric: str):
+    """Internal ``_score`` scale → the reported metric: cosine distance
+    1 − cos = ‖a−b‖²/2 on unit vectors, l2 = √, dot and hamming as is
+    (matches knn_bruteforce). Takes a numpy array, a Column, or a
+    DataFrame whose ``_distance`` column is converted."""
+    if isinstance(d, DataFrame):
+        return d.withColumn("_distance", _finalize_distance(F.col("_distance"), metric))
+    if metric == "cosine":
+        return d / 2.0
+    if metric == "l2":
+        return np.sqrt(d) if isinstance(d, np.ndarray) else F.sqrt(d)
+    return d
+
+
 def compute_partition_radii(
     spark: SparkSession, codes_dir: str, centroids: np.ndarray, cosine: bool,
     packed: bool = False,
@@ -372,13 +462,10 @@ def compute_partition_radii(
 
     @pandas_udf("double")
     def _resid_norm(s: pd.Series, pid: pd.Series) -> pd.Series:
-        x = _as_matrix(s).astype(np.float64)
-        if packed:
-            x = _unpack_bits(x)
-        if cosine:
-            x = _normalize(x)
         c = cent_b.value.astype(np.float64)[pid.to_numpy()]
-        return pd.Series(np.sqrt(((x - c) ** 2).sum(axis=1)))
+        return pd.Series(
+            _finalize_distance(_score(_prep(s, packed, cosine), c, "l2"), "l2")
+        )
 
     radii_rows = (
         spark.read.parquet(codes_dir)
@@ -779,19 +866,11 @@ def _assign_encode_df(
         # residual norm ‖x − c_pid‖, persisted with the codes so the
         # covering-radius pass (compute_partition_radii) is a column max
         # instead of a second Python-boundary pass over every vector
-        # (guide §4: one crossing). Float path replicates the radii UDF
-        # exactly — widen the float32 storage form to float64 FIRST, then
-        # the same unpack/normalize, direct (x−c)² — so the stored value
-        # is bit-identical to what the fallback pass would recompute from
-        # the written vec column.
-        x64 = raw.astype(np.float64)
-        if packed:
-            x64 = _unpack_bits(x64)
-        if cosine:
-            x64 = _normalize(x64)
-        rnorm = np.sqrt(
-            ((x64 - cent_b.value.astype(np.float64)[pid]) ** 2).sum(axis=1)
-        )
+        # (guide §4: one crossing). Same kernel calls as the radii UDF, so
+        # the stored value is bit-identical to what the fallback pass
+        # would recompute from the written vec column.
+        c64 = cent_b.value.astype(np.float64)[pid]
+        rnorm = _finalize_distance(_score(_prep(raw, packed, cosine), c64, "l2"), "l2")
         rq_norm = rq_corr = [None] * len(x)
         if rot is not None:
             resid = (x - cents[pid]).astype(np.float64)
@@ -1057,14 +1136,9 @@ def merge_ivf_segments(index: IvfIndex, spark: SparkSession) -> IvfIndex:
 
 
 def _query_prep(index: IvfIndex, query: list[float]) -> np.ndarray:
-    q = np.asarray(query, dtype=np.float64)
-    if index.packed:
-        # packed-binary index: probe/score in bit space (same unpack the
-        # build applied); the query arrives in the stored packed form
-        q = _unpack_bits(q[None, :])[0]
-    if index.metric == "cosine":
-        q = _normalize(q[None, :])[0]
-    return q
+    # a packed-binary query arrives in the stored packed form and is
+    # probed/scored in bit space, like the rows
+    return _prep([query], index.packed, index.metric == "cosine")[0]
 
 
 def probe_partitions(index: IvfIndex, query: list[float], nprobes: int) -> list[int]:
@@ -1074,10 +1148,8 @@ def probe_partitions(index: IvfIndex, query: list[float], nprobes: int) -> list[
     faiss METRIC_INNER_PRODUCT does the same): high-dot partitions hold
     the high-dot vectors, L2-near ones need not."""
     q = _query_prep(index, query)
-    if index.metric == "dot":
-        d = -(index.centroids.astype(np.float64) @ q.astype(np.float64))
-    else:
-        d = ((index.centroids - q) ** 2).sum(axis=1)
+    metric = "dot" if index.metric == "dot" else "l2"
+    d = _score(index.centroids.astype(np.float64), q, metric)
     return [int(i) for i in np.argsort(d, kind="stable")[:nprobes]]
 
 
@@ -1126,39 +1198,20 @@ def ann_search(
     if prefilter_rowids is not None:
         allow = prefilter_rowids.toDF("id")
         codes = codes.join(_gated_broadcast(allow), "id", "left_semi")
-    cosine = index.metric == "cosine"
-
-    dot = index.metric == "dot"
+    metric, packed = index.metric, index.packed
+    cosine = metric == "cosine"
 
     if index.index_type == "IVF_FLAT":
         qb = spark.sparkContext.broadcast(q)
-        packed = index.packed
 
         @pandas_udf("double")
         def flat_dist(s: pd.Series) -> pd.Series:
             # float64 scoring over float32 storage: bit-matches any engine
             # that widens-then-computes (the DuckDB oracle, numpy references)
-            x = _as_matrix(s).astype(np.float64)
-            if packed:
-                x = _unpack_bits(x)
-            if dot:
-                # -q·x: same scale/sign as knn_bruteforce's dot scoring, so
-                # the unindexed-tail union in dataset_nearest is comparable
-                return pd.Series(-(x @ qb.value.astype(np.float64)))
-            if cosine:
-                # zero-norm rows (failed embeddings): cosine is undefined —
-                # NaN ranks last, matching the JVM cosine_sim NULL contract
-                # (the _normalize guard alone would fabricate distance 0.5
-                # and let the junk row beat real neighbors; r12 review fix)
-                zero = np.linalg.norm(x, axis=1) == 0.0
-                x = _normalize(x)
-                d = ((x - qb.value.astype(np.float64)) ** 2).sum(axis=1)
-                d[zero] = np.nan
-                return pd.Series(d)
-            return pd.Series(((x - qb.value.astype(np.float64)) ** 2).sum(axis=1))
+            return pd.Series(_score(_prep(s, packed, cosine), qb.value, metric))
 
         scored = codes.select("id", flat_dist("vec").alias("_distance"))
-        scored = _finalize_distance(scored, index.metric)
+        scored = _finalize_distance(scored, metric)
         # torn-delta guard: an id visible in two segments scores twice and
         # would fill two of the k slots. Over-fetch 2k through the map-side
         # TakeOrdered (a torn delta duplicates an id at most once), then
@@ -1212,7 +1265,7 @@ def ann_search(
             "id", rq_dist("pq_code", "rq_norm", "rq_corr", "partition_id").alias("_approx")
         )
         cand = scored.orderBy("_approx", "id").limit(n_cand).collect()
-        return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k, cosine)
+        return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k)
 
     if index.index_type == "IVF_SQ":
         # dequantize codes → squared-L2 to the query, then exact refine.
@@ -1225,42 +1278,19 @@ def ann_search(
         @pandas_udf("double")
         def sq_dist(code: pd.Series) -> pd.Series:
             lo, span = sq_b2.value[0].astype(np.float64), sq_b2.value[1].astype(np.float64)
-            codes = np.asarray(code.tolist(), dtype=np.float64)
-            deq = lo + codes / 255.0 * span
-            if dot:
-                return pd.Series(-(deq @ qb.value.astype(np.float64)))
-            if cosine:
-                deq = _normalize(deq)
-            return pd.Series(((deq - qb.value.astype(np.float64)) ** 2).sum(axis=1))
+            deq = lo + _prep(code) / 255.0 * span
+            # cosine renormalizes: drops the quantization norm error
+            return pd.Series(_score(_prep(deq, cosine=cosine), qb.value, metric))
 
         scored = codes.select("id", sq_dist("pq_code").alias("_approx"))
-        cand = scored.orderBy("_approx", "id").limit(n_cand).collect()
-        return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k, cosine)
+        cand = scored.orderBy(F.asc_nulls_last("_approx"), "id").limit(n_cand).collect()
+        return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k)
 
-    # IVF_PQ: ADC lookup table (m, 256) of ||q_sub - (centroid_sub + code)||²
-    # — or, for dot, of -q_sub·code with the partition constant -q·c_p
-    # folded into subspace 0 (x ≈ c_p + Σ_j code_j, so
-    # -q·x ≈ -q·c_p - Σ_j q_j·code_j: same gather-and-sum shape).
-    cents = index.centroids
+    # IVF_PQ: one ADC lookup table per probed partition, then one
+    # gather-and-sum per row over its m codes
     cbs = index.codebooks
-    m, ncode, sub = cbs.shape
-    # per-probed-partition ADC tables: residual query = q - centroid.
-    # ncode, not a hardcoded 256: train_kmeans caps the codebook at the
-    # training-row count, so a small corpus ships narrower codebooks
-    # (r12 review fix — the 256 allocation crashed such indexes at query)
-    adc = {}
-    for pid in probes:
-        tbl = np.empty((m, ncode), dtype=np.float32)
-        if dot:
-            for j in range(m):
-                tbl[j] = -(cbs[j] @ q[j * sub : (j + 1) * sub].astype(np.float64))
-            tbl[0] += -float(q.astype(np.float64) @ cents[pid].astype(np.float64))
-        else:
-            rq = (q - cents[pid]).astype(np.float32)
-            for j in range(m):
-                diff = rq[j * sub : (j + 1) * sub] - cbs[j]
-                tbl[j] = (diff * diff).sum(axis=1)
-        adc[pid] = tbl
+    m = cbs.shape[0]
+    adc = {pid: _adc_table(cbs, index.centroids[pid], q, metric) for pid in probes}
     adc_b = spark.sparkContext.broadcast(adc)
 
     @pandas_udf("double")
@@ -1280,7 +1310,7 @@ def ann_search(
     # smaller, which is the entire IO story of PQ at 100 TB.
     scored = codes.select("id", pq_dist("pq_code", "partition_id").alias("_approx"))
     cand = scored.orderBy("_approx", "id").limit(n_cand).collect()
-    return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k, cosine)
+    return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k)
 
 
 def _exact_refine_local(
@@ -1290,7 +1320,6 @@ def _exact_refine_local(
     cand_ids: list[int],
     q: np.ndarray,
     k: int,
-    cosine: bool,  # kept for call-site clarity; index.metric decides dot
 ) -> DataFrame:
     """Exact re-rank of the ADC candidates (scanner.rs:2884-2905 refine).
 
@@ -1323,21 +1352,9 @@ def _exact_refine_local(
         filter=pads.field("partition_id").isin(probes) & pads.field("id").isin(cand_ids),
     )
     ids = tbl.column("id").to_numpy(zero_copy_only=False)
-    x = np.asarray(tbl.column("vec").to_pylist(), dtype=np.float64)
-    if index.packed:
-        x = _unpack_bits(x)
-    if index.metric == "dot":
-        d = -(x @ q.astype(np.float64))
-    else:
-        zero = np.linalg.norm(x, axis=1) == 0.0 if cosine else None
-        if cosine:
-            x = _normalize(x)
-        d = ((x - q.astype(np.float64)) ** 2).sum(axis=1)
-        if index.metric == "cosine":
-            d = d / 2.0
-            d[zero] = np.nan  # undefined cosine ranks last (r12 review fix)
-        elif index.metric == "l2":
-            d = np.sqrt(d)
+    metric = index.metric
+    x = _prep(tbl.column("vec").to_pylist(), index.packed, metric == "cosine")
+    d = _finalize_distance(_score(x, q, metric), metric)
     # python key-sort: type-agnostic (string ids lexsort-safe) and the
     # candidate set is O(k·refine) — tiny. The seen-set keeps ONE rank slot
     # per id when a torn delta left the same id in two segments (r12,
@@ -1401,17 +1418,20 @@ def distance_range_search(
     partitions whose best possible score misses ``range_max`` are skipped."""
     q = _query_prep(index, query)
     radii = _ensure_radii(index, spark)
-    if index.metric == "dot":
-        qn = float(np.sqrt((q.astype(np.float64) ** 2).sum()))
-        best = -(index.centroids.astype(np.float64) @ q.astype(np.float64)) - qn * radii
+    metric, packed = index.metric, index.packed
+    cosine = metric == "cosine"
+    cents = index.centroids.astype(np.float64)
+    if metric == "dot":
+        qn = float(np.sqrt((q ** 2).sum()))
+        best = _score(cents, q, "dot") - qn * radii
         probes = [int(i) for i in np.nonzero(best <= range_max)[0]]
     else:
-        d_cent = np.sqrt(((index.centroids.astype(np.float64) - q) ** 2).sum(axis=1))
+        d_cent = _finalize_distance(_score(cents, q, "l2"), "l2")
         lower = np.maximum(0.0, d_cent - radii)
-        if index.metric == "cosine":
+        if cosine:
             # internal space is unit-normalized squared-L2 = 2·cosine_distance
             range_max_l2 = float(np.sqrt(2.0 * range_max)) if np.isfinite(range_max) else np.inf
-        elif index.metric == "hamming":
+        elif metric == "hamming":
             # hamming = squared-L2 on bits; the radii/centroid prune runs in
             # L2 units, so the bound converts by sqrt
             range_max_l2 = float(np.sqrt(range_max)) if np.isfinite(range_max) else np.inf
@@ -1421,21 +1441,11 @@ def distance_range_search(
     if not probes:
         return spark.createDataFrame([], "id long, _distance double")
     codes = index.codes_df(spark).filter(F.col("partition_id").isin(probes))
-    cosine = index.metric == "cosine"
-    dot = index.metric == "dot"
-    packed = index.packed
     qb = spark.sparkContext.broadcast(q)
 
     @pandas_udf("double")
     def exact_dist(s: pd.Series) -> pd.Series:
-        x = _as_matrix(s).astype(np.float64)
-        if packed:
-            x = _unpack_bits(x)
-        if dot:
-            return pd.Series(-(x @ qb.value.astype(np.float64)))
-        if cosine:
-            x = _normalize(x)
-        return pd.Series(((x - qb.value.astype(np.float64)) ** 2).sum(axis=1))
+        return pd.Series(_score(_prep(s, packed, cosine), qb.value, metric))
 
     # non-deterministic (guide §4.4): the range filter below references the
     # UDF column, and filter pushdown otherwise clones the whole scoring
@@ -1443,7 +1453,7 @@ def distance_range_search(
     # every scanned vector scored twice
     exact_dist = exact_dist.asNondeterministic()
     scored = _finalize_distance(
-        codes.select("id", exact_dist("vec").alias("_distance")), index.metric
+        codes.select("id", exact_dist("vec").alias("_distance")), metric
     )
     return scored.filter(
         (F.col("_distance") >= range_min) & (F.col("_distance") < range_max)
@@ -1491,7 +1501,7 @@ def ann_join(
     the IO story: codes are ~dim/sub× smaller than vectors, and vectors
     are fetched for |Q|·refine·k rows instead of every probed row.
     """
-    from lance_spark.functions.vector import cosine_sim, dot_product, l2_distance
+    from lance_spark.functions.vector import distance_expr
 
     metric = index.metric
     cosine = metric == "cosine"
@@ -1502,16 +1512,12 @@ def ann_join(
     @pandas_udf("array<int>")
     def probe(s: pd.Series) -> pd.Series:
         cents = cent_b.value
-        x = _as_matrix(s).astype(np.float64)
-        if packed:
-            x = _unpack_bits(x)
+        x = _prep(_as_matrix(s), packed, cosine)
         if metric == "dot":
             # MIPS probe order: descending q·c (same rule as the
             # single-query probe_partitions), not L2-nearest centroids
             d = -(x @ cents.T)
         else:
-            if cosine:
-                x = _normalize(x)
             d = (x * x).sum(axis=1, keepdims=True) - 2 * (x @ cents.T) + (
                 cents * cents
             ).sum(axis=1)
@@ -1524,19 +1530,7 @@ def ann_join(
         F.explode(probe(F.col(query_vec_col))).alias("partition_id"),
     )
 
-    def _exact():
-        v = F.col("vec").cast("array<double>")
-        if metric == "l2":
-            return l2_distance(v, F.col("__qv"))
-        if metric == "dot":
-            return -dot_product(v, F.col("__qv"))
-        if metric == "hamming":
-            from lance_spark.functions.vector import hamming_distance
-
-            return hamming_distance(
-                F.col("vec").cast("array<long>"), F.col("__qv").cast("array<long>")
-            ).cast("double")
-        return 1.0 - cosine_sim(v, F.col("__qv"))
+    exact = distance_expr(F.col("vec"), F.col("__qv"), metric)
 
     from pyspark.sql import Window
 
@@ -1554,45 +1548,33 @@ def ann_join(
             "partition_id", "id", "vec"
         )
         scored = q.join(codes, "partition_id").select(
-            "query_id", "id", _exact().alias("_distance")
+            "query_id", "id", exact.alias("_distance")
         )
         return _topk(scored, k)
 
     # --- PQ/ADC bulk path: codes-only scoring + late-materialized refine ---
-    cb_b = spark.sparkContext.broadcast(index.codebooks.astype(np.float64))
+    cb_b = spark.sparkContext.broadcast(index.codebooks)
 
     @pandas_udf("double")
     def adc(qid: pd.Series, qv: pd.Series, pid: pd.Series, code: pd.Series) -> pd.Series:
-        cbs = cb_b.value  # (m, 256, sub)
+        cbs = cb_b.value
         cents = cent_b.value
-        m, _, sub = cbs.shape
         codes_m = np.asarray(code.tolist(), dtype=np.int64)  # (n, m)
         pids = pid.to_numpy()
         # factorize → int codes so string/arbitrary query ids group fine
         # (np.unique(axis=0) rejects object dtype)
         qcodes = pd.factorize(qid)[0]
-        qarr = np.asarray(qv.tolist(), dtype=np.float64)
-        if cosine:
-            qarr = _normalize(qarr)
+        qarr = _prep(qv, cosine=cosine)
         out = np.empty(len(codes_m), dtype=np.float64)
-        cols = np.arange(m)[None, :]
+        cols = np.arange(cbs.shape[0])[None, :]
         # one LUT + one vectorized gather per (query, partition) group
         keys = np.stack([qcodes, pids.astype(np.int64)], axis=1)
         uniq, inv = np.unique(keys, axis=0, return_inverse=True)
         for g in range(len(uniq)):
             mask = inv == g
             i0 = int(np.argmax(mask))
-            if metric == "dot":
-                # -q·x ≈ -q·c_p - Σ_j q_j·code_j (x = c_p + Σ residual codes)
-                qi = qarr[i0].reshape(m, 1, sub)
-                lut = -(qi * cbs).sum(axis=2)  # (m, 256)
-                const = -float(qarr[i0] @ cents[int(pids[i0])])
-                out[mask] = lut[cols, codes_m[mask]].sum(axis=1) + const
-            else:
-                r = (qarr[i0] - cents[int(pids[i0])]).reshape(m, sub)
-                diff = r[:, None, :] - cbs  # (m, 256, sub)
-                lut = (diff * diff).sum(axis=2)
-                out[mask] = lut[cols, codes_m[mask]].sum(axis=1)
+            lut = _adc_table(cbs, cents[int(pids[i0])], qarr[i0], metric)
+            out[mask] = lut[cols, codes_m[mask]].sum(axis=1)
         return pd.Series(out)
 
     code_tbl = index.codes_df(spark, exclude_fragments, rowid_map).select(
@@ -1630,7 +1612,7 @@ def ann_join(
     refined = (
         vec_tbl.join(cand_side, ["partition_id", "id"])
         .join(qvecs, "query_id")
-        .select("query_id", "id", _exact().alias("_distance"))
+        .select("query_id", "id", exact.alias("_distance"))
         # belt-and-braces vs duplicate ids (a torn delta leaving one id in
         # two visible segments would double-count a survivor into two rank
         # slots); the survivor set is |Q|·refine·k rows, so this groupBy
@@ -1777,17 +1759,6 @@ def ann_maxsim_join(
         .filter(F.col("__rn") <= k * max(refine_factor, 1))
         .drop("__rn")
     )
-
-
-def _finalize_distance(df: DataFrame, metric: str) -> DataFrame:
-    """Internal scoring is squared-L2 over (unit-normalized, for cosine)
-    vectors; convert to the reported metric: cosine distance = 1 - cos =
-    ||a-b||²/2 on unit vectors, l2 = sqrt (matches knn_bruteforce)."""
-    if metric == "cosine":
-        return df.withColumn("_distance", F.col("_distance") / 2.0)
-    if metric == "l2":
-        return df.withColumn("_distance", F.sqrt("_distance"))
-    return df
 
 
 # --------------------------------------------------------------------------

@@ -228,51 +228,32 @@ def shingles_from_tokens(toks, k: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(col, k: int = 3):
-    """k-word shingles from raw text (convenience; see shingles_from_tokens
-    for the hot path)."""
-    return shingles_from_tokens(tokenize(col), k)
-
-
-def minhash_signature(col, num_perm: int = MINHASH_PERMS, shingle_k: int = 3):
-    """Array of num_perm minhash values. Permutation j is
-    h_j(s) = ((2j+3)·(hash64(s) mod p) + (5j+7)) mod p with p = 2^31-1 —
-    small coefficients keep every product inside int64 on both engines."""
-    sh = shingles(col, shingle_k)
-    base = F.transform(sh, lambda s: hash64(s) % MERSENNE31)
-
-    def perm(j):
-        # factory keeps the lambda unary — a 2-arg lambda would make Spark
-        # pass the array index as the second parameter
-        return lambda h: ((2 * j + 3) * h + (5 * j + 7)) % MERSENNE31
-
-    return F.array(*[F.array_min(F.transform(base, perm(j))) for j in range(num_perm)])
-
-
 def minhash_signatures_agg(
     df: DataFrame, text_col: str, id_col: str, num_perm: int = MINHASH_PERMS, shingle_k: int = 3
 ) -> DataFrame:
-    """Scale path for signatures: explode shingles → hash each ONCE →
-    num_perm map-side min-aggregates. One md5 per shingle total (the
-    array-expression form in ``minhash_signature`` inlines the hash into
-    every permutation — 16× the work and a codegen blowup), one shuffle
-    keyed by doc id. This is the 100 TB-shaped plan."""
+    """(id, sig) minhash signatures: num_perm values per doc, permutation j
+    being h_j(s) = ((2j+3)·(hash64(s) mod p) + (5j+7)) mod p over the doc's
+    k-word shingles, p = 2^31-1 (small coefficients keep every product
+    inside int64 on both engines). Each shingle is hashed ONCE, in the
+    JVM; the permutation mins are one numpy pass per doc (``_sig_col``).
+    Docs with fewer than ``shingle_k`` tokens have no signature."""
     toks = _fan_out(df).select(
         F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("__toks")
     )
-    return _sigs_from_toks(toks, num_perm, shingle_k)
+    return toks.select(
+        "id", _sig_col(F.col("__toks"), num_perm, shingle_k).alias("sig")
+    ).filter(F.col("sig").isNotNull())
 
 
 def _minhash_mins_udf(num_perm: int):
     """Arrow-batched minhash permutation mins over PRE-HASHED shingle
     values (``array<long>`` of hash64(shingle) % p computed by the JVM's
     codegen'd md5): one numpy broadcast per doc, exact integer math
-    identical to the explode/groupBy form (guide §4.2). The hash itself
-    stays in the JVM — the r13 form ran hashlib.md5 per shingle in a
-    Python loop, and the md5 call overhead ate the vectorization win
-    (measured 1.9 s vs 0.8 s for this split at sf0.1). Docs whose hash
-    array is empty (< shingle_k tokens) return NULL — the rows the old
-    aggregation never produced; callers filter them.
+    (guide §4.2). The hash itself stays in the JVM — the r13 form ran
+    hashlib.md5 per shingle in a Python loop, and the md5 call overhead
+    ate the vectorization win (measured 1.9 s vs 0.8 s for this split at
+    sf0.1). Docs whose hash array is empty (< shingle_k tokens) return
+    NULL; callers filter them or keep them as sig-less rows.
 
     NON-DETERMINISTIC ON PURPOSE (guide §4.4): callers filter on the UDF
     output (``sig IS NOT NULL``), and the optimizer pushes that filter
@@ -312,94 +293,13 @@ def _shingle_hashes(toks_col, shingle_k: int):
     )
 
 
-def _hash64_py(s: str) -> int:
-    """Python mirror of functions.text.hash64 (bigint of the first 15 hex
-    chars of md5) — exact: both engines hash the UTF-8 bytes and parse the
-    same 60-bit hex prefix, so values are integer-identical."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def _minhash_sig_udf(num_perm: int, shingle_k: int):
-    """Arrow-batched minhash signatures from a token array: shingle → md5
-    → num_perm permutation mins, all exact integer math identical to the
-    explode/groupBy form. Docs with < shingle_k tokens return NULL (the
-    rows the aggregation form simply never produced — callers filter
-    them). NON-DETERMINISTIC for the same §4.4 reason as
-    ``_minhash_mins_udf``."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def _sig(toks: pd.Series) -> pd.Series:
-        import numpy as np
-
-        A = np.arange(3, 2 * num_perm + 2, 2, dtype=np.int64).reshape(-1, 1)
-        B = np.arange(7, 5 * num_perm + 3, 5, dtype=np.int64).reshape(-1, 1)
-        cache: dict = {}  # shingles repeat heavily across near-dup docs
-
-        def h(s: str) -> int:
-            v = cache.get(s)
-            if v is None:
-                v = _hash64_py(s) % MERSENNE31
-                cache[s] = v
-            return v
-
-        out = []
-        for t in toks:
-            if t is None or len(t) < shingle_k:
-                out.append(None)
-                continue
-            hs = np.fromiter(
-                (
-                    h(" ".join(t[i : i + shingle_k]))
-                    for i in range(len(t) - shingle_k + 1)
-                ),
-                dtype=np.int64,
-            )
-            out.append(((A * hs + B) % MERSENNE31).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return _sig.asNondeterministic()
-
-
-def _sigs_from_toks(toks_df: DataFrame, num_perm: int, shingle_k: int) -> DataFrame:
-    """(id, sig) from a bound (id, __toks) frame — shared by
-    minhash_signatures_agg and _banded_fingerprints so the banded-index
-    signature math is BY CONSTRUCTION byte-identical to the pair path.
-
-    Implementation switch (LANCE_SPARK_SIG_IMPL, measurement aid):
-      jvmhof  — shingle + md5 as JVM ``transform`` lambdas, numpy mins UDF
-      explode — explode shingles, codegen'd md5, groupBy(id) min-aggregates
-      pyhash  — hashlib.md5 per distinct shingle inside the Arrow UDF
-    All three produce integer-identical signatures."""
-    impl = os.environ.get("LANCE_SPARK_SIG_IMPL", "jvmhof")
-    if impl == "explode":
-        hashed = (
-            toks_df
-            .select("id", F.explode(shingles_from_tokens(F.col("__toks"), shingle_k)).alias("s"))
-            .select("id", (hash64(F.col("s")) % MERSENNE31).alias("h"))
-        )
-        mins = hashed.groupBy("id").agg(
-            *[
-                F.min((F.lit(2 * j + 3) * F.col("h") + F.lit(5 * j + 7)) % MERSENNE31).alias(f"m{j}")
-                for j in range(num_perm)
-            ]
-        )
-        return mins.select("id", F.array(*[f"m{j}" for j in range(num_perm)]).alias("sig"))
-    if impl == "pyhash":
-        sig_udf = _minhash_sig_udf(num_perm, shingle_k)
-        return (
-            toks_df.select("id", sig_udf(F.col("__toks")).alias("sig"))
-            .filter(F.col("sig").isNotNull())
-        )
-    mins_udf = _minhash_mins_udf(num_perm)
-    hs = toks_df.select("id", _shingle_hashes(F.col("__toks"), shingle_k).alias("__hs"))
-    return (
-        hs.select("id", mins_udf(F.col("__hs")).alias("sig"))
-        .filter(F.col("sig").isNotNull())
-    )
+def _sig_col(toks_col, num_perm: int, shingle_k: int):
+    """The minhash signature of a PRE-BOUND token-array column (NULL for
+    docs too short to shingle) — the one form both the pair path
+    (``minhash_signatures_agg``) and the banded index
+    (``_banded_fingerprints``) project, so their signatures are
+    byte-identical by construction."""
+    return _minhash_mins_udf(num_perm)(_shingle_hashes(toks_col, shingle_k))
 
 
 def minhash_lsh_pairs(
@@ -1497,13 +1397,12 @@ def _banded_fingerprints(
     minhash signature, exploded into band rows (same signature/band math
     as minhash_lsh_pairs, so thresholds mean the same thing)."""
     rows_per_band = num_perm // bands
-    # ONE tokenize pass, fp and sig both row-local functions of the same
-    # token array: fp is md5 of the space-joined canonical token stream in
-    # the JVM (concat_ws skips a NULL array → "" hashes exactly like the
-    # old Python " ".join fallback); sig is the shared JVM-shingle-hash +
-    # numpy-permutation-mins split (_sigs_from_toks' math, inlined here so
-    # fp and sig share one projection). Docs too short to shingle carry a
-    # NULL sig, as the old left join produced. INVARIANT (relied on by
+    # ONE tokenize pass and one projection: fp and sig are both row-local
+    # functions of the same token array. fp is md5 of the space-joined
+    # canonical token stream in the JVM (concat_ws skips a NULL array →
+    # "" hashes exactly like the old Python " ".join fallback); sig is
+    # ``_sig_col``, the pair path's signature. Docs too short to shingle
+    # carry a NULL sig. INVARIANT (relied on by
     # dedup_against_index's exact branch and the band_id==0 slice): every
     # doc — including NULL-sig ones — emits ALL band_id rows, with NULL
     # band_key for NULL sigs; dropping NULL-band_key rows at write time
@@ -1511,23 +1410,11 @@ def _banded_fingerprints(
     toks = _fan_out(df).select(
         F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("__toks")
     )
-    impl = os.environ.get("LANCE_SPARK_SIG_IMPL", "jvmhof")
-    if impl == "explode":
-        fp = toks.select("id", F.md5(F.concat_ws(" ", F.col("__toks"))).alias("fp"))
-        sigs = _sigs_from_toks(toks, num_perm, shingle_k)
-        joined = fp.join(sigs, "id", "left")
-    elif impl == "pyhash":
-        joined = toks.select(
-            "id",
-            F.md5(F.concat_ws(" ", F.col("__toks"))).alias("fp"),
-            _minhash_sig_udf(num_perm, shingle_k)(F.col("__toks")).alias("sig"),
-        )
-    else:
-        joined = toks.select(
-            "id",
-            F.md5(F.concat_ws(" ", F.col("__toks"))).alias("fp"),
-            _minhash_mins_udf(num_perm)(_shingle_hashes(F.col("__toks"), shingle_k)).alias("sig"),
-        )
+    joined = toks.select(
+        "id",
+        F.md5(F.concat_ws(" ", F.col("__toks"))).alias("fp"),
+        _sig_col(F.col("__toks"), num_perm, shingle_k).alias("sig"),
+    )
     return joined.select(
         "id",
         "fp",

@@ -8,25 +8,21 @@ scanner.rs:3450-3467) as a DataFrame plan:
   driver merges k·partitions rows. No full sort, no full shuffle; scales
   linearly in rows.
 
-Two scoring paths:
-  - expression path (zip_with/aggregate): JVM codegen, exact-SQL-equivalent,
-    used by oracle-checked queries;
-  - numpy pandas_udf path: Arrow-batched matrix math for wide vectors /
-    many queries (index build, refine) — the throughput path.
-
-IVF index build/search lives in indexes/ivf_pq.py.
+Scoring is JVM expression arithmetic (functions/vector.py zip_with /
+aggregate): whole-stage codegen, exact-SQL-equivalent, the form the
+oracle-checked queries pin. IVF/HNSW index build and search live in
+indexes/vector.py and indexes/hnsw.py, whose numpy scoring kernel follows
+the same NULL rules.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from lance_spark.functions.vector import (
     cosine_sim,
+    distance_expr,
     dot_product,
 )
 
@@ -64,8 +60,6 @@ def knn_batch(
             F.col(query_id_col).alias("__kb_qid"), F.col(qv).alias("__kb_qv")
         )
     )
-    from lance_spark.functions.vector import distance_expr
-
     dist = distance_expr(F.col("__kb_v"), F.col("__kb_qv"), metric)
     scored = (
         corpus.select(F.col(id_col).alias("__kb_id"), F.col(vec_col).alias("__kb_v"))
@@ -250,68 +244,23 @@ def knn_bruteforce(
     k: int = 10,
     metric: str = "cosine",
     id_col: str = "vec_id",
-    use_numpy: bool = False,
 ) -> DataFrame:
     """Exact top-k; returns (id_col, _distance) — `_distance` follows the
     reference's meta-column convention (rust/lance-core/src/lib.rs). Ties
     break on id for determinism."""
     _check_metric(metric)
-    if use_numpy and metric == "hamming":
-        # the numpy kernel has no hamming branch — falling through to
-        # cosine silently re-ranked integer codes with the wrong metric
-        raise ValueError("metric='hamming' is not supported with use_numpy")
-    # null vectors can never be neighbors; without this they'd crash the
-    # numpy path and rank FIRST in the SQL path (asc = NULLS FIRST)
+    # null vectors can never be neighbors; without this they'd rank FIRST
+    # (asc = NULLS FIRST)
     df = df.filter(F.col(vec_col).isNotNull())
-    if use_numpy:
-        qv = np.asarray(query, dtype=np.float64)
-
-        def _one(row):
-            # NULL (NaN) for wrong-length rows — the expression path's
-            # NULL-and-rank-last contract, not a task-aborting ValueError
-            if row is None or len(row) != len(qv):
-                return float("nan")
-            a = np.asarray(row, dtype=np.float64)
-            if metric == "l2":
-                return float(np.linalg.norm(a - qv))
-            if metric == "dot":
-                return float(-(a @ qv))
-            return float(1.0 - (a @ qv) / (np.linalg.norm(a) * np.linalg.norm(qv)))
-
-        @pandas_udf("double")
-        def dist(s: pd.Series) -> pd.Series:
-            lst = s.tolist()
-            try:
-                m = np.asarray(lst, dtype=np.float64)
-                clean = m.ndim == 2 and m.shape[1] == len(qv)
-            except ValueError:  # ragged batch (mixed-length vectors)
-                clean = False
-            if not clean:
-                # dirty/empty batch: row-wise scoring, NaN ranks last
-                # (r12 review fix — one length-7 vector aborted the job)
-                return pd.Series([_one(r) for r in lst], dtype="float64")
-            if metric == "l2":
-                d = np.linalg.norm(m - qv, axis=1)
-            elif metric == "dot":
-                d = -(m @ qv)
-            else:
-                d = 1.0 - (m @ qv) / (np.linalg.norm(m, axis=1) * np.linalg.norm(qv))
-            return pd.Series(d)
-
-        dcol = dist(F.col(vec_col))
+    if metric == "hamming":
+        qarr = F.array(*[F.lit(int(x)).cast("long") for x in query])
     else:
-        from lance_spark.functions.vector import distance_expr
-
-        if metric == "hamming":
-            qarr = F.array(*[F.lit(int(x)).cast("long") for x in query])
-        else:
-            qarr = F.array(*[F.lit(float(x)) for x in query])
-        dcol = distance_expr(F.col(vec_col), qarr, metric)
+        qarr = F.array(*[F.lit(float(x)) for x in query])
     return (
-        df.select(F.col(id_col), dcol.alias("_distance"))
+        df.select(F.col(id_col), distance_expr(F.col(vec_col), qarr, metric).alias("_distance"))
         # NULLS LAST: zero-norm (cosine), null-element, or mismatched-
         # length vectors produce NULL distances that must never occupy
-        # top-k slots (and the numpy path's NaN sorts last too)
+        # top-k slots
         .orderBy(F.asc_nulls_last("_distance"), F.asc(id_col))
         .limit(k)
     )

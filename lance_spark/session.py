@@ -11,10 +11,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+_BOOL_WORDS = {
+    **dict.fromkeys(("1", "true", "yes", "on"), "true"),
+    **dict.fromkeys(("0", "false", "no", "off"), "false"),
+}
+
+
+def _console_progress() -> str:
+    """``SPARK_GRAFT_CONSOLE_PROGRESS`` as the conf value Spark accepts:
+    1/true/yes/on → "true", 0/false/no/off → "false" (any case; default
+    on). Anything else raises here, naming the variable, instead of
+    failing session construction with a bare IllegalArgumentException."""
+    raw = os.environ.get("SPARK_GRAFT_CONSOLE_PROGRESS", "true")
+    try:
+        return _BOOL_WORDS[raw.strip().lower()]
+    except KeyError:
+        raise ValueError(
+            f"SPARK_GRAFT_CONSOLE_PROGRESS must be one of {sorted(_BOOL_WORDS)}"
+            f" (any case), got {raw!r}"
+        ) from None
+
 
 def get_spark(app_name: str = "lance_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    console_progress = _console_progress()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -43,10 +64,7 @@ def get_spark(app_name: str = "lance_spark", cpus: int | None = None) -> SparkSe
         # measurably interacts with output-capturing harnesses (pytest's
         # capture multiplies the redraw cost). Env-overridable; default on
         # so interactive use is unchanged.
-        .config(
-            "spark.ui.showConsoleProgress",
-            os.environ.get("SPARK_GRAFT_CONSOLE_PROGRESS", "true"),
-        )
+        .config("spark.ui.showConsoleProgress", console_progress)
         # Read shuffle blocks with plain pread instead of mmap: Spark mmaps
         # any block over 2 MB (ancient default), and on many-core hosts the
         # resulting mmap/munmap churn serializes tasks on the process

@@ -1,9 +1,10 @@
 """Trace-event capture — the reference ``lance.tracing`` surface
 (python/python/lance/tracing.py: ``trace_to_chrome`` /
 ``capture_trace_events``). There the events come from the Rust tracing
-subscriber; here the engine's driver-side choke points emit them:
-every manifest commit (all mutations funnel through it), index builds,
-and scan-statistics callbacks.
+subscriber; here ``emit`` is called from driver-side code. Today the only
+caller is ``manifest.commit`` (every mutation funnels through it), which
+emits one ``lance_spark::commit`` event per successful commit; index
+builds and scans emit nothing yet.
 
 Events are dispatched to callbacks from a dedicated daemon thread (same
 non-blocking contract as the reference: reporting, not synchronization).

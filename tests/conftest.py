@@ -39,3 +39,9 @@ def duck():
         )
     yield con
     con.close()
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running test (deselect with -m 'not slow')"
+    )

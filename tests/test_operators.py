@@ -119,11 +119,6 @@ def test_knn_bruteforce_cosine(spark):
     out = knn_bruteforce(df, "v", [1.0, 0.0, 0.0], k=2, metric="cosine").collect()
     assert [r.vec_id for r in out] == [0, 1]
     assert out[0]["_distance"] == pytest.approx(0.0, abs=1e-12)
-    # numpy path agrees with expression path
-    out2 = knn_bruteforce(df, "v", [1.0, 0.0, 0.0], k=2, metric="cosine", use_numpy=True).collect()
-    assert [r.vec_id for r in out2] == [0, 1]
-    for a, b in zip(out, out2):
-        assert a["_distance"] == pytest.approx(b["_distance"], abs=1e-9)
 
 
 def test_knn_l2_and_dot(spark):
@@ -1088,7 +1083,7 @@ class TestKnnReviewR11:
         ]
         assert gj == [1, 2]
 
-    def test_metric_validated_and_numpy_hamming_refused(self, spark):
+    def test_metric_validated(self, spark):
         from lance_spark.operators.knn import knn_batch, knn_bruteforce
 
         df = spark.createDataFrame([(1, [1.0, 0.0])], "id long, v array<double>")
@@ -1097,8 +1092,6 @@ class TestKnnReviewR11:
             knn_bruteforce(df, "v", [1.0, 0.0], metric="euclidean", id_col="id")
         with pytest.raises(ValueError, match="metric"):
             knn_batch(df, q, "v", "id", "qid", metric="L2")
-        with pytest.raises(ValueError, match="use_numpy"):
-            knn_bruteforce(df, "v", [1.0, 0.0], metric="hamming", id_col="id", use_numpy=True)
 
     def test_multivector_maxsim_empty_queries_and_parity(self, spark):
         from lance_spark.operators.knn import multivector_maxsim
@@ -1147,9 +1140,8 @@ class TestKnnReviewR12:
         got = knn_batch(corpus, queries, "embedding", "vec_id", "vec_id", k=3)
         assert got.count() == 6
 
-    def test_knn_bruteforce_numpy_ragged_corpus(self, spark):
-        """One mixed-length vector must NULL-rank last, not abort the job
-        (the expression path's contract, now mirrored by use_numpy)."""
+    def test_knn_bruteforce_ragged_corpus(self, spark):
+        """One mixed-length vector must NULL-rank last, not abort the job."""
         from lance_spark.operators.knn import knn_bruteforce
 
         df = spark.createDataFrame(
@@ -1157,7 +1149,7 @@ class TestKnnReviewR12:
             "id long, v array<double>",
         ).coalesce(1)
         got = knn_bruteforce(df, "v", [1.0, 0.0], k=3, metric="cosine",
-                             id_col="id", use_numpy=True).collect()
+                             id_col="id").collect()
         assert [r["id"] for r in got[:2]] == [1, 2]
         import math
         assert got[2]["id"] == 3 and (got[2]["_distance"] is None

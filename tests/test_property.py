@@ -301,3 +301,81 @@ def test_contamination_spans_match_python_mirror(spark, texts, ev, window, every
         ).collect()
     )
     assert got == expected
+
+
+# ---------------------------------------------------------------------------
+# numpy scoring kernel (indexes/vector.py) vs the JVM distance expressions
+# ---------------------------------------------------------------------------
+
+
+@st.composite
+def vector_batches(draw):
+    """(rows, query): a float32 matrix in which some rows are forced to
+    all-zero (zero-norm) and a float32 query of the same width."""
+    import numpy as np
+
+    dim = draw(st.integers(1, 12))
+    n = draw(st.integers(1, 8))
+    f32 = st.floats(-1e6, 1e6, width=32)
+    rows = [
+        [0.0] * dim if draw(st.booleans()) and draw(st.booleans())
+        else draw(st.lists(f32, min_size=dim, max_size=dim))
+        for _ in range(n)
+    ]
+    q = draw(st.lists(f32, min_size=dim, max_size=dim))
+    return np.asarray(rows, dtype=np.float32), np.asarray(q, dtype=np.float32)
+
+
+@pytest.mark.usefixtures("spark")
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    batch=vector_batches(),
+    bits=st.lists(st.lists(st.integers(0, 255), min_size=3, max_size=3), min_size=1, max_size=6),
+    qbits=st.lists(st.integers(0, 255), min_size=3, max_size=3),
+)
+def test_numpy_kernel_matches_spark_distance(spark, batch, bits, qbits):
+    """Property: ``_finalize_distance(_score(_prep(...)))`` equals
+    ``distance_expr`` on Spark over the same float32 rows for l2, cosine
+    and dot, and packed hamming equals ``hamming_distance``; NaN on the
+    numpy side is exactly NULL on the Spark side. Values agree to 1e-9
+    relative; the absolute slack 1e-9·max(1, ‖x‖‖q‖) covers results that
+    cancel to ~0 (dot, and cosine of parallel vectors), where the two
+    engines' different summation orders leave rounding-sized residues."""
+    import math
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from lance_spark.functions.vector import distance_expr, hamming_distance
+    from lance_spark.indexes.vector import _finalize_distance, _prep, _score
+
+    x, q = batch
+    metrics = ("l2", "cosine", "dot")
+    ql = F.array(*[F.lit(float(v)) for v in q])
+    qb = F.array(*[F.lit(int(v)) for v in qbits])
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in r], bits[i % len(bits)]) for i, r in enumerate(x)],
+        "i int, v array<float>, b array<int>",
+    )
+    got = df.select(
+        "i",
+        *[distance_expr(F.col("v"), ql, m).alias(m) for m in metrics],
+        hamming_distance(F.col("b").cast("array<long>"), qb.cast("array<long>")).alias("hamming"),
+    ).orderBy("i").collect()
+
+    for m in metrics:
+        cos = m == "cosine"
+        want = _finalize_distance(_score(_prep(x, cosine=cos), _prep(q[None], cosine=cos)[0], m), m)
+        for r, w, xi in zip(got, want, x):
+            s = r[m]
+            if math.isnan(w):
+                assert s is None, (m, r["i"], s)
+                continue
+            assert s is not None, (m, r["i"], w)
+            scale = max(1.0, float(np.linalg.norm(xi.astype(np.float64)) * np.linalg.norm(q.astype(np.float64))))
+            assert math.isclose(w, s, rel_tol=1e-9, abs_tol=1e-9 * scale), (m, r["i"], w, s)
+    packed = np.asarray([bits[i % len(bits)] for i in range(len(x))], dtype=np.float32)
+    ham = _finalize_distance(
+        _score(_prep(packed, packed=True), _prep([qbits], packed=True)[0], "hamming"), "hamming"
+    )
+    assert [r["hamming"] for r in got] == [int(h) for h in ham]
