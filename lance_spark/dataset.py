@@ -685,18 +685,16 @@ class LanceDataset:
                 # filtered base (the indexed postings can't be pre-restricted
                 # without rebuilding them; the reference's prefilter also
                 # materializes the allow-set first).
-                from lance_spark.operators.fts import bm25_search
+                from lance_spark.query import FullTextQuery, MatchQuery, execute_query
 
-                col = column or next(
-                    f["name"]
-                    for f in self.manifest.schema_json["fields"]
-                    if f["type"] == "string"
-                )
                 base = self.to_df(spark, with_row_id=True).filter(_compat_filter(filter))
-                terms = [t for t in str(q).split() if t]
-                scored = bm25_search(base, col, ROWID_COL, terms, k=int(limit or 10))
+                if not isinstance(q, FullTextQuery):
+                    q = MatchQuery(str(q), column)
+                scored = execute_query(
+                    spark, q, df=base, id_col=ROWID_COL, column=column, k=int(limit or 10)
+                )
                 hits = base.join(
-                    F.broadcast(scored.select(ROWID_COL, "_score")), on=ROWID_COL
+                    F.broadcast(scored.withColumnRenamed("id", ROWID_COL)), on=ROWID_COL
                 )
             else:
                 hits = self.full_text_search(
@@ -1378,34 +1376,18 @@ class LanceDataset:
         with_row_id: bool = False,
     ) -> DataFrame:
         """``full_text_search`` entry (scanner fts surface): a plain string is
-        an OR-of-terms match; a structured ``FullTextQuery`` object
+        a ``MatchQuery`` (OR of its terms, split and normalized like the
+        index tokenizer); a structured ``FullTextQuery`` object
         (lance_spark.query — reference python/python/lance/query.py:31-244)
-        compiles its whole tree to one Spark plan. Either path goes through
-        the INVERTED index when one exists, else the flat fallback — returns
-        the dataset's columns + _score."""
-        from lance_spark.query import FullTextQuery, execute_query
+        compiles its whole tree to one Spark plan. Both run through
+        ``execute_query``, over the INVERTED index tables when one covers
+        the column, else flat postings — returns the dataset's columns +
+        _score."""
+        from lance_spark.query import FullTextQuery, MatchQuery, execute_query
 
-        if isinstance(query, FullTextQuery):
-            hits = execute_query(spark, query, ds=self, column=column, k=k)
-        else:
-            terms = [t for t in query.split() if t]
-            try:
-                from lance_spark.indexes.inverted import _find, match_query
-
-                _find(self, column)
-                hits = match_query(self, spark, terms, column=column, k=k)
-            except ValueError:
-                from lance_spark.operators.fts import bm25_search
-
-                col = column or next(
-                    f["name"]
-                    for f in self.manifest.schema_json["fields"]
-                    if f["type"] == "string"
-                )
-                flat = self.to_df(spark, with_row_id=True)
-                hits = bm25_search(flat, col, ROWID_COL, terms, k=k).withColumnRenamed(
-                    ROWID_COL, "id"
-                )
+        if not isinstance(query, FullTextQuery):
+            query = MatchQuery(query, column)
+        hits = execute_query(spark, query, ds=self, column=column, k=k)
         base = self.to_df(spark, with_row_id=True)
         # reserved join-key name: drop("id") would also drop a user id column
         hits = hits.withColumnRenamed("id", "__match_id")

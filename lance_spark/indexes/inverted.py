@@ -26,8 +26,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lance_spark.functions.text import query_tokens
-from lance_spark.operators.fts import BM25_B, BM25_K1, bm25_score_expr
+from lance_spark.operators.fts import BM25_B, BM25_K1, _flat_postings, bm25_score_expr
+from lance_spark.query import (
+    BoostQuery,
+    MatchQuery,
+    PhraseQuery,
+    _Corpus,
+    _match_scores,
+    _phrase_ids,
+    _restricted_boolean,
+    _scores,
+    _topk,
+)
 from lance_spark.write import ROWID_COL
 
 
@@ -233,9 +243,8 @@ def _index_tables(ds, spark: SparkSession, meta) -> tuple[DataFrame, DataFrame]:
         postings = _mask_fragments(postings, "id", tail, rmap)
         doclens = _mask_fragments(doclens, "id", tail, rmap)
         flat = ds.scanner(spark, columns=[meta.column], with_row_id=True, fragments=tail)
-        p2, d2 = _positional_postings(
-            flat, meta.column, ROWID_COL, meta.params.get("tokenizer", "simple"),
-            n_input_splits=len(tail),
+        p2, d2 = _flat_postings(
+            flat, meta.column, ROWID_COL, meta.params.get("tokenizer", "simple")
         )
         postings = postings.unionByName(p2)
         doclens = doclens.unionByName(d2)
@@ -473,7 +482,7 @@ def merge_inverted_segments(ds, spark: SparkSession, name: str):
 def _bm25(postings: DataFrame, doclens: DataFrame, terms: list[str]) -> DataFrame:
     """One global scoring pass → (id, _score) for an OR-of-terms match."""
     stats = doclens.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    # terms arrive ALREADY tokenizer-normalized (query_tokens): an extra
+    # terms arrive ALREADY tokenizer-normalized (_query_terms): an extra
     # .lower() here made every case-bearing term a guaranteed miss against
     # a case-preserving 'whitespace' index
     qp = postings.filter(F.col("token").isin(list(terms)))
@@ -489,22 +498,17 @@ def _bm25(postings: DataFrame, doclens: DataFrame, terms: list[str]) -> DataFram
     )
 
 
-def _topk(scored, k: int | None):
-    """Deterministic top-k cut: rounded score desc, id asc. ``k=None``
-    returns ALL scored rows — callers that re-rank on a different tie
-    column (e.g. the oracle's doc_id, which need not follow _rowid order
-    after a shuffled write) cut after their own sort."""
-    out = scored.orderBy(F.desc("_score"), F.asc("id"))
-    return out if k is None else out.limit(k)
+def _indexed(ds, spark: SparkSession, column: str | None) -> _Corpus:
+    """Query corpus over the INVERTED index on ``column`` (the first one
+    when None). The single-query ``*_query`` surfaces are index-only, so a
+    missing index raises instead of taking the flat fallback."""
+    meta = _find(ds, column)
+    return _Corpus(spark, ds=ds, default_column=meta.column)
 
 
 def match_query(ds, spark: SparkSession, terms: list[str], column: str | None = None, k: int | None = 10) -> DataFrame:
     """MatchQueryExec (fts.rs:70): BM25 top-k through the index."""
-    meta = _find(ds, column)
-    postings, doclens = _index_tables(ds, spark, meta)
-    terms = query_tokens(terms, meta.params.get("tokenizer", "simple"))
-    scored = _bm25(postings, doclens, terms)
-    return _topk(scored.select("id", F.round("_score", 4).alias("_score")), k)
+    return _topk(_match_scores(_indexed(ds, spark, column), MatchQuery(" ".join(terms))), k)
 
 
 def match_join(
@@ -1033,8 +1037,8 @@ def _phrase_step(cand_col, next_pos_col, i: int, slop: int):
 def phrase_hits(postings: DataFrame, terms: list[str], slop: int) -> DataFrame:
     """In-order position intersect over positional postings → matching doc
     ids, allowing up to ``slop`` total displacement between terms. The one
-    shared candidate-walk both phrase_query and the structured-query
-    compiler use (two hand-maintained copies drifted before)."""
+    single-query candidate walk: ``phrase_query``, the flat
+    ``phrase_match`` and the structured-query compiler all run it."""
     cur = postings.filter(F.col("token") == terms[0]).select(
         "id", F.transform("positions", lambda p: F.struct(p.alias("start"), p.alias("last"))).alias("cand")
     )
@@ -1057,18 +1061,7 @@ def phrase_query(
     """PhraseQueryExec (fts.rs:501; PhraseQuery.slop, inverted/query.rs):
     in-order position intersect over the positional postings, allowing up
     to ``slop`` total displacement between terms."""
-    meta = _find(ds, column)
-    postings, _ = _index_tables(ds, spark, meta)
-    tok = meta.params.get("tokenizer", "simple")
-    from lance_spark.functions.text import query_split
-
-    # query_split, not str.split: the phrase must break on the SAME gap
-    # class the index tokenizer used ('spark-sql' and CJK unigrams were
-    # guaranteed misses before; r12 review — query.py's fix, migrated)
-    terms = query_tokens(query_split(phrase, tok), tok)
-    if not terms:
-        return postings.select("id").limit(0)
-    return phrase_hits(postings, terms, slop)
+    return _phrase_ids(_indexed(ds, spark, column), PhraseQuery(phrase, slop=slop))
 
 
 def boolean_query(
@@ -1081,29 +1074,9 @@ def boolean_query(
     k: int | None = 10,
 ) -> DataFrame:
     """BooleanQueryExec (fts.rs:904): must=semi-join, must_not=anti-join,
-    should∪must=scoring terms."""
-    meta = _find(ds, column)
-    postings, doclens = _index_tables(ds, spark, meta)
-    tok = meta.params.get("tokenizer", "simple")
-    must = query_tokens(must or [], tok)
-    should = query_tokens(should or [], tok)
-    must_not = query_tokens(must_not or [], tok)
-    base = doclens.select("id")
-    # terms are ALREADY normalized by query_tokens — re-lowercasing broke
-    # the case-preserving 'whitespace' tokenizer (must matched nothing;
-    # worse, must_not excluded nothing; r12 review — _bm25 had this exact
-    # .lower() removed earlier, the membership filters still carried it)
-    for t in must or []:
-        base = base.join(
-            postings.filter(F.col("token") == t).select("id"), "id", "left_semi"
-        )
-    for t in must_not or []:
-        base = base.join(
-            postings.filter(F.col("token") == t).select("id"), "id", "left_anti"
-        )
-    terms = (should or []) + (must or [])
-    scored = _bm25(postings.join(base, "id", "left_semi"), doclens.join(base, "id", "left_semi"), terms)
-    return _topk(scored.select("id", F.round("_score", 4).alias("_score")), k)
+    should∪must=scoring terms, BM25 stats over the restricted corpus."""
+    corpus = _indexed(ds, spark, column)
+    return _topk(_restricted_boolean(corpus, None, must, should, must_not), k)
 
 
 def boost_query(
@@ -1116,18 +1089,11 @@ def boost_query(
     k: int | None = 10,
 ) -> DataFrame:
     """BoostQueryExec (fts.rs:729): score = pos_score - negative_boost·neg_score."""
-    meta = _find(ds, column)
-    postings, doclens = _index_tables(ds, spark, meta)
-    tok = meta.params.get("tokenizer", "simple")
-    pos = _bm25(postings, doclens, query_tokens(positive, tok)).withColumnRenamed("_score", "p")
-    neg = _bm25(postings, doclens, query_tokens(negative, tok)).withColumnRenamed("_score", "n")
-    return _topk(
-        pos.join(neg, "id", "left_outer").select(
-            "id",
-            F.round(F.col("p") - F.lit(negative_boost) * F.coalesce("n", F.lit(0.0)), 4).alias("_score"),
-        ),
-        k,
+    q = BoostQuery(
+        MatchQuery(" ".join(positive)), MatchQuery(" ".join(negative)),
+        negative_boost=negative_boost,
     )
+    return _topk(_scores(_indexed(ds, spark, column), q), k)
 
 
 def boost_join(
@@ -1240,44 +1206,19 @@ def fuzzy_query(
     transpositions: bool = True,
 ) -> DataFrame:
     """Fuzzy match through the index (inverted/query.rs MatchQuery.fuzziness):
-    expand the term against the postings' token DICTIONARY — vocabulary-
-    sized, not corpus-sized — then BM25-score the expanded OR-of-terms.
-    ``prefix_length`` prunes the dictionary pass to tokens sharing the
-    term's prefix (the role of tantivy's fuzzy automaton prefix, expressed
-    as a parquet-pushable prefix filter). The driver-side expansion set is
-    CAPPED at ``max_expansions`` (Lucene/tantivy's default of 50): closest
-    edit distance wins, ties broken lexically, ranked IN-PLAN so the
-    collect is bounded even when a pathological term (short + high
-    fuzziness over a web-scale vocabulary) matches millions of tokens.
-
-    ``transpositions=True`` (tantivy's automaton default) counts an
-    adjacent transposition as ONE edit (Damerau); False falls back to
-    plain Levenshtein."""
-    meta = _find(ds, column)
-    postings, doclens = _index_tables(ds, spark, meta)
-    norm = query_tokens([term], meta.params.get("tokenizer", "simple"))
-    if not norm:
-        # '2024' or '!!!' normalizes away under the simple family: empty
-        # result, not IndexError (r12 review)
-        return postings.select("id").limit(0).withColumn("_score", F.lit(0.0))
-    t = norm[0]
-    if fuzziness is None:  # length-based auto distance (query.rs:373)
-        from lance_spark.query import auto_fuzziness
-
-        fuzziness = auto_fuzziness(t)
-    # ONE shared expansion pipeline with the structured-query path
-    # (query.py _expand_fuzzy) — two hand-maintained copies of the
-    # vocabulary expansion had already begun to drift (r12 review fix)
-    from lance_spark.query import _expand_fuzzy
-
-    expanded = _expand_fuzzy(
-        postings, [t], fuzziness, prefix_length, max_expansions,
-        transpositions=transpositions,
-    )[0]
-    if not expanded:
-        return postings.select("id").limit(0).withColumn("_score", F.lit(0.0))
-    scored = _bm25(postings, doclens, expanded)
-    return _topk(scored.select("id", F.round("_score", 4).alias("_score")), k)
+    each query term expands against the postings' token DICTIONARY
+    (``query._expand_fuzzy``: at most ``max_expansions`` variants, closest
+    edit distance first, ties lexical; ``prefix_length`` keeps only tokens
+    sharing the term's prefix), then the variants BM25-score as an
+    OR-of-terms. ``transpositions=True`` (tantivy's automaton default)
+    counts an adjacent transposition as ONE edit (Damerau); False falls
+    back to plain Levenshtein."""
+    q = MatchQuery(
+        term, fuzziness=fuzziness, prefix_length=prefix_length,
+        max_expansions=max_expansions,
+    )
+    corpus = _indexed(ds, spark, column)
+    return _topk(_match_scores(corpus, q, transpositions=transpositions), k)
 
 
 def fuzzy_join(

@@ -959,6 +959,23 @@ def embedding_neardup_pairs(
     )
 
 
+def _cc_edge_gate(conf_value: str | None) -> int:
+    """Driver union-find edge budget: the ``lance_spark.cc.driverEdgeGate``
+    conf, else ``LANCE_SPARK_CC_EDGE_GATE``, else 2,000,000 (0 = always the
+    distributed loop). A non-integer or negative value such as '2e6' raises."""
+    raw = os.environ.get("LANCE_SPARK_CC_EDGE_GATE", "2000000") if conf_value is None else conf_value
+    try:
+        gate = int(raw)
+    except ValueError:
+        gate = -1
+    if gate < 0:
+        raise ValueError(
+            "lance_spark.cc.driverEdgeGate / LANCE_SPARK_CC_EDGE_GATE must be "
+            f"a non-negative integer edge count, got {raw!r}"
+        )
+    return gate
+
+
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -1000,15 +1017,7 @@ def connected_components(
     # loop is the only shape that works, but a collected edge list at the
     # default gate is ≤ ~64 MB on the driver, the same budget class as the
     # broadcast-model operators.
-    try:
-        gate = int(
-            nodes.sparkSession.conf.get(
-                "lance_spark.cc.driverEdgeGate",
-                os.environ.get("LANCE_SPARK_CC_EDGE_GATE", "2000000"),
-            )
-        )
-    except Exception:
-        gate = 2_000_000
+    gate = _cc_edge_gate(nodes.sparkSession.conf.get("lance_spark.cc.driverEdgeGate", None))
     # ONE bounded job decides the gate AND fetches the edges: a
     # limit(gate+1) over the checkpointed edge blocks early-exits as soon
     # as gate+1 rows are seen, so an over-gate graph never ships more than

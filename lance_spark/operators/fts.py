@@ -1,18 +1,17 @@
-"""Full-text search: postings build + BM25 scoring + query tree.
+"""Full-text search over a plain DataFrame: the flat-match fallback
+(FlatMatchQueryExec, fts.rs:332).
 
 Reference semantics (rust/lance-index/src/scalar/inverted/):
   - tokenizer: simple lower/split (tokenizer.rs:43-80) → functions/text.py
   - BM25 with k1=1.2, b=0.75 (scorer.rs:24-25)
   - query tree Match/Phrase/Boolean/Boost (query.rs:75-597)
 
-Spark-first plan (no WAND needed — batch scoring):
-  postings = explode(tokens) → groupBy(token, doc) tf  [one shuffle]
-  score    = postings ⋈ broadcast(query-term idf) → groupBy(doc) Σ bm25
-  top-k    = TakeOrderedAndProject
-
-At index time ``build_postings`` persists the postings + doc-length tables
-as parquet (indexes/inverted.py); at query time only the query terms'
-postings rows are read (predicate pushdown on the token column).
+Every function here runs the structured-query compiler (lance_spark/query.py)
+over postings ``build_postings`` derives on the fly: the same BM25
+(``_bm25``), phrase walk (``phrase_hits``), fuzzy expansion
+(``_expand_fuzzy``) and term normalizer (``_query_terms``) the INVERTED
+index path runs over the postings its build persists
+(``indexes/inverted._positional_postings``).
 """
 
 from __future__ import annotations
@@ -20,40 +19,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lance_spark.functions.text import tokenize
+from lance_spark.functions.text import tokenizer_expr
+from lance_spark.query import (
+    MatchQuery,
+    PhraseQuery,
+    _Corpus,
+    _match_ids,
+    _match_scores,
+    _phrase_ids,
+    _restricted_boolean,
+    _topk,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _flat_terms(terms: list[str]) -> list[str]:
-    """Normalize raw query terms exactly like the simple tokenizer the
-    flat postings use (lower → split on non-letters → drop empties). A
-    bare .lower() left punctuation attached ('spark,'), which can never
-    match a posting — and made the flat fallback diverge from the indexed
-    path, which normalizes via query_tokens."""
-    import re
-
-    out = []
-    for t in terms:
-        out.extend(x for x in re.split(r"[^a-z]+", t.lower()) if x)
-    return out
-
-
 def build_postings(df: DataFrame, text_col: str, id_col: str) -> tuple[DataFrame, DataFrame]:
-    """Returns (postings{token, id, tf}, doclens{id, dl})."""
-    toks = df.select(F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("toks"))
+    """Returns (postings{token, id, tf, positions}, doclens{id, dl}) with the
+    simple tokenizer, in the JVM: no UDF and no checkpoint, so a query that
+    filters ``token`` shuffles only its own terms' rows. ``positions`` are
+    ascending token ordinals. NULL-text docs are unindexable and stay out
+    of doclens: F.size of a NULL array is -1, which dragged avgdl down and
+    inflated n_docs."""
+    return _flat_postings(df, text_col, id_col, "simple")
+
+
+def _flat_postings(df: DataFrame, text_col: str, id_col: str, tokenizer: str):
+    """``build_postings`` with a named tokenizer: also the query-time
+    postings of an INVERTED index's unindexed fragments."""
+    toks = df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("id"), tokenizer_expr(tokenizer)(F.col(text_col)).alias("toks")
+    )
     doclens = toks.select("id", F.size("toks").alias("dl"))
     postings = (
-        toks.select("id", F.explode("toks").alias("token"))
+        toks.select("id", F.posexplode("toks").alias("pos", "token"))
         .groupBy("token", "id")
-        .agg(F.count("*").alias("tf"))
+        .agg(
+            F.count("*").alias("tf"),
+            F.array_sort(F.collect_list("pos")).alias("positions"),
+        )
     )
     return postings, doclens
 
 
 def bm25_score_expr(tf, dl, idf, avgdl):
     return idf * (tf * (BM25_K1 + 1)) / (tf + BM25_K1 * (1 - BM25_B + BM25_B * dl / avgdl))
+
+
+def _corpus(df: DataFrame, text_col: str, id_col: str) -> _Corpus:
+    return _Corpus(df.sparkSession, df=df, id_col=id_col, default_column=text_col)
 
 
 def bm25_search(
@@ -66,79 +81,26 @@ def bm25_search(
     doclens: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k for an OR-of-terms Match query. idf = ln(1 + (N-df+0.5)/(df+0.5)).
+    ``k=None`` returns every scored row.
 
     Accepts prebuilt postings/doclens (from an INVERTED index) or builds
     them on the fly (the reference's flat-match fallback, fts.rs:332).
     """
-    if postings is None or doclens is None:
-        postings, doclens = build_postings(df, text_col, id_col)
-    n_docs_avgdl = doclens.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    qp = postings.filter(F.col("token").isin(_flat_terms(query_terms)))
-    dfreq = qp.groupBy("token").agg(F.count("*").alias("df"))
-    scored = (
-        qp.join(F.broadcast(dfreq), "token")
-        .join(doclens, "id")
-        .crossJoin(F.broadcast(n_docs_avgdl))
-        .withColumn(
-            "idf", F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
-        .withColumn(
-            "term_score",
-            bm25_score_expr(F.col("tf"), F.col("dl"), F.col("idf"), F.col("avgdl")),
-        )
-        .groupBy("id")
-        .agg(F.round(F.sum("term_score"), 4).alias("_score"))
-    )
-    out = scored.select(F.col("id").alias(id_col), "_score").orderBy(
-        F.desc("_score"), F.asc(id_col)
-    )
-    return out if k is None else out.limit(k)
+    corpus = _corpus(df, text_col, id_col)
+    if postings is not None and doclens is not None:
+        corpus._cache[text_col] = (postings, doclens, "simple")
+    scored = _match_scores(corpus, MatchQuery(" ".join(query_terms), text_col))
+    return _topk(scored, k, id_col)
 
 
 def phrase_match(
     df: DataFrame, text_col: str, id_col: str, phrase: str, slop: int = 0
 ) -> DataFrame:
     """Flat phrase query (FlatMatchQueryExec role, fts.rs:332; slop per
-    PhraseQuery.slop): slop=0 is containment in the canonical token stream;
-    slop>0 runs the same in-order candidate walk as the indexed path over
-    per-term position arrays computed from the token array."""
-    terms = _flat_terms(phrase.split())
-    if not terms:
-        # an empty/punctuation-only phrase matches nothing (the slop=0
-        # containment would otherwise 'match' empty-token docs, and the
-        # slop>0 walk crashed on terms[0])
-        return df.filter(F.lit(False)).select(F.col(id_col))
-    if slop == 0:
-        canon = F.concat_ws(" ", tokenize(F.col(text_col)))
-        needle = " ".join(terms)
-        return df.filter(
-            F.concat(F.lit(" "), canon, F.lit(" ")).contains(f" {needle} ")
-        ).select(F.col(id_col))
-
-    from lance_spark.indexes.inverted import _phrase_step
-
-    base = df.select(F.col(id_col), tokenize(F.col(text_col)).alias("__w"))
-    # docs with fewer tokens than the phrase can't match — and pruning
-    # them keeps sequence(1, size) valid (size=0 threw
-    # INVALID_ARRAY_INDEX_IN_ELEMENT_AT for ANY empty-token row)
-    base = base.filter(F.size("__w") >= len(terms))
-
-    def positions(term):
-        return F.filter(
-            F.sequence(F.lit(1), F.size("__w")),
-            lambda i: F.element_at(F.col("__w"), i) == term,
-        )
-
-    cur = base.select(
-        F.col(id_col),
-        "__w",
-        F.transform(positions(terms[0]), lambda p: F.struct(p.alias("start"), p.alias("last"))).alias("cand"),
-    )
-    for i, t in enumerate(terms[1:], start=1):
-        cur = cur.withColumn("cand", _phrase_step(F.col("cand"), positions(t), i, slop))
-    return cur.filter(F.size("cand") > 0).select(F.col(id_col))
+    PhraseQuery.slop): the indexed path's in-order position walk
+    (``phrase_hits``) over postings built on the fly."""
+    q = PhraseQuery(phrase, text_col, slop=slop)
+    return _phrase_ids(_corpus(df, text_col, id_col), q).select(F.col("id").alias(id_col))
 
 
 def fuzzy_match(
@@ -154,34 +116,12 @@ def fuzzy_match(
     a token within ``fuzziness`` edit distance of the term. ``None`` picks
     the distance from the term length (query.rs:373 auto_fuzziness).
     ``transpositions=True`` (tantivy automaton default) uses Damerau
-    distance — adjacent swaps cost one edit.
-
-    Scale shape: the distance runs against the DISTINCT token dictionary
-    (vocabulary-sized), then a broadcast semi-join brings back the docs —
-    the corpus-sized token stream never evaluates an edit distance."""
-    toks = (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("tok"))
-    )
-    from lance_spark.indexes.inverted import _edit_distance_col
-    from lance_spark.query import auto_fuzziness
-
-    if fuzziness is None:
-        fuzziness = auto_fuzziness(term)
-    # cap the expansion set by (distance, token) like the indexed
-    # fuzzy_query: uncapped, the flat path returned a strictly larger doc
-    # set than the same query after an index build, and the vocab_hits
-    # broadcast was unbounded at web-scale vocabulary
-    vocab_hits = (
-        toks.select(F.col("tok").alias("token"))
-        .distinct()
-        .withColumn("__d", _edit_distance_col(term.lower(), transpositions))
-        .filter(F.col("__d") <= fuzziness)
-        .orderBy("__d", "token")
-        .limit(max_expansions)
-        .select(F.col("token").alias("tok"))
-    )
-    hits = toks.join(F.broadcast(vocab_hits), "tok", "left_semi")
-    return hits.select("id").distinct().withColumnRenamed("id", id_col)
+    distance — adjacent swaps cost one edit. The expansion runs against
+    the token dictionary and is capped at ``max_expansions`` by
+    (distance, token), exactly like the indexed ``fuzzy_query``."""
+    q = MatchQuery(term, text_col, fuzziness=fuzziness, max_expansions=max_expansions)
+    ids = _match_ids(_corpus(df, text_col, id_col), q, transpositions=transpositions)
+    return ids.select(F.col("id").alias(id_col))
 
 
 def multi_match(
@@ -228,12 +168,9 @@ def boolean_search(
     k: int = 10,
 ) -> DataFrame:
     """Boolean query composition (BooleanQueryExec, fts.rs:904): must =
-    intersect, should = scoring union, must_not = anti-join."""
-    toks = tokenize(F.col(text_col))
-    base = df
-    for t in _flat_terms(must or []):
-        base = base.filter(F.array_contains(toks, t))
-    for t in _flat_terms(must_not or []):
-        base = base.filter(~F.array_contains(toks, t))
-    terms = (should or []) + (must or [])
-    return bm25_search(base, text_col, id_col, terms, k=k)
+    intersect, should = scoring union, must_not = anti-join. BM25 stats
+    come from the corpus restricted by must/must_not (``boolean_query``'s
+    rule, not ``BooleanQuery``'s full-corpus stats)."""
+    corpus = _corpus(df, text_col, id_col)
+    scored = _restricted_boolean(corpus, text_col, must, should, must_not)
+    return _topk(scored, k, id_col)

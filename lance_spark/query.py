@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import abc
 from enum import Enum
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -249,11 +250,11 @@ def _match_from_json(v) -> MatchQuery:
 
 
 class _Corpus:
-    """Per-column postings/doclens provider with caching.
-
-    Backed either by a LanceDataset (INVERTED index tables when one covers
-    the column, else a flat tokenize pass — FlatMatchQueryExec's role) or
-    by a plain DataFrame for index-free search.
+    """Per-column postings/doclens provider with caching — the ONE place
+    that chooses between INVERTED index tables and flat postings
+    (``operators.fts.build_postings``, FlatMatchQueryExec's role). Backed
+    by a LanceDataset (index tables when an INVERTED index covers the
+    column, else flat postings over a column scan) or by a plain DataFrame.
     """
 
     def __init__(self, spark: SparkSession, ds=None, df: DataFrame | None = None,
@@ -284,7 +285,7 @@ class _Corpus:
         raise ValueError("no text column to search")
 
     def tables(self, column: str | None) -> tuple[DataFrame, DataFrame, str]:
-        """(postings{token,id,tf,positions?}, doclens{id,dl}, tokenizer)."""
+        """(postings{token,id,tf,positions}, doclens{id,dl}, tokenizer)."""
         col = self._resolve(column)
         if col in self._cache:
             return self._cache[col]
@@ -301,21 +302,16 @@ class _Corpus:
                 meta = None
             if meta is not None:
                 postings, doclens = _index_tables(self.ds, self.spark, meta)
-                tok = meta.params.get("tokenizer", "simple")
-            else:
-                flat = self.ds.scanner(self.spark, columns=[col], with_row_id=True)
-                postings, doclens, tok = self._flat(flat, col, "_rowid")
+                self._cache[col] = (postings, doclens, meta.params.get("tokenizer", "simple"))
+                return self._cache[col]
+            df = self.ds.scanner(self.spark, columns=[col], with_row_id=True)
+            id_col = "_rowid"
         else:
-            postings, doclens, tok = self._flat(self.df, col, self.id_col)
-        self._cache[col] = (postings, doclens, tok)
+            df, id_col = self.df, self.id_col
+        from lance_spark.operators.fts import build_postings
+
+        self._cache[col] = (*build_postings(df, col, id_col), "simple")
         return self._cache[col]
-
-    @staticmethod
-    def _flat(df: DataFrame, col: str, id_col: str):
-        from lance_spark.indexes.inverted import _positional_postings
-
-        postings, doclens = _positional_postings(df, col, id_col, "simple")
-        return postings, doclens, "simple"
 
 
 def _query_terms(text: str, tok: str) -> list[str]:
@@ -324,75 +320,61 @@ def _query_terms(text: str, tok: str) -> list[str]:
     nothing against postings that hold 'state','of','the','art'.
     ``query_split`` mirrors each tokenizer family's exact gap class
     (whitespace verbatim; unicode family keeps digits and unigrams CJK;
-    the simple family splits on every non-[a-z] after the language fold —
-    r12 review fix: the old ASCII-punctuation split missed digit/CJK terms
-    under 'unicode' and non-ASCII separators under 'simple').
-    Per-language folding/stemming then happens in query_tokens."""
+    the simple family splits on every non-[a-z] after the language fold).
+    Per-language folding/stemming then happens in query_tokens. Every
+    single-query surface (flat, indexed, structured) normalizes here."""
     from lance_spark.functions.text import query_split, query_tokens
 
     return query_tokens(query_split(text, tok), tok)
 
 
-def _match_scores(corpus: _Corpus, q: MatchQuery) -> DataFrame:
+def _match_groups(corpus: _Corpus, q: MatchQuery, transpositions: bool = True):
+    """The one term-group expansion of a MatchQuery → (postings, doclens,
+    groups): a doc matches when it holds a token of EVERY group. OR is one
+    group of all terms (fuzzy variants included); AND is one group per
+    original term, so each must match via any of ITS variants. ``[[]]``
+    matches nothing — no terms, or a required term with zero vocabulary
+    expansions (dropping it would over-match)."""
+    postings, doclens, tok = corpus.tables(q.column)
+    terms = _query_terms(q.query, tok)
+    if q.fuzziness is None or q.fuzziness:
+        groups = _expand_fuzzy(postings, terms, q.fuzziness, q.prefix_length,
+                               q.max_expansions, transpositions)
+    else:
+        groups = [[t] for t in terms]
+    if q.operator is not FullTextOperator.AND:
+        groups = [list(dict.fromkeys(v for g in groups for v in g))]
+    return postings, doclens, groups if groups and all(groups) else [[]]
+
+
+def _group_ids(postings: DataFrame, groups: list[list[str]]) -> DataFrame:
+    ids = [postings.filter(F.col("token").isin(g)).select("id").distinct() for g in groups]
+    return reduce(lambda a, b: a.join(b, "id", "left_semi"), ids)
+
+
+def _match_scores(corpus: _Corpus, q: MatchQuery, transpositions: bool = True) -> DataFrame:
     from lance_spark.indexes.inverted import _bm25
 
-    postings, doclens, tok = corpus.tables(q.column)
-    base_terms = _query_terms(q.query, tok)
-    if q.fuzziness is None or q.fuzziness:
-        groups = _expand_fuzzy(postings, base_terms, q.fuzziness, q.prefix_length,
-                               q.max_expansions)
-    else:
-        groups = [[t] for t in base_terms]
-    terms = list(dict.fromkeys(v for g in groups for v in g))
-    # empty frame TYPED from the corpus postings: a hardcoded 'id long'
-    # breaks composed queries over df= corpora with non-long ids (r12)
-    empty = postings.select("id").limit(0).withColumn("_score", F.lit(0.0))
-    if not terms:
-        return empty
-    if q.operator is FullTextOperator.AND and any(not g for g in groups):
-        # a REQUIRED term with zero vocabulary expansions can match no doc
-        # (dropping it would over-match; the flat variant list under-matched
-        # by requiring every VARIANT instead of every ORIGINAL term)
-        return empty
-    scored = _bm25(postings, doclens, terms)
-    if q.operator is FullTextOperator.AND:
-        for g in groups:
-            scored = scored.join(
-                postings.filter(F.col("token").isin(g)).select("id").distinct(),
-                "id",
-                "left_semi",
-            )
+    postings, doclens, groups = _match_groups(corpus, q, transpositions)
+    scored = _bm25(postings, doclens, [t for g in groups for t in g])
+    if len(groups) > 1:
+        scored = scored.join(_group_ids(postings, groups), "id", "left_semi")
     if q.boost != 1.0:
         scored = scored.select("id", (F.col("_score") * q.boost).alias("_score"))
     return scored
 
 
-def _match_ids(corpus: _Corpus, q: FullTextQuery) -> DataFrame:
+def _match_ids(corpus: _Corpus, q: FullTextQuery, transpositions: bool = True) -> DataFrame:
     """Match SET of a query node — ids only, no scores. MUST_NOT clauses
     need membership, not ranking: compiling the full BM25 plan (doclens
     join, stats, aggregation) just to discard every score wastes a shuffle
-    per anti clause (r12 efficiency fix). MatchQuery compiles to postings
-    filters; other node types fall back to their scored plan's ids."""
+    per anti clause. Match and Phrase compile to postings filters; other
+    node types fall back to their scored plan's ids."""
     if isinstance(q, MatchQuery):
-        postings, doclens, tok = corpus.tables(q.column)
-        base_terms = _query_terms(q.query, tok)
-        if q.fuzziness is None or q.fuzziness:
-            groups = _expand_fuzzy(postings, base_terms, q.fuzziness,
-                                   q.prefix_length, q.max_expansions)
-        else:
-            groups = [[t] for t in base_terms]
-        terms = list(dict.fromkeys(v for g in groups for v in g))
-        if not terms or (
-            q.operator is FullTextOperator.AND and any(not g for g in groups)
-        ):
-            return postings.select("id").limit(0)
-        if q.operator is FullTextOperator.AND:
-            out = None
-            for g in groups:
-                ids = postings.filter(F.col("token").isin(g)).select("id").distinct()
-                out = ids if out is None else out.join(ids, "id", "left_semi")
-            return out
-        return postings.filter(F.col("token").isin(terms)).select("id").distinct()
+        postings, _, groups = _match_groups(corpus, q, transpositions)
+        return _group_ids(postings, groups)
+    if isinstance(q, PhraseQuery):
+        return _phrase_ids(corpus, q)
     return _scores(corpus, q).select("id")
 
 
@@ -443,19 +425,56 @@ def _expand_fuzzy(postings, terms, fuzziness, prefix_length, max_expansions,
     return groups
 
 
-def _phrase_scores(corpus: _Corpus, q: PhraseQuery) -> DataFrame:
-    from lance_spark.indexes.inverted import _bm25, phrase_hits
+def _phrase_ids(corpus: _Corpus, q: PhraseQuery) -> DataFrame:
+    """Match SET of a phrase node: the shared position walk (phrase_hits)
+    over the corpus postings — index tables or flat, same code."""
+    from lance_spark.indexes.inverted import phrase_hits
 
-    postings, doclens, tok = corpus.tables(q.column)
+    postings, _, tok = corpus.tables(q.column)
     terms = _query_terms(q.query, tok)
     if not terms:
-        return postings.select("id").limit(0).withColumn("_score", F.lit(0.0))
-    hits = phrase_hits(postings, terms, q.slop)
+        return postings.select("id").limit(0)
+    return phrase_hits(postings, terms, q.slop)
+
+
+def _phrase_scores(corpus: _Corpus, q: PhraseQuery) -> DataFrame:
+    from lance_spark.indexes.inverted import _bm25
+
+    postings, doclens, tok = corpus.tables(q.column)
     # score with CORPUS-WIDE stats (idf/avgdl/n_docs) and then restrict to
     # the phrase hits: stats from only the matching docs made phrase scores
     # incomparable with Match scores in the same query tree (a 10-doc
     # phrase saw n_docs=10 and near-zero idf)
-    return _bm25(postings, doclens, terms).join(hits, "id", "left_semi")
+    scored = _bm25(postings, doclens, _query_terms(q.query, tok))
+    return scored.join(_phrase_ids(corpus, q), "id", "left_semi")
+
+
+def _restricted_boolean(
+    corpus: _Corpus,
+    column: str | None,
+    must: list[str] | None,
+    should: list[str] | None,
+    must_not: list[str] | None,
+) -> DataFrame:
+    """Single-query boolean (BooleanQueryExec, fts.rs:904) → (id, _score):
+    BM25 over should∪must with stats (n_docs, avgdl, df) from the corpus
+    RESTRICTED to docs holding every must term and no must_not term — the
+    rule the ``fts_boolean`` oracle pins. ``BooleanQuery`` instead scores
+    with full-corpus stats."""
+    from lance_spark.indexes.inverted import _bm25
+
+    postings, doclens, tok = corpus.tables(column)
+    must, should, must_not = (
+        _query_terms(" ".join(ts or []), tok) for ts in (must, should, must_not)
+    )
+    keep = _group_ids(postings, [[t] for t in must]) if must else doclens.select("id")
+    if must_not:
+        keep = keep.join(_group_ids(postings, [must_not]), "id", "left_anti")
+    return _bm25(
+        postings.join(keep, "id", "left_semi"),
+        doclens.join(keep, "id", "left_semi"),
+        should + must,
+    )
 
 
 def _scores(corpus: _Corpus, q: FullTextQuery) -> DataFrame:
@@ -477,10 +496,7 @@ def _scores(corpus: _Corpus, q: FullTextQuery) -> DataFrame:
             _scores(corpus, MatchQuery(q.query, c, boost=b, operator=q.operator))
             for c, b in zip(q.columns, q.boosts)
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.groupBy("id").agg(F.sum("_score").alias("_score"))
+        return reduce(DataFrame.unionByName, parts).groupBy("id").agg(F.sum("_score").alias("_score"))
     if isinstance(q, BooleanQuery):
         must = [s for o, s in q.queries if o is Occur.MUST]
         should = [s for o, s in q.queries if o is Occur.SHOULD]
@@ -488,10 +504,7 @@ def _scores(corpus: _Corpus, q: FullTextQuery) -> DataFrame:
         scoring = [_scores(corpus, s) for s in must + should]
         if not scoring:
             raise ValueError("BooleanQuery needs at least one MUST or SHOULD clause")
-        out = scoring[0]
-        for p in scoring[1:]:
-            out = out.unionByName(p)
-        out = out.groupBy("id").agg(F.sum("_score").alias("_score"))
+        out = reduce(DataFrame.unionByName, scoring).groupBy("id").agg(F.sum("_score").alias("_score"))
         for i, s in enumerate(must):
             out = out.join(scoring[i].select("id"), "id", "left_semi")
         for s in must_not:
@@ -500,6 +513,18 @@ def _scores(corpus: _Corpus, q: FullTextQuery) -> DataFrame:
             out = out.join(_match_ids(corpus, s), "id", "left_anti")
         return out
     raise TypeError(f"not a FullTextQuery: {type(q).__name__}")
+
+
+def _topk(scored, k: int | None, id_col: str = "id"):
+    """Deterministic top-k cut of (id, _score) → (``id_col``, _score):
+    score rounded to 4 places, desc, then id asc. ``k=None`` returns ALL
+    scored rows — callers that re-rank on a different tie column (e.g. the
+    oracle's doc_id, which need not follow _rowid order after a shuffled
+    write) cut after their own sort."""
+    out = scored.select(
+        F.col("id").alias(id_col), F.round("_score", 4).alias("_score")
+    ).orderBy(F.desc("_score"), F.asc(id_col))
+    return out if k is None else out.limit(k)
 
 
 def execute_query(
@@ -515,8 +540,5 @@ def execute_query(
     """Run a structured query → (id, _score) top-k, deterministic ties."""
     if (ds is None) == (df is None):
         raise ValueError("pass exactly one of ds= or df=")
-    from lance_spark.indexes.inverted import _topk
-
     corpus = _Corpus(spark, ds=ds, df=df, id_col=id_col, default_column=column)
-    scored = _scores(corpus, query)
-    return _topk(scored.select("id", F.round("_score", 4).alias("_score")), k)
+    return _topk(_scores(corpus, query), k)

@@ -2223,10 +2223,10 @@ def fts_structured_query(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query("fts_index_match", _bm25_oracle(["table", "scan", "join"]))
-def fts_index_match(spark, sf_dir):
-    """Persisted positional-postings index search must equal the flat BM25
-    oracle (same corpus, same stats) — the INVERTED index path end-to-end."""
+def _indexed_match_top10(spark, sf_dir, terms, tokenizer="simple"):
+    """Top-10 (doc_id, _score) of ``match_query`` over a fresh INVERTED
+    index on documents.text built with ``tokenizer``. Ties re-cut on
+    doc_id after the rowid map (the k=None contract)."""
     import tempfile
 
     from lance_spark.dataset import dataset
@@ -2235,8 +2235,8 @@ def fts_index_match(spark, sf_dir):
 
     uri = tempfile.mkdtemp(prefix="lsq_inv_") + "/docs"
     write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text")
-    hits = match_query(ds, spark, ["table", "scan", "join"], k=None)
+    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer=tokenizer)
+    hits = match_query(ds, spark, terms, k=None)
     base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
     return (
         hits.join(base, hits.id == base._rowid)
@@ -2244,6 +2244,13 @@ def fts_index_match(spark, sf_dir):
         .orderBy(F.desc("_score"), F.asc("doc_id"))
         .limit(10)
     )
+
+
+@query("fts_index_match", _bm25_oracle(["table", "scan", "join"]))
+def fts_index_match(spark, sf_dir):
+    """Persisted positional-postings index search must equal the flat BM25
+    oracle (same corpus, same stats) — the INVERTED index path end-to-end."""
+    return _indexed_match_top10(spark, sf_dir, ["table", "scan", "join"])
 
 
 @query(
@@ -2927,23 +2934,7 @@ def fts_stemmed_match(spark, sf_dir):
     """english_stem tokenizer end-to-end (tokenizer.rs stemmer configs):
     postings stemmed at build, query terms stemmed at search — surface-form
     queries ('tables', 'scanning', 'joins') hit the stemmed postings."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stem_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="english_stem")
-    hits = match_query(ds, spark, ["tables", "scanning", "joins"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tables", "scanning", "joins"], "english_stem")
 
 
 def _duck_stem_toks_es(toks_expr: str) -> str:
@@ -2972,23 +2963,7 @@ def _duck_stem_toks_es(toks_expr: str) -> str:
 def fts_stemmed_match_es(spark, sf_dir):
     """spanish_stem tokenizer end-to-end: 'orders'/'keys'/'scans' conflate
     onto the corpus's 'order'/'key'/'scan' through the Spanish rule set."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemes_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="spanish_stem")
-    hits = match_query(ds, spark, ["orders", "keys", "scans"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["orders", "keys", "scans"], "spanish_stem")
 
 
 @query(
@@ -3003,23 +2978,7 @@ def fts_stemmed_match_de(spark, sf_dir):
     configs): postings German-stemmed at build, query terms stemmed at
     search — 'tables'/'ordern'/'joine' conflate onto the corpus's
     'table'/'order'/'join' via the shared stem."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemde_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="german_stem")
-    hits = match_query(ds, spark, ["tables", "ordern", "joine"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tables", "ordern", "joine"], "german_stem")
 
 
 @query(
@@ -3032,23 +2991,7 @@ def fts_stemmed_match_de(spark, sf_dir):
 def fts_stemmed_match_fr(spark, sf_dir):
     """french_stem tokenizer end-to-end: 'tables'/'ordent'/'joins' conflate
     onto 'table'/'order'/'join' through the French rule set."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemfr_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="french_stem")
-    hits = match_query(ds, spark, ["tables", "ordent", "joins"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tables", "ordent", "joins"], "french_stem")
 
 
 def _duck_stem_toks_it(toks_expr: str) -> str:
@@ -3077,23 +3020,7 @@ def _duck_stem_toks_it(toks_expr: str) -> str:
 def fts_stemmed_match_it(spark, sf_dir):
     """italian_stem tokenizer end-to-end: 'ordere'/'scano'/'joini' conflate
     onto the corpus's 'order'/'scan'/'join' through the Italian rule set."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemit_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="italian_stem")
-    hits = match_query(ds, spark, ["ordere", "scano", "joini"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["ordere", "scano", "joini"], "italian_stem")
 
 
 def _duck_stem_toks_pt(toks_expr: str) -> str:
@@ -3126,23 +3053,7 @@ def fts_stemmed_match_pt(spark, sf_dir):
     """portuguese_stem tokenizer end-to-end: 'orderes'/'scans'/'keyo'
     conflate onto the corpus's 'order'/'scan'/'key' through the Portuguese
     rule set."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stempt_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="portuguese_stem")
-    hits = match_query(ds, spark, ["orderes", "scans", "keyo"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["orderes", "scans", "keyo"], "portuguese_stem")
 
 
 def _duck_stem_toks_nl(toks_expr: str) -> str:
@@ -3173,23 +3084,7 @@ def _duck_stem_toks_nl(toks_expr: str) -> str:
 def fts_stemmed_match_nl(spark, sf_dir):
     """dutch_stem tokenizer end-to-end: 'tablen'/'scans'/'joinen' conflate
     onto the corpus's 'table'/'scan'/'join' through the Dutch rule set."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemnl_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="dutch_stem")
-    hits = match_query(ds, spark, ["tablen", "scans", "joinen"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tablen", "scans", "joinen"], "dutch_stem")
 
 
 def _duck_stem_toks_sv(toks_expr: str) -> str:
@@ -3223,23 +3118,7 @@ def fts_stemmed_match_sv(spark, sf_dir):
     """swedish_stem tokenizer end-to-end: 'tablar'/'ordande'/'joins'
     conflate onto the corpus's 'table'/'order'/'join' through the Swedish
     rule set."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemsv_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="swedish_stem")
-    hits = match_query(ds, spark, ["tablar", "ordande", "joins"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tablar", "ordande", "joins"], "swedish_stem")
 
 
 _DUCK_FOLD_SCAND = (
@@ -3282,23 +3161,7 @@ def fts_stemmed_match_da(spark, sf_dir):
     """danish_stem tokenizer end-to-end: 'tabler'/'scans'/'joinet'
     conflate onto the corpus's 'table'/'scan'/'join' through the Danish
     rule set (tokenizer.rs:43-80 Language::Danish)."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemda_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="danish_stem")
-    hits = match_query(ds, spark, ["tabler", "scans", "joinet"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tabler", "scans", "joinet"], "danish_stem")
 
 
 def _duck_stem_toks_no(toks_expr: str) -> str:
@@ -3331,23 +3194,7 @@ def fts_stemmed_match_no(spark, sf_dir):
     """norwegian_stem tokenizer end-to-end: 'tablene'/'scans'/'joinet'
     conflate onto the corpus's 'table'/'scan'/'join' through the Norwegian
     rule set (tokenizer.rs:43-80 Language::Norwegian)."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemno_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="norwegian_stem")
-    hits = match_query(ds, spark, ["tablene", "scans", "joinet"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tablene", "scans", "joinet"], "norwegian_stem")
 
 
 def _duck_stem_toks_fi(toks_expr: str) -> str:
@@ -3379,23 +3226,7 @@ def fts_stemmed_match_fi(spark, sf_dir):
     """finnish_stem tokenizer end-to-end: 'tablessa'/'scanit'/'joinilla'
     conflate onto the corpus's 'table'/'scan'/'join' through the Finnish
     rule set (tokenizer.rs:43-80 Language::Finnish)."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemfi_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="finnish_stem")
-    hits = match_query(ds, spark, ["tablessa", "scanit", "joinilla"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tablessa", "scanit", "joinilla"], "finnish_stem")
 
 
 def _duck_stem_toks_tr(toks_expr: str) -> str:
@@ -3428,23 +3259,7 @@ def fts_stemmed_match_tr(spark, sf_dir):
     """turkish_stem tokenizer end-to-end: 'tablelar'/'scanlardan'/'joinler'
     conflate onto the corpus's 'table'/'scan'/'join' through the Turkish
     rule set (tokenizer.rs:43-80 Language::Turkish)."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemtr_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="turkish_stem")
-    hits = match_query(ds, spark, ["tablelar", "scanlardan", "joinler"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tablelar", "scanlardan", "joinler"], "turkish_stem")
 
 
 # Cyrillic transliteration used ONLY to give the Russian stemmer a corpus
@@ -3552,23 +3367,7 @@ def fts_stemmed_match_hu(spark, sf_dir):
     """hungarian_stem tokenizer end-to-end: 'tableban'/'scanok'/'joinnak'
     conflate onto the corpus's 'table'/'scan'/'join' through the Hungarian
     rule set (tokenizer.rs:43-80 Language::Hungarian)."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemhu_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="hungarian_stem")
-    hits = match_query(ds, spark, ["tableban", "scanok", "joinnak"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tableban", "scanok", "joinnak"], "hungarian_stem")
 
 
 def _duck_stem_toks_ro(toks_expr: str) -> str:
@@ -3607,23 +3406,7 @@ def fts_stemmed_match_ro(spark, sf_dir):
     """romanian_stem tokenizer end-to-end: 'tablele'/'scanuri'/'joinului'
     conflate onto the corpus's 'table'/'scan'/'join' through the Romanian
     rule set (tokenizer.rs:43-80 Language::Romanian)."""
-    import tempfile
-
-    from lance_spark.dataset import dataset
-    from lance_spark.indexes.inverted import create_inverted_index, match_query
-    from lance_spark.write import write_dataset
-
-    uri = tempfile.mkdtemp(prefix="lsq_stemro_") + "/docs"
-    write_dataset(_t(spark, sf_dir, "documents").repartition(2), uri, mode="create")
-    ds = create_inverted_index(dataset(uri), spark, "text", tokenizer="romanian_stem")
-    hits = match_query(ds, spark, ["tablele", "scanuri", "joinului"], k=None)
-    base = ds.to_df(spark, with_row_id=True).select("_rowid", "doc_id")
-    return (
-        hits.join(base, hits.id == base._rowid)
-        .select("doc_id", "_score")
-        .orderBy(F.desc("_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _indexed_match_top10(spark, sf_dir, ["tablele", "scanuri", "joinului"], "romanian_stem")
 
 
 # Transliterations for the non-Latin stemmer oracles, same device as the

@@ -769,3 +769,44 @@ class TestInvertedReviewR12:
         # each doc appears exactly once — no doubled postings
         assert doclens.count() == 2
         assert postings.filter("token = 'alpha'").count() == 2
+
+
+class TestOneQueryPath:
+    """Flat and indexed single-query FTS run one compiler: the same query
+    terms and the same BM25 stats whichever postings back the corpus."""
+
+    @staticmethod
+    def _ds(spark, tmp_path, rows, name, index):
+        import lance_spark as ls
+        from lance_spark.dataset import dataset
+        from lance_spark.indexes.inverted import create_inverted_index
+
+        uri = str(tmp_path / name)
+        ls.write_dataset(spark.createDataFrame(rows, "id long, text string"), uri)
+        ds = dataset(uri)
+        return create_inverted_index(ds, spark, "text") if index else ds
+
+    def test_query_terms_split_like_index_with_and_without_index(self, spark, tmp_path):
+        rows = [(1, "a state-of-the-art engine"), (2, "the art of war"),
+                (3, "x_y plot"), (4, "plain text here")]
+        flat = self._ds(spark, tmp_path, rows, "flat", index=False)
+        idx = self._ds(spark, tmp_path, rows, "idx", index=True)
+        for q, want in (("state-of-the-art", [1, 2]), ("x_y", [3])):
+            got = [
+                sorted(r["id"] for r in ds.full_text_search(spark, q, k=10).collect())
+                for ds in (flat, idx)
+            ]
+            assert got == [want, want], q
+
+    def test_null_text_flat_scores_equal_indexed(self, spark, tmp_path):
+        from lance_spark.operators.fts import bm25_search
+
+        rows = [(1, "spark table scan"), (2, "table join"), (3, None), (4, None),
+                (5, "spark spark")]
+        ds = self._ds(spark, tmp_path, rows, "nulls", index=True)
+        df = spark.createDataFrame(rows, "id long, text string")
+        flat = {r["id"]: r["_score"]
+                for r in bm25_search(df, "text", "id", ["spark"]).collect()}
+        idx = {r["id"]: r["_score"]
+               for r in ds.full_text_search(spark, "spark").collect()}
+        assert flat == idx and set(flat) == {1, 5}

@@ -357,3 +357,28 @@ class TestQueryReviewR12:
         )
         got = execute_query(spark, q, df=df, id_col="doc", k=5).collect()
         assert [r["id"] for r in got] == ["a"]
+
+
+def test_flat_queries_leave_no_persisted_rdds(spark):
+    """Flat postings are a plain JVM plan: no query call may leave a
+    cached or checkpointed RDD behind on the executors."""
+    from lance_spark.operators.fts import bm25_search, fuzzy_match, phrase_match
+
+    df = spark.createDataFrame(
+        [(1, "quick brown fox"), (2, "quick red fox jumps"), (3, "lazy brown dog")],
+        "id long, text string",
+    )
+    calls = {
+        "execute_query match": lambda: execute_query(
+            spark, MatchQuery("quick fox", "text"), df=df, id_col="id"),
+        "execute_query phrase": lambda: execute_query(
+            spark, PhraseQuery("quick fox", "text", slop=1), df=df, id_col="id"),
+        "bm25_search": lambda: bm25_search(df, "text", "id", ["fox"]),
+        "phrase_match": lambda: phrase_match(df, "text", "id", "quick fox", slop=1),
+        "fuzzy_match": lambda: fuzzy_match(df, "text", "id", "fxo"),
+    }
+    jsc = spark.sparkContext._jsc
+    for name, call in calls.items():
+        before = set(jsc.getPersistentRDDs().keys())
+        assert call().collect(), name
+        assert set(jsc.getPersistentRDDs().keys()) <= before, name
