@@ -4,8 +4,9 @@ Mirrors the reference API surface (python/python/lance/dataset.py:402
 `LanceDataset`, :666-899 scanner options, :3450-3639 `sql`) re-expressed as
 DataFrame construction:
 
-  - scan = spark.read.parquet(fragment files) — Catalyst pushes filters and
-    projections into the parquet scan (the role of FilteredReadExec,
+  - scan = parquet scan of the fragment files, schema from the manifest —
+    no footer inference; Catalyst pushes filters and projections into the
+    parquet scan (the role of FilteredReadExec,
     rust/lance/src/io/exec/filtered_read.rs).
   - deletion files = broadcast anti-join on ``_rowid`` (DeletionFile
     semantics, rust/lance-table/src/format/fragment.rs:185-208).
@@ -22,9 +23,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from lance_spark import manifest as mf
+from lance_spark.io import ROWID_SCHEMA, read_table
 from lance_spark.write import FRAGID_SHIFT, ROWADDR_COL, ROWID_COL
 
 
@@ -291,7 +293,49 @@ class LanceDataset:
         return os.path.join(self.uri, rel)
 
     def _read_files(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        return spark.read.parquet(*[self._abs(p) for p in paths])
+        """Scan data or deletion files of this version; the files of one
+        call share a layout, so the first path's catalog schema serves all."""
+        schema = self._file_schemas().get(paths[0])
+        return read_table(spark, [self._abs(p) for p in paths], schema)
+
+    def _file_schemas(self) -> dict[str, StructType]:
+        """{file path: physical schema} for every data and deletion file of
+        this version, from the manifest alone: the file's ``DataFile.columns``
+        (physical names) typed through ``column_renames`` and the schema,
+        blob sizes beside blob columns, plus ``_rowid``."""
+        cached = self.__dict__.get("_file_schema_cache")
+        if cached is not None and cached[0] is self.manifest:
+            return cached[1]
+        m = self.manifest
+        renames = m.config.get("column_renames", {})
+        fields = {f["name"]: f for f in m.schema_json["fields"]}
+        blobs = set(m.blob_columns or [])
+        by_layout: dict[tuple, StructType] = {}
+
+        def layout_schema(cols: tuple) -> StructType:
+            out = StructType()
+            for phys in cols:
+                logical = renames.get(phys, phys)
+                f = fields.get(logical)
+                if f is None:
+                    continue  # dropped: the bytes stay, the schema forgets them
+                out.add(StructField.fromJson({"name": phys, "type": f["type"],
+                                              "nullable": True, "metadata": {}}))
+                if logical in blobs:
+                    out.add(f"{phys}_size", LongType())
+            return out.add(ROWID_COL, LongType())
+
+        out: dict[str, StructType] = {}
+        for frag in m.fragments:
+            for df in frag.files:
+                key = tuple(df.columns)
+                if key not in by_layout:
+                    by_layout[key] = layout_schema(key)
+                out[df.path] = by_layout[key]
+            if frag.deletion_file:
+                out[frag.deletion_file] = ROWID_SCHEMA
+        self.__dict__["_file_schema_cache"] = (m, out)
+        return out
 
     def _fragment_df(
         self, spark: SparkSession, fragments: list[mf.Fragment], columns: list[str] | None,
@@ -300,7 +344,7 @@ class LanceDataset:
         """Assemble the logical table from fragment files + deletions.
 
         Fragments whose file layout matches are scanned together in ONE
-        spark.read.parquet call (one scan node → full parallelism); differing
+        parquet read (one scan node → full parallelism); differing
         column-group layouts are unioned. Deletions from all fragments are
         applied with a single broadcast anti-join on _rowid.
         """
@@ -811,7 +855,7 @@ class LanceDataset:
 
         pos = F.col("_metadata.row_index").cast("long")
         if all(_embedded_id(f.files[0].path) == f.id for f in frags):
-            raw = spark.read.parquet(*[self._abs(f.files[0].path) for f in frags])
+            raw = read_table(spark, [self._abs(f.files[0].path) for f in frags], ROWID_SCHEMA)
             fid = F.regexp_extract(
                 F.input_file_name(), r"frag-(\d+)-[^/]*$", 1
             ).cast("long")
@@ -819,7 +863,7 @@ class LanceDataset:
                 ROWID_COL, F.shiftleft(fid, FRAGID_SHIFT).bitwiseOR(pos).alias(ROWADDR_COL)
             )
         pieces = [
-            spark.read.parquet(self._abs(f.files[0].path)).select(
+            read_table(spark, self._abs(f.files[0].path), ROWID_SCHEMA).select(
                 ROWID_COL,
                 F.shiftleft(F.lit(f.id).cast("long"), FRAGID_SHIFT)
                 .bitwiseOR(pos)
@@ -1641,9 +1685,9 @@ class LanceDataset:
         sub = os.path.join(path, "codes") if os.path.isdir(os.path.join(path, "codes")) else path
         if meta.index_type == "INVERTED":
             for part in ("postings", "doclens"):
-                spark.read.parquet(os.path.join(path, part)).cache().count()
+                read_table(spark, os.path.join(path, part)).cache().count()
         else:
-            spark.read.parquet(sub).cache().count()
+            read_table(spark, sub).cache().count()
 
     def shallow_clone(self, dest_uri: str) -> "LanceDataset":
         """Zero-copy clone (dataset.py:3328 shallow_clone; Operation::Clone,

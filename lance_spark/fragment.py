@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lance_spark import manifest as mf
+from lance_spark.io import ROWID_SCHEMA, read_table
 from lance_spark.write import FRAGID_SHIFT, ROWID_COL
 
 
@@ -461,9 +462,7 @@ class LanceFragment:
         # as a semi-join frame, NOT an enumerated `_rowid IN (...)` literal
         # (a compacted fragment holds ~millions of rowids; the string form
         # was a multi-MB predicate Catalyst had to parse)
-        rid_df = spark.read.parquet(self._ds._abs(self._meta.files[0].path)).select(
-            ROWID_COL
-        )
+        rid_df = read_table(spark, self._ds._abs(self._meta.files[0].path), ROWID_SCHEMA)
         return self._ds.delete(spark, predicate, scope_rowids=rid_df)
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from lance_spark.io import read_table, record_schema, recorded_schema, write_table
 from lance_spark.indexes.vector import (
     IvfIndex,
     _as_matrix,
@@ -241,7 +242,7 @@ class IndicesBuilder:
         Feed the returned uri to ``transform_vectors(partition_ds_uri=)``
         to skip re-assignment."""
         out, _ = self._transform_df(ivf_model, None)
-        out.select("id", "partition_id").write.mode("overwrite").parquet(output_uri)
+        write_table(out.select("id", "partition_id"), output_uri)
         return output_uri
 
     def transform_vectors(
@@ -265,7 +266,7 @@ class IndicesBuilder:
         IndexMeta claims exactly the transformed fragments."""
         out, covered = self._transform_df(ivf, pq, fragments)
         if partition_ds_uri is not None:
-            pre = self.spark.read.parquet(partition_ds_uri).select(
+            pre = read_table(self.spark, partition_ds_uri).select(
                 "id", F.col("partition_id").alias("pre_pid")
             )
             out = out.join(pre, "id", "left").withColumn(
@@ -313,7 +314,7 @@ class IndicesBuilder:
                 out.withColumn("partition_id", F.col("__final_pid"))
                 .drop("pre_pid", "__final_pid")
             )
-        out.write.mode("overwrite").parquet(dest_uri)
+        write_table(out, dest_uri)
         with open(os.path.join(dest_uri, "_coverage.json"), "w") as fh:
             json.dump({"fragment_ids": covered}, fh)
         return dest_uri
@@ -336,12 +337,9 @@ class IndicesBuilder:
             f if os.path.isabs(f) else os.path.join(dir_path, f)
             for f in unsorted_filenames
         ]
-        (
-            self.spark.read.parquet(*src)
-            .repartition("partition_id")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(out_dir)
+        write_table(
+            read_table(self.spark, src).repartition("partition_id"), out_dir,
+            partition_by="partition_id",
         )
         covered: set[int] = set()
         for s in src:
@@ -428,6 +426,11 @@ class IndicesBuilder:
             covered = sorted(covered_ids)
         else:
             covered = [f.id for f in ds.manifest.fragments]
+        # the shuffle roots recorded the codes schema; the partition dirs
+        # moved out of them carry it over to the assembled codes table
+        schemas = {recorded_schema(d) for d in seen_dirs}
+        if len(schemas) == 1 and None not in schemas:
+            record_schema(codes_dir, schemas.pop())
 
         radii = compute_partition_radii(
             self.spark, codes_dir, ivf.centroids, ivf.distance_type == "cosine"

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lance_spark.io import read_table, write_table
 from lance_spark.indexes.vector import (
     _MAX_REFINE_CANDIDATES,
     _adc_table,
@@ -221,7 +222,7 @@ def build_hnsw_graphs(
     so the query-time graph table is code-sized."""
     cosine = index.metric == "cosine"
     pq = index.index_type in ("IVF_HNSW_PQ", "IVF_HNSW_SQ")  # code-sized rows
-    codes = spark.read.parquet(codes_dir or os.path.join(index.uri, "codes"))
+    codes = read_table(spark, codes_dir or os.path.join(index.uri, "codes"))
 
     def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["partition_id"].iloc[0])
@@ -251,13 +252,10 @@ def build_hnsw_graphs(
         f"partition_id int, id long, {payload}, level int, nbrs array<array<long>>"
     )
     cols = ["partition_id", "id", "pq_code" if pq else "vec"] + (["vec"] if pq else [])
-    (
-        codes.select(*cols)
-        .groupBy("partition_id")
-        .applyInPandas(build_one, out_schema)
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .parquet(out_dir or os.path.join(index.uri, "hnsw"))
+    write_table(
+        codes.select(*cols).groupBy("partition_id").applyInPandas(build_one, out_schema),
+        out_dir or os.path.join(index.uri, "hnsw"),
+        partition_by="partition_id",
     )
 
 
@@ -295,7 +293,7 @@ def hnsw_search(
     probes = probe_partitions(index, query, nprobes)
     segs = None
     for i, p in enumerate(index.hnsw_paths()):
-        g = spark.read.parquet(p).withColumn("__seg", F.lit(i))
+        g = read_table(spark, p).withColumn("__seg", F.lit(i))
         segs = g if segs is None else segs.unionByName(g)
     graph = segs.filter(F.col("partition_id").isin(probes))
     metric = index.metric

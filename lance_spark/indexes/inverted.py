@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lance_spark.io import read_table, write_table
 from lance_spark.operators.fts import BM25_B, BM25_K1, _flat_postings, bm25_score_expr
 from lance_spark.query import (
     BoostQuery,
@@ -163,15 +164,14 @@ def create_inverted_index(
     # query a postings seek (VERDICT r13 #2). The postings write also
     # materializes the shared token checkpoint, so the doclens write below
     # is a stored-frame projection, not a second tokenize.
-    (
-        postings.repartition("token")
-        .sortWithinPartitions("token", "id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(seg_dir, "postings"))
+    write_table(
+        postings.repartition("token").sortWithinPartitions("token", "id"),
+        os.path.join(seg_dir, "postings"),
     )
-    doclens.select("id", F.col("dl").cast("int").alias("dl")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(seg_dir, "doclens"))
+    write_table(
+        doclens.select("id", F.col("dl").cast("int").alias("dl")),
+        os.path.join(seg_dir, "doclens"),
+    )
     covered = [f.id for f in ds.manifest.fragments]
     params = {"k1": BM25_K1, "b": BM25_B, **extra_params}
     if seg != ".":
@@ -228,8 +228,8 @@ def _index_tables(ds, spark: SparkSession, meta) -> tuple[DataFrame, DataFrame]:
         cur = next((i for i in latest.indices if i.name == meta.name), None)
         if cur is not None:
             dirs = _segment_dirs(base, cur)
-    postings = spark.read.parquet(*[os.path.join(d, "postings") for d in dirs])
-    doclens = spark.read.parquet(*[os.path.join(d, "doclens") for d in dirs])
+    postings = read_table(spark, [os.path.join(d, "postings") for d in dirs])
+    doclens = read_table(spark, [os.path.join(d, "doclens") for d in dirs])
     covered = set(meta.fragment_ids)
     tail = [f.id for f in ds.manifest.fragments if f.id not in covered]
     if tail:
@@ -315,8 +315,8 @@ def extend_inverted(ds, spark: SparkSession, meta) -> list[str]:
         # are already in a committed segment — re-tokenizing them would
         # double doclens/tf (wrong BM25). Anti-join already-indexed ids;
         # an id-column-only read of doclens, never the corpus text.
-        seen = spark.read.parquet(
-            *[os.path.join(d, "doclens") for d in _segment_dirs(base, meta)]
+        seen = read_table(
+            spark, [os.path.join(d, "doclens") for d in _segment_dirs(base, meta)]
         ).select(F.col("id").alias(ROWID_COL))
         flat = flat.join(seen, ROWID_COL, "left_anti")
     p2, d2 = _positional_postings(
@@ -332,15 +332,14 @@ def extend_inverted(ds, spark: SparkSession, meta) -> list[str]:
     # the write materializes the shared token checkpoint, so the doclens
     # write is a stored-frame size() projection — the tail text tokenizes
     # once per extend
-    (
-        p2.repartition("token")
-        .sortWithinPartitions("token", "id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(base, seg, "postings"))
+    write_table(
+        p2.repartition("token").sortWithinPartitions("token", "id"),
+        os.path.join(base, seg, "postings"),
     )
-    d2.select("id", F.col("dl").cast("int").alias("dl")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, seg, "doclens"))
+    write_table(
+        d2.select("id", F.col("dl").cast("int").alias("dl")),
+        os.path.join(base, seg, "doclens"),
+    )
     return segs + [seg]
 
 
@@ -410,15 +409,13 @@ def merge_inverted_segments(ds, spark: SparkSession, name: str):
     base = os.path.join(ds.uri, meta.path)
     seg = f"seg_v{_next_seg_num(base, segs, meta.params.get('retired_segments')) + 1}"
     dirs = _segment_dirs(base, meta)
-    postings = spark.read.parquet(*[os.path.join(d, "postings") for d in dirs])
-    doclens = spark.read.parquet(*[os.path.join(d, "doclens") for d in dirs])
-    (
-        postings.repartition("token")
-        .sortWithinPartitions("token", "id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(base, seg, "postings"))
+    postings = read_table(spark, [os.path.join(d, "postings") for d in dirs])
+    doclens = read_table(spark, [os.path.join(d, "doclens") for d in dirs])
+    write_table(
+        postings.repartition("token").sortWithinPartitions("token", "id"),
+        os.path.join(base, seg, "postings"),
     )
-    doclens.write.mode("overwrite").parquet(os.path.join(base, seg, "doclens"))
+    write_table(doclens, os.path.join(base, seg, "doclens"))
     retired = _reclaim_retired_segments(base, meta.params)
     now = time.time()
     for s in segs:

@@ -39,6 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lance_spark.io import read_table, write_table
 from lance_spark.write import FRAGID_SHIFT, ROWID_COL
 
 
@@ -66,27 +67,21 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
     df = _scan_col(ds, spark, column)
     kind = kind.upper()
     if kind == "BTREE":
-        (
+        out = (
             df.select(F.col(column).alias("value"), ROWID_COL)
             .repartitionByRange(max(df.sparkSession.sparkContext.defaultParallelism, 1), "value")
             .sortWithinPartitions("value")
-            .write.mode("overwrite")
-            .parquet(uri)
         )
     elif kind == "BITMAP":
-        (
+        out = (
             df.groupBy(F.col(column).alias("value"))
             .agg(F.sort_array(F.collect_list(ROWID_COL)).alias("rowids"))
-            .write.mode("overwrite")
-            .parquet(uri)
         )
     elif kind == "LABEL_LIST":
-        (
+        out = (
             df.select(F.explode(column).alias("value"), F.col(ROWID_COL))
             .groupBy("value")
             .agg(F.sort_array(F.collect_list(ROWID_COL)).alias("rowids"))
-            .write.mode("overwrite")
-            .parquet(uri)
         )
     elif kind == "NGRAM":
         n = int(params.setdefault("n", 3))
@@ -95,11 +90,7 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
             f"transform(sequence(1, greatest(length(lower({column})) - {n - 1}, 0)),"
             f" i -> substring(lower({column}), i, {n}))"
         )
-        (
-            df.select(F.explode(F.array_distinct(grams)).alias("gram"), F.col(ROWID_COL))
-            .write.mode("overwrite")
-            .parquet(uri)
-        )
+        out = df.select(F.explode(F.array_distinct(grams)).alias("gram"), F.col(ROWID_COL))
     elif kind == "JSON":
         # JsonIndex (rust/lance-index/src/scalar/json.rs:55): a BTree over
         # one extracted JSON path; value_type casts the extracted string
@@ -107,18 +98,16 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
         if not path:
             raise ValueError("JSON index requires params={'path': '$.field'}")
         vtype = params.setdefault("value_type", "string")
-        (
+        out = (
             df.select(
                 F.get_json_object(F.col(column), path).cast(vtype).alias("value"),
                 F.col(ROWID_COL),
             )
             .repartitionByRange(max(df.sparkSession.sparkContext.defaultParallelism, 1), "value")
             .sortWithinPartitions("value")
-            .write.mode("overwrite")
-            .parquet(uri)
         )
     elif kind == "ZONEMAP":
-        (
+        out = (
             df.withColumn("fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT))
             .groupBy("fragment_id")
             .agg(
@@ -126,8 +115,6 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
                 F.max(column).alias("max"),
                 F.sum(F.when(F.col(column).isNull(), 1).otherwise(0)).alias("null_count"),
             )
-            .write.mode("overwrite")
-            .parquet(uri)
         )
     elif kind == "BLOOMFILTER":
         # per-fragment set of xxhash64(value) mod nbits — bloom semantics
@@ -139,17 +126,16 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
         # that contain matches.
         nbits = int(params.setdefault("nbits", 1 << 16))
         params["value_type"] = df.schema[column].dataType.simpleString()
-        (
+        out = (
             df.withColumn("fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT))
             .select("fragment_id", F.col(column).cast("string").alias("value"))
             .withColumn("h", F.xxhash64("value"))
             .groupBy("fragment_id")
             .agg(F.collect_set(F.pmod(F.col("h"), F.lit(nbits))).alias("bit_idx"))
-            .write.mode("overwrite")
-            .parquet(uri)
         )
     else:
         raise ValueError(f"unknown scalar index type {kind}")
+    write_table(out, uri)
     return params
 
 
@@ -198,7 +184,7 @@ def create_scalar_index(ds, spark: SparkSession, column: str, kind: str, name: s
 
 
 def _load(spark: SparkSession, ds, meta) -> DataFrame:
-    return spark.read.parquet(os.path.join(ds.uri, meta.path))
+    return read_table(spark, os.path.join(ds.uri, meta.path))
 
 
 def _uncovered_fragments(ds, meta) -> list[int]:

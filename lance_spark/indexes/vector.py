@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from lance_spark.io import read_table, write_table
+
 
 # Cap on the refine stage's driver-side candidate collect: (id, _approx)
 # rows are ~24 bytes, so 1M rows ≈ 24 MB — corpus-independent no matter how
@@ -125,6 +127,7 @@ def train_kmeans(x: np.ndarray, k: int, iters: int = 12, seed: int = 42) -> np.n
 class IvfIndex:
     """Handle over a built index directory:
        <uri>/codes/partition_id=*/...parquet   {id, vec, pq_code?}
+       <uri>/codes/_schema.json                 (io.write_table)
        <uri>/centroids.npy, codebooks.npy, meta.json
 
     ``meta.json``'s ``segments`` lists the code directories (default
@@ -178,7 +181,7 @@ class IvfIndex:
         own (multi-root partition discovery conflicts otherwise)."""
         df = None
         for p in self.codes_paths():
-            d = spark.read.parquet(p)
+            d = read_table(spark, p)
             df = d if df is None else df.unionByName(d, allowMissingColumns=True)
         return _mask_fragments(df, "id", exclude_fragments, rowid_map)
 
@@ -438,7 +441,7 @@ def compute_partition_radii(
     the radius is a two-column parquet scan + max — no Python boundary and
     no vector bytes read. Segments written before the column existed fall
     back to recomputing from the stored vectors."""
-    base = spark.read.parquet(codes_dir)
+    base = read_table(spark, codes_dir)
     if "rnorm" in base.columns:
         radii_rows = (
             base.select("partition_id", "rnorm")
@@ -468,8 +471,7 @@ def compute_partition_radii(
         )
 
     radii_rows = (
-        spark.read.parquet(codes_dir)
-        .select(F.col("partition_id"), _resid_norm("vec", "partition_id").alias("r"))
+        base.select(F.col("partition_id"), _resid_norm("vec", "partition_id").alias("r"))
         .groupBy("partition_id")
         .agg(F.max("r").alias("radius"))
         .collect()
@@ -711,11 +713,8 @@ def build_ivf(
         old_sfx = old_meta.get("artifact_suffix", "")
         if old_sfx != sfx:
             retired[f"npy:{old_sfx}"] = now
-    (
-        enc.repartition("partition_id")
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .parquet(os.path.join(uri, seg))
+    write_table(
+        enc.repartition("partition_id"), os.path.join(uri, seg), partition_by="partition_id"
     )
     radii = compute_partition_radii(
         spark, os.path.join(uri, seg), centroids, cosine, packed=packed
@@ -979,7 +978,7 @@ def extend_ivf(
     if dedup_existing and kept:
         seen = None
         for s in kept:
-            d = spark.read.parquet(os.path.join(index.uri, s)).select(
+            d = read_table(spark, os.path.join(index.uri, s)).select(
                 F.col("id").alias(id_col)
             )
             seen = d if seen is None else seen.unionByName(d)
@@ -1008,12 +1007,7 @@ def extend_ivf(
             n = max(n, int(s[len("codes_v"):]))
     seg = f"codes_v{n + 1}"
     seg_dir = os.path.join(index.uri, seg)
-    (
-        enc.repartition("partition_id")
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .parquet(seg_dir)
-    )
+    write_table(enc.repartition("partition_id"), seg_dir, partition_by="partition_id")
     new_radii = compute_partition_radii(
         spark, seg_dir, index.centroids, index.metric == "cosine",
         packed=index.packed,
@@ -1105,12 +1099,9 @@ def merge_ivf_segments(index: IvfIndex, spark: SparkSession) -> IvfIndex:
     )
     seg = f"codes_v{n + 1}"
     seg_dir = os.path.join(index.uri, seg)
-    (
-        index.codes_df(spark)
-        .repartition("partition_id")
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .parquet(seg_dir)
+    write_table(
+        index.codes_df(spark).repartition("partition_id"), seg_dir,
+        partition_by="partition_id",
     )
     old = list(index.segments)
     if index.index_type.startswith("IVF_HNSW"):

@@ -1,4 +1,15 @@
-"""Table loading helpers for the driver's testdata layout (TESTDATA.md).
+"""Parquet table I/O: the catalog-schema read/write pair every engine-written
+table goes through, plus the loader for the external testdata layout
+(TESTDATA.md).
+
+Lance never infers a schema: the manifest carries it (manifest.rs:35-75).
+Here an inferring ``spark.read.parquet`` runs one footer-reading Spark job
+per call, so every table the engine writes is read back with its schema
+given: data and deletion files take theirs from the manifest
+(``LanceDataset._read_files``), index and model tables from the
+``_schema.json`` that ``write_table`` leaves next to the parquet parts
+(Spark and pyarrow readers skip ``_``-prefixed files). Only the external
+inputs ``load_table`` reads, which have no catalog, are inferred.
 
 ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark has no type for; we
 read it as a long (spark.sql.legacy.parquet.nanosAsLong=true, set in
@@ -8,10 +19,62 @@ truncation DuckDB's epoch_us() applies, so oracle comparisons line up.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from lance_spark.write import ROWID_COL
+
+SCHEMA_FILE = "_schema.json"
+
+#: a deletion sidecar holds exactly the deleted ``_rowid`` values; every
+#: data file holds ``_rowid`` too, so rowid-only reads use the same schema
+ROWID_SCHEMA = StructType([StructField(ROWID_COL, LongType())])
+
+
+def write_table(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+    """Overwrite ``path`` with ``df`` as parquet and record its schema."""
+    w = df.write.mode("overwrite")
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+    record_schema(path, df.schema)
+
+
+def record_schema(path: str, schema: StructType) -> None:
+    with open(os.path.join(path, SCHEMA_FILE), "w") as fh:
+        fh.write(schema.json())
+
+
+def recorded_schema(path: str) -> StructType | None:
+    """The schema ``write_table`` recorded for ``path``; None for a table
+    written before schemas were recorded."""
+    try:
+        with open(os.path.join(path, SCHEMA_FILE)) as fh:
+            return StructType.fromJson(json.load(fh))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def read_table(
+    spark: SparkSession, paths: str | list[str], schema: StructType | None = None
+) -> DataFrame:
+    """Read engine-written parquet without a footer-inference job.
+
+    ``schema`` defaults to the recorded schema of the ``paths`` directories
+    (they must agree). A legacy table with no recorded schema falls back
+    to one inferring read."""
+    paths = [paths] if isinstance(paths, str) else list(paths)
+    if schema is None:
+        found = {recorded_schema(p) for p in paths}
+        if len(found) == 1:
+            schema = found.pop()
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from lance_spark import manifest as mf
+from lance_spark.io import ROWID_SCHEMA, read_table
 from lance_spark.write import FRAGID_SHIFT, ROWID_COL, write_fragments
 
 _DEL_META_SCHEMA = StructType(
@@ -68,8 +69,8 @@ def _rowid_fragment_map(ds, spark: SparkSession, fragments=None) -> DataFrame | 
         return int(m.group(1)) if m else None
 
     if all(_embedded_id(f.files[0].path) == f.id for f in frags):
-        return spark.read.parquet(
-            *[os.path.join(ds.uri, f.files[0].path) for f in frags]
+        return read_table(
+            spark, [os.path.join(ds.uri, f.files[0].path) for f in frags], ROWID_SCHEMA
         ).select(
             ROWID_COL,
             # anchored to the basename: a directory component containing
@@ -81,9 +82,9 @@ def _rowid_fragment_map(ds, spark: SparkSession, fragments=None) -> DataFrame | 
         )
     pieces = []
     for frag in frags:
-        p = spark.read.parquet(os.path.join(ds.uri, frag.files[0].path)).select(
-            ROWID_COL, F.lit(frag.id).alias("fragment_id")
-        )
+        p = read_table(
+            spark, os.path.join(ds.uri, frag.files[0].path), ROWID_SCHEMA
+        ).select(ROWID_COL, F.lit(frag.id).alias("fragment_id"))
         pieces.append(p)
     out = pieces[0]
     for p in pieces[1:]:
@@ -92,48 +93,41 @@ def _rowid_fragment_map(ds, spark: SparkSession, fragments=None) -> DataFrame | 
 
 
 def _write_deletion_files(ds, spark: SparkSession, del_rowids: DataFrame) -> dict[int, tuple[str, int]]:
-    """Write one deletion sidecar per affected fragment; returns
-    {fragment_id: (rel_path, total_deleted_rows)}. Includes (unions) the
-    fragment's existing deletion file so each version has one sidecar per
-    fragment. Distributed: one task per fragment group."""
+    """Write one deletion sidecar per affected fragment in a single grouped
+    pass; returns {fragment_id: (rel_path, total_deleted_rows)}.
+
+    Each fragment's group task unions its new deletions with the
+    fragment's existing sidecar (read locally with pyarrow from the
+    ``{fragment_id: abs sidecar path}`` map, bounded by the fragment
+    count), so each version keeps one sidecar per fragment and only the
+    affected fragments' sidecars are rewritten — a fragment with no new
+    deletions forms no group."""
     root = ds.uri
     mapping = _rowid_fragment_map(ds, spark)
-
-    def _with_fid(df):
-        if mapping is None:
-            return df.withColumn(
-                "fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT)
-            )
-        return df.join(mapping, ROWID_COL, "inner")
-
-    dels = _with_fid(del_rowids.select(ROWID_COL))
-    # union ONLY the affected fragments' existing sidecars: rewriting every
-    # sidecar made each mutation O(total deleted rows) and put EVERY
-    # previously-deleted fragment into the staleness check — two
-    # non-overlapping concurrent deletes would force full recomputes. The
-    # distinct collect is bounded by the fragment count.
-    affected = {
-        int(r[0]) for r in dels.select("fragment_id").distinct().collect()
-    }
-    existing = [
-        f.deletion_file
+    dels = del_rowids.select(ROWID_COL)
+    if mapping is None:
+        dels = dels.withColumn("fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT))
+    else:
+        dels = dels.join(mapping, ROWID_COL, "inner")
+    existing = {
+        f.id: os.path.join(root, f.deletion_file)
         for f in ds.manifest.fragments
-        if f.deletion_file and f.id in affected
-    ]
-    if existing:
-        old = _with_fid(
-            spark.read.parquet(*[os.path.join(root, p) for p in existing]).select(ROWID_COL)
-        )
-        dels = dels.unionByName(old)
+        if f.deletion_file
+    }
 
     def write_group(pdf):
         import pandas as pd
+        import pyarrow.parquet as pq
 
         fid = int(pdf["fragment_id"].iloc[0])
+        out = pdf[[ROWID_COL]]
+        if fid in existing:
+            old = pq.read_table(existing[fid], columns=[ROWID_COL]).to_pandas()
+            out = pd.concat([out, old])
+        out = out.drop_duplicates().sort_values(ROWID_COL)
         rel = os.path.join("_deletions", f"frag-{fid}-{uuid.uuid4().hex}.parquet")
         abspath = os.path.join(root, rel)
         os.makedirs(os.path.dirname(abspath), exist_ok=True)
-        out = pdf[[ROWID_COL]].drop_duplicates().sort_values(ROWID_COL)
         out.to_parquet(abspath, index=False)
         return pd.DataFrame(
             {"fragment_id": [fid], "path": [rel], "num_deleted": [len(out)]}

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from lance_spark.functions.text import tokenize
+from lance_spark.io import read_table, write_table
 
 END_OF_WORD = "▁"  # sentencepiece-style word-boundary marker
 
@@ -185,8 +186,8 @@ def bpe_save(merges: DataFrame, vocab: DataFrame, model_uri: str) -> str:
     staging = f"{path.rstrip(os.sep)}.staging-{os.getpid()}"
     shutil.rmtree(staging, ignore_errors=True)
     try:
-        merges.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "merges"))
-        vocab.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "vocab"))
+        write_table(merges.coalesce(1), os.path.join(staging, "merges"))
+        write_table(vocab.coalesce(1), os.path.join(staging, "vocab"))
         meta = {"format": "bpe", "end_of_word": END_OF_WORD}
         with open(os.path.join(staging, "meta.json"), "w") as f:
             json.dump(meta, f)
@@ -240,8 +241,8 @@ def bpe_load(spark: SparkSession, model_uri: str) -> tuple[DataFrame, DataFrame]
             f" build's {END_OF_WORD!r}; decode would split on the wrong marker"
         )
     return (
-        spark.read.parquet(os.path.join(path, "merges")),
-        spark.read.parquet(os.path.join(path, "vocab")),
+        read_table(spark, os.path.join(path, "merges")),
+        read_table(spark, os.path.join(path, "vocab")),
     )
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lance_spark.functions.text import tokenize
+from lance_spark.io import read_table, write_table
 
 # char classes, not (?i): the same literal must run on Spark (Java regex)
 # and the DuckDB oracle (RE2) — and a lowercase-only pattern leaves
@@ -382,9 +383,7 @@ def nb_train(
         ]
     )
     os.makedirs(model_uri, exist_ok=True)
-    model.select("t", ll.alias("ll")).write.mode("overwrite").parquet(
-        os.path.join(model_uri, "model")
-    )
+    write_table(model.select("t", ll.alias("ll")), os.path.join(model_uri, "model"))
     with open(os.path.join(model_uri, "meta.json"), "w") as fh:
         _json.dump(
             {
@@ -420,7 +419,7 @@ def nb_score(
     with open(os.path.join(model_uri, "meta.json")) as fh:
         meta = _json.load(fh)
     classes, prior, floor = meta["classes"], meta["prior"], meta["floor"]
-    model = spark.read.parquet(os.path.join(model_uri, "model"))
+    model = read_table(spark, os.path.join(model_uri, "model"))
     # byte-gated broadcast (the unigram-LM-scorer budget): the model is
     # vocabulary-sized AND each row carries a per-class double array, so
     # the gate estimates bytes (rows × row width), not just rows — a 2M-row

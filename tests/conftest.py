@@ -16,7 +16,13 @@ def spark():
     # capture, where the bar's continuous stderr redraws are pure cost
     # (measured on test_query_objects.py; see OPTIMIZATION_r14.md).
     os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
+    # SPARK_GRAFT_TEST_CPUS pins the suite alone; otherwise the suite uses
+    # the CPUs the tier-1 command grants through SPARK_GRAFT_CPUS
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_TEST_CPUS")
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or "8"
+    )
     spark = get_spark("lance_spark-tests", cpus=cpus)
     yield spark
 
