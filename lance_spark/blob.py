@@ -208,81 +208,47 @@ class BlobIterator:
         return next(self._it)
 
 
-def _deleted_rowids_local(ds, frags) -> frozenset:
-    """Union of the given fragments' deletion-sidecar rowids, read
-    driver-side (bounded by the fragments' deleted-row counts) and cached
-    per sidecar path — deletion files are immutable."""
+def _deleted_rowids_local(ds, frag) -> frozenset:
+    """The fragment's deletion-sidecar rowids, read driver-side (bounded by
+    its deleted-row count) and cached per sidecar path — deletion files
+    are immutable."""
+    p = frag.deletion_file
+    if not p:
+        return frozenset()
     cache = ds.__dict__.setdefault("_blob_del_cache", {})
-    out: set[int] = set()
-    for frag in frags:
-        p = frag.deletion_file
-        if not p:
-            continue
-        hit = cache.get(p)
-        if hit is None:
-            hit = frozenset(
-                pq.read_table(ds._abs(p), columns=[ROWID_COL])
-                .column(0)
-                .to_pylist()
-            )
-            cache[p] = hit
-        out |= hit
-    return frozenset(out)
+    hit = cache.get(p)
+    if hit is None:
+        hit = frozenset(
+            pq.read_table(ds._abs(p), columns=[ROWID_COL]).column(0).to_pylist()
+        )
+        cache[p] = hit
+    return hit
 
 
 def blob_files(ds, column: str, rowids: list[int]) -> list[BlobFile]:
     """``take_blobs``-shaped handle constructor: one lazy BlobFile per rowid
-    (reference dataset.py:1500 ``take_blobs`` → list[BlobFile]). Fragment
-    pruning by rowid prefix happens here; row-group pruning inside the file
-    happens at first read. DELETED rowids raise KeyError up front — the
-    blob sidecar is never rewritten on delete, so without the sidecar check
-    a tombstoned row's stale bytes would be served."""
-    from lance_spark.write import FRAGID_SHIFT
+    (reference dataset.py:1500 ``take_blobs`` → list[BlobFile]). Each
+    handle reads only the blob files of the fragments that may hold its
+    rowid (``ds._fragments_holding``); row-group pruning inside a file
+    happens at first read. A rowid no fragment can hold, or a DELETED one,
+    raises KeyError up front — the blob sidecar is never rewritten on
+    delete, so without the sidecar check a tombstoned row's stale bytes
+    would be served."""
+    ds._blob_files(column)  # validates the column
+
+    def files_of(frag) -> list[str]:
+        return [f.path for f in frag.files[1:] if column in f.columns]
 
     out = []
-    rel_paths = ds._blob_files(column)
-    all_paths = [ds._abs(p) for p in rel_paths]
-    addressable = ds._rowid_addressable()
-    frags = {f.id: f for f in ds.manifest.fragments} if addressable else {}
-    if not addressable:
-        deleted = _deleted_rowids_local(ds, ds.manifest.fragments)
-    # del-sets computed ONCE per unique owning fragment — per-rowid
-    # recomputation copied the tombstone set rowids×deleted times (r12)
-    del_by_frag: dict[int, frozenset] = {}
-    if addressable:
-        for fid in {rid >> FRAGID_SHIFT for rid in rowids}:
-            f = frags.get(fid)
-            del_by_frag[fid] = (
-                _deleted_rowids_local(ds, [f]) if f is not None else frozenset()
-            )
     for rid in rowids:
-        frag = frags.get(rid >> FRAGID_SHIFT)
-        if addressable:
-            if frag is None:
-                # the rowid prefix PROVES the row can live in no fragment —
-                # scanning every sidecar would only delay this KeyError
-                raise KeyError(f"rowid {rid}: no fragment {rid >> FRAGID_SHIFT}")
-            del_set = del_by_frag[rid >> FRAGID_SHIFT]
-        else:
-            del_set = deleted
-        if rid in del_set:
+        holders = ds._fragments_holding([rid], file_of=files_of)
+        paths = [ds._abs(p) for f in holders for p in files_of(f)]
+        if not paths:
+            raise KeyError(f"rowid {rid}: no fragment holds it in blob column {column}")
+        if any(rid in _deleted_rowids_local(ds, f) for f in holders):
             raise KeyError(
                 f"rowid {rid} is deleted; its blob bytes are no longer live"
             )
-        if frag is not None and any(column in f.columns for f in frag.files[1:]):
-            paths = [ds._abs(p) for p in ds._blob_files(column, [frag])]
-        elif not frags:
-            # post-compaction: footer-stats pruning (dataset._rowid_range)
-            # narrows each handle to the files whose _rowid range covers it.
-            # An empty hit PROVES absence (files without stats stay in the
-            # hit list), so falling back to scanning every blob file would
-            # only delay the KeyError.
-            paths = [
-                ds._abs(p) for p in rel_paths
-                if (rng := ds._rowid_range(p)) is None or rng[0] <= rid <= rng[1]
-            ]
-        else:
-            paths = all_paths
         out.append(BlobFile(paths, column, rid))
     return out
 

@@ -835,39 +835,51 @@ class LanceDataset:
         preserves ids into new fragments and clears this (config flag)."""
         return bool(self.manifest.config.get("rowid_address_style", True))
 
-    def _rowaddr_df(self, spark: SparkSession) -> DataFrame | None:
-        """``{_rowid, _rowaddr}`` with the TRUE current address
-        ``fragment_id << 32 | position-in-fragment`` (rowaddr contract,
-        rust/lance-core/src/lib.rs:19-36). None on the uncompacted fast
-        path, where ``_rowid`` IS the address. Post-compaction the physical
-        position comes from the parquet reader's ``_metadata.row_index``
-        (JVM-side, no extra shuffle) and the fragment id from the file name
-        (or an explicit per-fragment union for adopted files)."""
-        if self._rowid_addressable():
-            return None
-        import re as _re
+    def _rowid_owners(self, spark: SparkSession, fragments=None) -> DataFrame:
+        """``{_rowid, fragment_id, _rowaddr}`` for every row of the given
+        fragment ids (default: all), from one scan of each fragment's first
+        file. ``_rowaddr`` is the true current address ``fragment_id << 32 |
+        position`` (rust/lance-core/src/lib.rs:19-36): the position comes
+        from the parquet reader's ``_metadata.row_index``, the fragment id
+        from the file name our writer gives it (``frag-<id>-<uuid>``), or
+        from a per-fragment union when a file (e.g. one adopted through
+        ``Fragment.create_from_file``) does not carry its own id."""
+        import re
 
-        frags = self.manifest.fragments
+        wanted = None if fragments is None else {int(f) for f in fragments}
+        frags = [f for f in self.manifest.fragments if wanted is None or f.id in wanted]
+        if not frags:
+            return spark.createDataFrame(
+                [], f"{ROWID_COL} long, fragment_id long, {ROWADDR_COL} long"
+            )
 
         def _embedded_id(path: str):
-            m = _re.search(r"frag-(\d+)-", os.path.basename(path))
+            m = re.search(r"frag-(\d+)-", os.path.basename(path))
             return int(m.group(1)) if m else None
 
-        pos = F.col("_metadata.row_index").cast("long")
-        if all(_embedded_id(f.files[0].path) == f.id for f in frags):
-            raw = read_table(spark, [self._abs(f.files[0].path) for f in frags], ROWID_SCHEMA)
-            fid = F.regexp_extract(
-                F.input_file_name(), r"frag-(\d+)-[^/]*$", 1
-            ).cast("long")
-            return raw.select(
-                ROWID_COL, F.shiftleft(fid, FRAGID_SHIFT).bitwiseOR(pos).alias(ROWADDR_COL)
-            )
-        pieces = [
-            read_table(spark, self._abs(f.files[0].path), ROWID_SCHEMA).select(
+        def owned(df: DataFrame, fid) -> DataFrame:
+            return df.select(
                 ROWID_COL,
-                F.shiftleft(F.lit(f.id).cast("long"), FRAGID_SHIFT)
-                .bitwiseOR(pos)
+                fid.alias("fragment_id"),
+                F.shiftleft(fid, FRAGID_SHIFT)
+                .bitwiseOR(F.col("_metadata.row_index").cast("long"))
                 .alias(ROWADDR_COL),
+            )
+
+        if all(_embedded_id(f.files[0].path) == f.id for f in frags):
+            # one scan instead of an O(fragments)-deep union plan; the regex
+            # is anchored to the basename so a directory named 'frag-<n>-'
+            # cannot win over the file's own id
+            raw = read_table(spark, [self._abs(f.files[0].path) for f in frags], ROWID_SCHEMA)
+            # _metadata.file_path, not the nondeterministic input_file_name():
+            # a deterministic projection lets Spark prune the unused
+            # row_index when a caller selects only {_rowid, fragment_id}
+            fid = F.regexp_extract(F.col("_metadata.file_path"), r"frag-(\d+)-[^/]*$", 1)
+            return owned(raw, fid.cast("long"))
+        pieces = [
+            owned(
+                read_table(spark, self._abs(f.files[0].path), ROWID_SCHEMA),
+                F.lit(f.id).cast("long"),
             )
             for f in frags
         ]
@@ -876,14 +888,48 @@ class LanceDataset:
             out = out.unionByName(p)
         return out
 
+    def _with_fragment_id(
+        self, spark: SparkSession, df: DataFrame, col: str = ROWID_COL,
+        fragments=None, how: str = "inner",
+    ) -> DataFrame:
+        """``df`` plus ``fragment_id``: the fragment holding each row's
+        rowid ``col``. With ``fragments``, rows held elsewhere are dropped
+        (``how="inner"``) or kept with a null ``fragment_id``
+        (``how="left"``, the form the index tail masks use).
+
+        While rowids are addresses this is a pure expression and runs no
+        job; after compaction it joins ``_rowid_owners`` of the requested
+        fragments only."""
+        if not self._rowid_addressable():
+            owners = self._rowid_owners(spark, fragments).select(
+                F.col(ROWID_COL).alias(col), "fragment_id"
+            )
+            return df.join(owners, col, how)
+        fid = F.shiftright(F.col(col), FRAGID_SHIFT)
+        if fragments is None:
+            return df.withColumn("fragment_id", fid)
+        # contiguous id runs become rowid ranges, which parquet can push down
+        import itertools
+
+        held = F.lit(False)
+        ids = sorted({int(f) for f in fragments})
+        for _, run in itertools.groupby(enumerate(ids), lambda p: p[1] - p[0]):
+            run = [f for _, f in run]
+            held = held | F.col(col).between(
+                run[0] << FRAGID_SHIFT, ((run[-1] + 1) << FRAGID_SHIFT) - 1
+            )
+        if how == "inner":
+            return df.filter(held).withColumn("fragment_id", fid)
+        return df.withColumn("fragment_id", F.when(held, fid))
+
     def _attach_row_address(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         """Add ``_rowaddr`` to a DataFrame carrying ``_rowid``. Pre-compaction
         this is a free column alias; afterwards a join against the address
         map — never the stale identity (a consumer mapping addresses back to
         fragments/offsets would silently get dead fragment ids)."""
-        addr = self._rowaddr_df(spark)
-        if addr is None:
+        if self._rowid_addressable():
             return df.withColumn(ROWADDR_COL, F.col(ROWID_COL))
+        addr = self._rowid_owners(spark).select(ROWID_COL, ROWADDR_COL)
         return df.join(addr, ROWID_COL, "left")
 
     def _rowid_range(self, path: str) -> tuple[int, int] | None:
@@ -919,15 +965,19 @@ class LanceDataset:
         cache[path] = rng
         return rng
 
-    def _prune_frags_by_rowid_stats(
-        self, fragments: list, rowids: list[int], file_of=None
-    ) -> list:
-        """Post-compaction fragment pruning: rowids no longer encode the
-        fragment, but each file's footer still bounds its ``_rowid`` values
-        (compaction writes ids in sorted runs). Keep a fragment iff any
-        requested id lands inside one of its files' [min, max] — the
-        TakeExec analogue (take.rs:103) for mid-size id sets. A file with
-        no stats is conservatively kept."""
+    def _fragments_holding(self, rowids: list[int], file_of=None) -> list:
+        """The fragments that may hold any of ``rowids``, decided on the
+        driver with no Spark job (the TakeExec pruning, take.rs:103). While
+        rowids are addresses the prefix names the fragment. After
+        compaction each file's ``_rowid`` footer min/max bounds its ids
+        (compaction writes ids in sorted runs): a fragment is kept iff a
+        requested id falls inside one of its files' ranges, the files being
+        ``file_of(fragment)`` (default: all its data files). A file with no
+        stats is kept."""
+        frags = self.manifest.fragments
+        if self._rowid_addressable():
+            fids = {rid >> FRAGID_SHIFT for rid in rowids}
+            return [f for f in frags if f.id in fids]
         import bisect
 
         rid_sorted = sorted(rowids)
@@ -939,39 +989,30 @@ class LanceDataset:
             i = bisect.bisect_left(rid_sorted, rng[0])
             return i < len(rid_sorted) and rid_sorted[i] <= rng[1]
 
-        out = []
-        for f in fragments:
-            paths = file_of(f) if file_of else [df.path for df in f.files]
-            if any(hit(p) for p in paths):
-                out.append(f)
-        return out
+        return [
+            f for f in frags
+            if any(hit(p) for p in (file_of(f) if file_of else [d.path for d in f.files]))
+        ]
 
     def take(self, spark: SparkSession, rowids: list[int], columns: list[str] | None = None) -> DataFrame:
         """Random access by _rowid (dataset/take.rs:103). Small id sets prune
         to the owning fragments first → targeted file reads, the parquet
-        analogue of Lance's point reads. After compaction the prefix no
-        longer names the fragment, so pruning falls back to parquet _rowid
-        min/max footer stats (rowid runs stay dense per file)."""
-        frags = self.manifest.fragments
-        if self._rowid_addressable():
-            fids = {rid >> FRAGID_SHIFT for rid in rowids}
-            frags = [f for f in frags if f.id in fids]
-        else:
-            frags = self._prune_frags_by_rowid_stats(frags, rowids)
+        analogue of Lance's point reads."""
+        frags = self._fragments_holding(rowids)
         df = self._fragment_df(spark, frags, columns if columns else None)
         df = df.filter(F.col(ROWID_COL).isin(rowids))
         return df.select(*(columns or self.columns), ROWID_COL)
 
     # ------------------------------------------------------------ blobs
 
-    def _blob_files(self, column: str, fragments: list[mf.Fragment] | None = None) -> list[str]:
+    def _blob_files(self, column: str) -> list[str]:
         if column not in (self.manifest.blob_columns or []):
             # the manifest registry is authoritative: any files[1:] group
             # (e.g. an add_columns column group) would otherwise pass as a
             # 'blob store' and serve non-binary cells through BlobFile
             raise ValueError(f"{column} is not a blob column")
         out = []
-        for frag in fragments if fragments is not None else self.manifest.fragments:
+        for frag in self.manifest.fragments:
             for f in frag.files[1:]:
                 if column in f.columns:
                     out.append(f.path)
@@ -995,20 +1036,12 @@ class LanceDataset:
         """Fetch blob bytes for a rowid set (dataset.py:1439-1546 take_blobs):
         fragment-prune → read only those fragments' blob files → rowid filter
         (a ranged read of the out-of-line store)."""
-        frags = self.manifest.fragments
-        if self._rowid_addressable():
-            fids = {rid >> FRAGID_SHIFT for rid in rowids}
-            frags = [f for f in frags if f.id in fids]
-        else:
-            # post-compaction: prune by each blob file's _rowid footer stats
-            # so a small take on a many-fragment dataset opens only the
-            # owning blob files, never the whole store
-            frags = self._prune_frags_by_rowid_stats(
-                frags, rowids,
-                file_of=lambda f: [
-                    df.path for df in f.files[1:] if column in df.columns
-                ],
-            )
+        # a small take on a many-fragment dataset opens only the owning
+        # blob files, never the whole store
+        frags = self._fragments_holding(
+            rowids,
+            file_of=lambda f: [df.path for df in f.files[1:] if column in df.columns],
+        )
         self._blob_files(column)  # validate the column even if pruning emptied frags
         paths = [p for f in frags for df in f.files[1:] if column in df.columns
                  for p in [df.path]]

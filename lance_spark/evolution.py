@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from lance_spark import manifest as mf
-from lance_spark.write import FRAGID_SHIFT, ROWID_COL
+from lance_spark.write import ROWID_COL
 
 _CG_META_SCHEMA = StructType(
     [
@@ -39,20 +39,14 @@ _CG_META_SCHEMA = StructType(
 
 
 def _write_column_groups(
-    root: str, new_cols_df: DataFrame, new_cols: list[str], checkpoint=None,
-    fn=None, fn_read_cols: list[str] | None = None, fn_out_schema=None,
-    fid_map: DataFrame | None = None,
+    ds, spark: SparkSession, new_cols_df: DataFrame, new_cols: list[str],
+    checkpoint=None, fn=None, fn_read_cols: list[str] | None = None,
+    fn_out_schema=None, fragments=None,
 ) -> dict[int, str]:
     """Write {_rowid, *new_cols} as one parquet per fragment; returns
-    {fragment_id: rel_path}. Distributed one-task-per-fragment.
-
-    ``fid_map`` (a ``{_rowid, fragment_id}`` DataFrame from
-    ``mutation._rowid_fragment_map``) MUST be supplied for post-compaction
-    datasets (``rowid_address_style=False``): there rowids no longer encode
-    the owning fragment, so the shiftright derivation would key the
-    column-group files to dead fragment ids — the commit would then attach
-    them to no live fragment and every subsequent read of the dataset fails
-    on the schema-promised-but-missing column.
+    {fragment_id: rel_path}. Distributed one-task-per-fragment, keyed by
+    ``ds._with_fragment_id`` (``fragments`` narrows that lookup for a
+    per-fragment caller).
 
     With ``fn`` (the checkpointed-BatchUDF path) the UDF runs INSIDE the
     fragment task, so one fragment's failure leaves sibling fragments'
@@ -71,6 +65,7 @@ def _write_column_groups(
             StructType([StructField(ROWID_COL, LongType())] + list(fn_out_schema.fields))
         )
     ckpt_path = checkpoint.path if checkpoint is not None else None
+    root = ds.uri
 
     def write_group(pdf):
         import pandas as pd
@@ -97,18 +92,9 @@ def _write_column_groups(
             FragmentCheckpoint(ckpt_path).put(fid, rel, len(out), columns=new_cols)
         return pd.DataFrame({"fragment_id": [fid], "path": [rel], "num_rows": [len(out)]})
 
-    if fid_map is None:
-        keyed = new_cols_df.withColumn(
-            "fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT)
-        )
-    else:
-        keyed = new_cols_df.join(
-            fid_map.select(ROWID_COL, F.col("fragment_id").cast("long").alias("fragment_id")),
-            ROWID_COL,
-            "inner",
-        )
     meta = (
-        keyed.groupBy("fragment_id")
+        ds._with_fragment_id(spark, new_cols_df, fragments=fragments)
+        .groupBy("fragment_id")
         .applyInPandas(write_group, _CG_META_SCHEMA)
         .collect()
     )
@@ -217,12 +203,7 @@ def add_columns(ds, spark: SparkSession, transforms, read_columns: list[str] | N
             for f in transforms
         }
 
-    from lance_spark.mutation import _rowid_fragment_map
-
     base = ds.to_df(spark, with_row_id=True)
-    # post-compaction rowids don't encode the owning fragment; the map
-    # (None on the uncompacted fast path) keys column-group files correctly
-    fid_map = _rowid_fragment_map(ds, spark)
     checkpoint = None
 
     if callable(transforms):
@@ -252,18 +233,11 @@ def add_columns(ds, spark: SparkSession, transforms, read_columns: list[str] | N
             if done:
                 # resume: skip completed fragments BEFORE the UDF runs —
                 # the fragment-id filter prunes whole fragments at the scan
-                if fid_map is None:
-                    base = base.filter(
-                        ~F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT).isin(list(done))
-                    )
-                else:
-                    base = base.join(
-                        fid_map.filter(
-                            F.col("fragment_id").isin([int(k) for k in done])
-                        ).select(ROWID_COL),
-                        ROWID_COL,
-                        "left_anti",
-                    )
+                base = (
+                    ds._with_fragment_id(spark, base, fragments=done, how="left")
+                    .filter(F.col("fragment_id").isNull())
+                    .drop("fragment_id")
+                )
             # the UDF must run INSIDE the per-fragment write task (not a
             # map stage before the shuffle barrier): a failure on one
             # fragment then can't prevent sibling fragments from finishing
@@ -273,9 +247,9 @@ def add_columns(ds, spark: SparkSession, transforms, read_columns: list[str] | N
                 raise ValueError(f"columns already exist: {sorted(collide)}")
             src = base.select(ROWID_COL, *(read_columns or ds.columns))
             cg_map = _write_column_groups(
-                ds.uri, src, new_cols, checkpoint=checkpoint,
+                ds, spark, src, new_cols, checkpoint=checkpoint,
                 fn=fn, fn_read_cols=read_columns or ds.columns,
-                fn_out_schema=out_schema, fid_map=fid_map,
+                fn_out_schema=out_schema,
             )
             cg_map.update(
                 {
@@ -301,7 +275,7 @@ def add_columns(ds, spark: SparkSession, transforms, read_columns: list[str] | N
     collide = set(new_cols) & set(ds.columns)
     if collide:
         raise ValueError(f"columns already exist: {sorted(collide)}")
-    cg_map = _write_column_groups(ds.uri, new_df, new_cols, fid_map=fid_map)
+    cg_map = _write_column_groups(ds, spark, new_df, new_cols)
     return _commit_new_columns(ds, cg_map, new_fields_json(new_df, new_cols), new_cols)
 
 
@@ -336,8 +310,6 @@ def merge(ds, spark: SparkSession, right: DataFrame, left_on: str, right_on: str
         from lance_spark.types import normalize_arrow_table
 
         right = spark.createDataFrame(normalize_arrow_table(right))
-    from lance_spark.mutation import _rowid_fragment_map
-
     right_on = right_on or left_on
     new_cols = [c for c in right.columns if c != right_on]
     existing = {f["name"] for f in ds.manifest.schema_json["fields"]}
@@ -353,9 +325,7 @@ def merge(ds, spark: SparkSession, right: DataFrame, left_on: str, right_on: str
         on=left_on,
         how="left",
     ).select(ROWID_COL, *new_cols)
-    cg_map = _write_column_groups(
-        ds.uri, joined, new_cols, fid_map=_rowid_fragment_map(ds, spark)
-    )
+    cg_map = _write_column_groups(ds, spark, joined, new_cols)
     new_fields = [
         f
         for f in right.schema.jsonValue()["fields"]

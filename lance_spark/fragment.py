@@ -21,8 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lance_spark import manifest as mf
-from lance_spark.io import ROWID_SCHEMA, read_table
-from lance_spark.write import FRAGID_SHIFT, ROWID_COL
+from lance_spark.write import ROWID_COL
 
 
 class LanceFragment:
@@ -231,11 +230,8 @@ class LanceFragment:
         collide = set(new_cols) & set(self._ds.columns)
         if collide:
             raise ValueError(f"columns already exist: {sorted(collide)}")
-        from lance_spark.mutation import _rowid_fragment_map
-
         cg_map = _write_column_groups(
-            self._ds.uri, new_df, new_cols,
-            fid_map=_rowid_fragment_map(self._ds, spark, fragments=[self._meta]),
+            self._ds, spark, new_df, new_cols, fragments=[self.id]
         )
         path = cg_map[self.id]
         meta = self._meta
@@ -285,7 +281,6 @@ class LanceFragment:
         if left_on not in self._ds.columns:
             raise ValueError(f"left_on {left_on!r} is not a dataset column")
         from lance_spark.evolution import dedup_right_keys
-        from lance_spark.mutation import _rowid_fragment_map
 
         base = self.scanner(spark, columns=[left_on], with_row_id=True)
         joined = base.join(
@@ -294,8 +289,7 @@ class LanceFragment:
             how="left",
         ).select(ROWID_COL, *new_cols)
         cg_map = _write_column_groups(
-            self._ds.uri, joined, new_cols,
-            fid_map=_rowid_fragment_map(self._ds, spark, fragments=[self._meta]),
+            self._ds, spark, joined, new_cols, fragments=[self.id]
         )
         meta = self._meta
         new_frag = mf.Fragment(
@@ -437,6 +431,8 @@ class LanceFragment:
         FragmentSession semantics (r12 review: the old arithmetic silently
         returned an EMPTY table on compacted fragments)."""
         if self._ds._rowid_addressable():
+            from lance_spark.write import FRAGID_SHIFT
+
             base = self.id << FRAGID_SHIFT
             rowids = [base + int(i) for i in indices]
             return self._ds.take(spark, rowids, columns=columns)
@@ -448,22 +444,18 @@ class LanceFragment:
         """Fragment-scoped delete (fragment.py:780-824): rows of OTHER
         fragments never match, so only this fragment's deletion sidecar
         changes. Returns the updated dataset (functional, like all
-        mutations here). Post-compaction, rowids no longer encode the
-        owning fragment — the scope comes from this fragment's OWN primary
-        file's rowid set instead of the <<32 range (which silently
-        no-op'd; r12 review)."""
-        if self._ds._rowid_addressable():
-            lo = self.id << FRAGID_SHIFT
-            hi = (self.id + 1) << FRAGID_SHIFT
-            scoped = f"({predicate}) AND _rowid >= {lo} AND _rowid < {hi}"
-            return self._ds.delete(spark, scoped)
-        # rowids within one rewritten fragment are preserved, not re-based:
-        # scope by the EXACT membership set from the fragment's own file —
-        # as a semi-join frame, NOT an enumerated `_rowid IN (...)` literal
-        # (a compacted fragment holds ~millions of rowids; the string form
-        # was a multi-MB predicate Catalyst had to parse)
-        rid_df = read_table(spark, self._ds._abs(self._meta.files[0].path), ROWID_SCHEMA)
-        return self._ds.delete(spark, predicate, scope_rowids=rid_df)
+        mutations here). The scope is the set of rows this fragment holds
+        (``_with_fragment_id``), in either rowid regime."""
+        from lance_spark.mutation import _apply_deletes_and_appends, _retrying
+
+        def run(d):
+            hits = d.scanner(spark, filter=predicate, with_row_id=True).select(ROWID_COL)
+            held = d._with_fragment_id(spark, hits, fragments=[self.id])
+            return _apply_deletes_and_appends(
+                d, spark, held.select(ROWID_COL), None, "delete"
+            )
+
+        return _retrying(self._ds, run)
 
 
 class FragmentSession:

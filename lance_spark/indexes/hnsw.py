@@ -268,15 +268,14 @@ def hnsw_search(
     ef_search: int = 64,
     prefilter_rowids: DataFrame | None = None,
     refine_factor: int = 1,
-    exclude_fragments: list[int] | None = None,
-    rowid_map: DataFrame | None = None,
+    tail_mask=None,
 ) -> DataFrame:
     """Probe nprobes partitions; traverse each probed HNSW graph in its own
     task; merge per-partition candidates into a global top-k. With delta
     segments, each (segment, partition) graph is traversed independently
     and candidates merge — the reference searches delta indices the same
-    way. ``exclude_fragments`` masks emitted candidates (like prefilter,
-    masked nodes stay routing waypoints).
+    way. Rows ``tail_mask`` marks (see ``vector._drop_tail``) are never
+    emitted but, like prefiltered-out nodes, stay routing waypoints.
 
     FLAT scores raw vectors during traversal (exact distances, no refine
     needed); the PQ variant scores an ADC lookup over the stored codes and
@@ -308,22 +307,10 @@ def hnsw_search(
     # traversal so disallowed nodes stay waypoints but never crowd the ef
     # result slots (post-filtering could return < k allowed rows)
     ok_col = None
-    if exclude_fragments:
-        if rowid_map is not None:
-            graph = graph.join(
-                rowid_map.withColumnRenamed("_rowid", "id"), "id", "left"
-            ).withColumn(
-                "__ok_excl",
-                ~F.coalesce(
-                    F.col("fragment_id").isin([int(x) for x in exclude_fragments]),
-                    F.lit(False),
-                ),
-            ).drop("fragment_id")
-        else:
-            graph = graph.withColumn(
-                "__ok_excl",
-                ~F.shiftright(F.col("id"), 32).isin([int(x) for x in exclude_fragments]),
-            )
+    if tail_mask is not None:
+        graph = tail_mask(graph).withColumn(
+            "__ok_excl", F.col("fragment_id").isNull()
+        ).drop("fragment_id")
         ok_col = F.col("__ok_excl")
     if prefilter_rowids is not None:
         allow = prefilter_rowids.toDF("id").withColumn("__allow", F.lit(True))

@@ -233,15 +233,13 @@ def _index_tables(ds, spark: SparkSession, meta) -> tuple[DataFrame, DataFrame]:
     covered = set(meta.fragment_ids)
     tail = [f.id for f in ds.manifest.fragments if f.id not in covered]
     if tail:
-        from lance_spark.indexes.vector import _mask_fragments
-        from lance_spark.mutation import _rowid_fragment_map
+        from lance_spark.indexes.vector import _drop_tail, _tail_mask
 
-        # post-compaction, rowids no longer encode the owning fragment —
-        # the shiftright mask would silently miss compaction-created
-        # fragments and double-count their term frequencies
-        rmap = _rowid_fragment_map(ds, spark)
-        postings = _mask_fragments(postings, "id", tail, rmap)
-        doclens = _mask_fragments(doclens, "id", tail, rmap)
+        # the tail is flat-tokenized below: its index copies must not
+        # double-count term frequencies
+        tail_mask = _tail_mask(ds, spark, tail)
+        postings = _drop_tail(postings, tail_mask)
+        doclens = _drop_tail(doclens, tail_mask)
         flat = ds.scanner(spark, columns=[meta.column], with_row_id=True, fragments=tail)
         p2, d2 = _flat_postings(
             flat, meta.column, ROWID_COL, meta.params.get("tokenizer", "simple")
@@ -308,7 +306,7 @@ def extend_inverted(ds, spark: SparkSession, meta) -> list[str]:
         return segs
     seg = f"seg_v{_next_seg_num(base, segs, meta.params.get('retired_segments')) + 1}"
     flat = ds.scanner(spark, columns=[meta.column], with_row_id=True, fragments=tail)
-    if not ds.manifest.config.get("rowid_address_style", True):
+    if not ds._rowid_addressable():
         # post-compaction hazard (same as extend_ivf's dedup_existing):
         # compaction preserves rowids into NEW fragments and a mixed-victim
         # rewrite leaves its output uncovered even though some of its rows

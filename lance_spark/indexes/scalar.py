@@ -40,7 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lance_spark.io import read_table, write_table
-from lance_spark.write import FRAGID_SHIFT, ROWID_COL
+from lance_spark.write import ROWID_COL
+
+
+#: Kinds whose entries are keyed by fragment id rather than rowid: a
+#: compaction leaves their entries naming the rewritten (dead) fragments.
+FRAGMENT_KEYED = frozenset({"ZONEMAP", "BLOOMFILTER"})
 
 
 @dataclass
@@ -108,7 +113,7 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
         )
     elif kind == "ZONEMAP":
         out = (
-            df.withColumn("fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT))
+            ds._with_fragment_id(spark, df)
             .groupBy("fragment_id")
             .agg(
                 F.min(column).alias("min"),
@@ -127,7 +132,7 @@ def build_scalar_index(ds, spark: SparkSession, column: str, kind: str, uri: str
         nbits = int(params.setdefault("nbits", 1 << 16))
         params["value_type"] = df.schema[column].dataType.simpleString()
         out = (
-            df.withColumn("fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT))
+            ds._with_fragment_id(spark, df)
             .select("fragment_id", F.col(column).cast("string").alias("value"))
             .withColumn("h", F.xxhash64("value"))
             .groupBy("fragment_id")
@@ -614,8 +619,8 @@ def _eval_tree(ds, spark: SparkSession, node, by_col) -> IndexResult | None:
         for r in results[1:]:
             rowids = rowids.unionByName(r.rowids)
         return IndexResult(rowids=rowids.distinct(), exact=all(r.exact for r in results))
-    # mixed rowid/fragment branches: fall back to the fragment union
-    # (rowids imply their fragments via the address prefix)
+    # mixed rowid/fragment branches: fall back to the fragment union, a
+    # rowid branch contributing the fragments that hold its rows
     frs: set[int] = set()
     for r in results:
         if r.fragments is not None:
@@ -623,9 +628,8 @@ def _eval_tree(ds, spark: SparkSession, node, by_col) -> IndexResult | None:
         else:
             frs |= {
                 row[0]
-                for row in r.rowids.select(
-                    F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT)
-                ).distinct().collect()
+                for row in ds._with_fragment_id(spark, r.rowids)
+                .select("fragment_id").distinct().collect()
             }
     return IndexResult(fragments=sorted(frs), exact=False)
 

@@ -25,6 +25,7 @@ write is exactly the reference's index-build shuffler
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -43,34 +44,25 @@ from lance_spark.io import read_table, write_table
 _MAX_REFINE_CANDIDATES = 1_000_000
 
 
-def _mask_fragments(
-    df: DataFrame, id_col: str, exclude_fragments, rowid_map: DataFrame | None = None
-) -> DataFrame:
-    """Drop rows whose ``_rowid`` belongs to one of the given fragments
-    (``_rowid`` = fragment_id << 32 | offset, write.py:13). The guard that
-    makes a torn delta-optimize harmless: rows the manifest still lists as
-    uncovered are flat-searched, so their index copies must not score.
-
-    ``rowid_map`` (``mutation._rowid_fragment_map``) MUST be supplied when
-    the dataset has been compacted (manifest flag
-    ``rowid_address_style=False``): compaction preserves rowids into NEW
-    fragments, so the shiftright fast path would derive the pre-compaction
-    owner and silently fail to mask — index copies and the flat tail would
-    then double-count the same rows during the uncovered window."""
-    if not exclude_fragments:
-        return df
-    if rowid_map is not None:
-        from lance_spark.write import ROWID_COL
-
-        bad = rowid_map.filter(
-            F.col("fragment_id").isin([int(f) for f in exclude_fragments])
-        ).select(F.col(ROWID_COL).alias(id_col))
-        return df.join(bad, id_col, "left_anti")
-    from lance_spark.write import FRAGID_SHIFT
-
-    return df.filter(
-        ~F.shiftright(F.col(id_col), FRAGID_SHIFT).isin([int(f) for f in exclude_fragments])
+def _tail_mask(ds, spark: SparkSession, tail: list[int]):
+    """The ``tail_mask`` argument of the index search paths: a function
+    that sets ``fragment_id`` on the ``id`` rows held by the fragments the
+    index does not cover yet (``tail``) and leaves it null elsewhere. None
+    when the index covers every fragment."""
+    if not tail:
+        return None
+    return functools.partial(
+        ds._with_fragment_id, spark, col="id", fragments=tail, how="left"
     )
+
+
+def _drop_tail(df: DataFrame, tail_mask) -> DataFrame:
+    """``df`` without the rows ``tail_mask`` marks. The guard that makes a
+    torn delta-optimize harmless: rows the manifest still lists as
+    uncovered are flat-searched, so their index copies must not score."""
+    if tail_mask is None:
+        return df
+    return tail_mask(df).filter(F.col("fragment_id").isNull()).drop("fragment_id")
 
 
 def _as_matrix(series: pd.Series) -> np.ndarray:
@@ -136,7 +128,7 @@ class IvfIndex:
     and readers scan the union. Segment visibility flips atomically with
     an os.replace of meta.json; rows belonging to fragments the MANIFEST
     still lists as uncovered are masked at the dataset layer
-    (exclude_fragments), so a torn delta (segment visible, manifest
+    (``tail_mask``), so a torn delta (segment visible, manifest
     commit lost) never double-counts against the flat tail."""
 
     def __init__(self, uri: str):
@@ -171,19 +163,16 @@ class IvfIndex:
             os.path.join(self.uri, "hnsw" + s[len("codes"):]) for s in self.segments
         ]
 
-    def codes_df(
-        self, spark: SparkSession, exclude_fragments=None, rowid_map=None
-    ) -> DataFrame:
-        """All code segments unioned; ``exclude_fragments`` masks rows of
-        manifest-uncovered fragments (they are flat-searched instead;
-        ``rowid_map`` required post-compaction, see ``_mask_fragments``).
-        Segments are separate hive-partitioned roots, so each reads on its
-        own (multi-root partition discovery conflicts otherwise)."""
+    def codes_df(self, spark: SparkSession, tail_mask=None) -> DataFrame:
+        """All code segments unioned, minus the rows ``tail_mask`` marks
+        (see ``_drop_tail``). Segments are separate hive-partitioned roots,
+        so each reads on its own (multi-root partition discovery conflicts
+        otherwise)."""
         df = None
         for p in self.codes_paths():
             d = read_table(spark, p)
             df = d if df is None else df.unionByName(d, allowMissingColumns=True)
-        return _mask_fragments(df, "id", exclude_fragments, rowid_map)
+        return _drop_tail(df, tail_mask)
 
     @property
     def metric(self) -> str:
@@ -948,7 +937,7 @@ def extend_ivf(
     existing segment intersecting the new fragment set before writing —
     the replay supersedes the torn attempt instead of double-adding its
     rows. Until the coverage commit lands, readers mask the segment's
-    rows per-fragment (exclude_fragments), so the torn window reads
+    rows per-fragment (``tail_mask``), so the torn window reads
     consistently too.
 
     Scale: cost is one assign+encode pass over the NEW rows plus their
@@ -962,8 +951,8 @@ def extend_ivf(
     UNCOVERED even though the covered victims' rows are already encoded in
     a committed segment. Blindly re-encoding the tail would make both
     copies permanently visible (duplicate ANN hits inside top-k). When
-    set (optimize_indices passes it iff the manifest says
-    ``rowid_address_style=False``), rows whose ids already appear in a
+    set (optimize_indices passes it once compaction has decoupled rowids
+    from fragments), rows whose ids already appear in a
     KEPT segment are anti-joined away — an id-column-only read of the
     index, never the corpus vectors."""
     vec_col = index.meta["vec_col"]
@@ -1153,8 +1142,7 @@ def ann_search(
     refine_factor: int = 1,
     prefilter_rowids: DataFrame | None = None,
     ef_search: int = 64,
-    exclude_fragments: list[int] | None = None,
-    rowid_map: DataFrame | None = None,
+    tail_mask=None,
 ) -> DataFrame:
     """ANN top-k: partition prune → (prefilter) → score → topk → optional
     exact refine.
@@ -1172,8 +1160,7 @@ def ann_search(
 
         return hnsw_search(
             spark, index, query, k, nprobes, ef_search, prefilter_rowids,
-            refine_factor, exclude_fragments=exclude_fragments,
-            rowid_map=rowid_map,
+            refine_factor, tail_mask=tail_mask,
         )
     # The refine stage collects k·refine_factor (id, _approx) rows to the
     # driver; cap it at a corpus-independent bound so a wide-fetch
@@ -1183,7 +1170,7 @@ def ann_search(
     n_cand = min(k * max(refine_factor, 1), _MAX_REFINE_CANDIDATES)
     q = _query_prep(index, query)
     probes = probe_partitions(index, query, nprobes)
-    codes = index.codes_df(spark, exclude_fragments, rowid_map).filter(
+    codes = index.codes_df(spark, tail_mask).filter(
         F.col("partition_id").isin(probes)
     )
     if prefilter_rowids is not None:
@@ -1461,8 +1448,7 @@ def ann_join(
     nprobes: int = 4,
     use_codes: bool = False,
     refine_factor: int = 4,
-    exclude_fragments: list[int] | None = None,
-    rowid_map: DataFrame | None = None,
+    tail_mask=None,
 ) -> DataFrame:
     """Distributed ANN JOIN: top-``k`` indexed neighbors for EVERY query
     row → ``(query_id, id, _distance)``. The bulk-retrieval shape
@@ -1535,7 +1521,7 @@ def ann_join(
         )
 
     if not (use_codes and index.codebooks is not None):
-        codes = index.codes_df(spark, exclude_fragments, rowid_map).select(
+        codes = index.codes_df(spark, tail_mask).select(
             "partition_id", "id", "vec"
         )
         scored = q.join(codes, "partition_id").select(
@@ -1568,7 +1554,7 @@ def ann_join(
             out[mask] = lut[cols, codes_m[mask]].sum(axis=1)
         return pd.Series(out)
 
-    code_tbl = index.codes_df(spark, exclude_fragments, rowid_map).select(
+    code_tbl = index.codes_df(spark, tail_mask).select(
         "partition_id", "id", "pq_code"
     )
     approx = q.join(code_tbl, "partition_id").select(
@@ -1593,7 +1579,7 @@ def ann_join(
     # the refine side uses the SAME masked codes view as the approx pass:
     # an unmasked read could see the same id in two visible segments (torn
     # delta) and double-count one survivor into two rank slots (r12 fix)
-    vec_tbl = index.codes_df(spark, exclude_fragments, rowid_map).select(
+    vec_tbl = index.codes_df(spark, tail_mask).select(
         "partition_id", "id", "vec"
     )
     qvecs = queries.filter(F.col(query_vec_col).isNotNull()).select(
@@ -1622,8 +1608,7 @@ def ann_maxsim(
     nprobes: int = 4,
     overfetch: int = 10,
     refine_factor: int = 1,
-    exclude_fragments: list[int] | None = None,
-    rowid_map: DataFrame | None = None,
+    tail_mask=None,
 ) -> DataFrame:
     """Index-accelerated MULTIVECTOR (ColBERT/XTR) search: maxsim top-k
     through the IVF index → ``(id, _distance)`` with
@@ -1666,7 +1651,7 @@ def ann_maxsim(
     out = ann_maxsim_join(
         spark, index, qdf, "mv", "qid", k=k, nprobes=nprobes,
         overfetch=overfetch, refine_factor=refine_factor,
-        exclude_fragments=exclude_fragments, rowid_map=rowid_map,
+        tail_mask=tail_mask,
     )
     return out.drop("query_id").orderBy(F.asc_nulls_last("_distance"), "id")
 
@@ -1681,8 +1666,7 @@ def ann_maxsim_join(
     nprobes: int = 4,
     overfetch: int = 10,
     refine_factor: int = 1,
-    exclude_fragments: list[int] | None = None,
-    rowid_map: DataFrame | None = None,
+    tail_mask=None,
 ) -> DataFrame:
     """BULK multivector (ColBERT/XTR) maxsim: top-``k`` docs for EVERY
     query row of a multivector-query TABLE → ``(query_id, id, _distance)``
@@ -1716,7 +1700,7 @@ def ann_maxsim_join(
     nq = sub.groupBy("__qid").agg(F.count("*").alias("__nq"))
     cand = ann_join(
         spark, index, sub, "__qv", "__subq", k=k * max(overfetch, 1), nprobes=nprobes,
-        exclude_fragments=exclude_fragments, rowid_map=rowid_map,
+        tail_mask=tail_mask,
     ).select(
         F.col("query_id.__qid").alias("__qid"),
         F.col("query_id.__qpos").alias("__qpos"),
@@ -1889,19 +1873,15 @@ def _indexed_hits_with_tail(
     live-rowid gated — the knn_combined split (scanner.rs:2946-3029) shared
     by dataset_nearest, dataset_nearest_join, and the multivector route (a
     fix applied to one copy previously had to be re-applied three times;
-    r12 judge item). ``indexed_fn(index, tail, rmap)`` searches the indexed
+    r12 judge item). ``indexed_fn(index, tail_mask)`` searches the indexed
     fragments with the torn-delta mask; ``flat_fn(flat)`` scores the
     unindexed-tail scanner frame exactly."""
-    from lance_spark.mutation import _rowid_fragment_map
     from lance_spark.write import ROWID_COL
 
     index = IvfIndex(os.path.join(ds.uri, meta.path))
     covered = set(meta.fragment_ids)
     tail = [f.id for f in ds.manifest.fragments if f.id not in covered]
-    # post-compaction, rowids no longer encode the owning fragment —
-    # masking needs the (_rowid → fragment_id) mapping (None = fast path)
-    rmap = _rowid_fragment_map(ds, spark) if tail else None
-    hits = indexed_fn(index, tail, rmap)
+    hits = indexed_fn(index, _tail_mask(ds, spark, tail))
     if tail and not fast_search:
         flat = ds.scanner(spark, columns=[column], with_row_id=True, fragments=tail)
         hits = hits.unionByName(flat_fn(flat))
@@ -2005,7 +1985,7 @@ def dataset_nearest(
                 f"{meta.params['metric']!r} index on {column!r}"
             )
 
-        def _indexed(index, tail, rmap):
+        def _indexed(index, tail_mask):
             return ann_search(
                 spark, index, query, k=_k_overfetch(ds, k), nprobes=nprobes,
                 refine_factor=refine_factor,
@@ -2013,8 +1993,7 @@ def dataset_nearest(
                 # torn-delta guard: index rows of still-uncovered fragments
                 # are flat-searched by the tail union, so the index copies
                 # must not also score
-                exclude_fragments=tail,
-                rowid_map=rmap,
+                tail_mask=tail_mask,
             )
 
         def _flat(flat):
@@ -2088,24 +2067,14 @@ def _multivector_nearest_hits(
         if allow is not None:
             full = full.join(_gated_broadcast(allow), ROWID_COL, "left_semi")
         return flat_hits(full)
-    from lance_spark.mutation import _rowid_fragment_map
-
-    index = IvfIndex(os.path.join(ds.uri, meta.path))
-    covered = set(meta.fragment_ids)
-    tail = [f.id for f in ds.manifest.fragments if f.id not in covered]
-    rmap = _rowid_fragment_map(ds, spark) if tail else None
-    hits = ann_maxsim(
-        spark, index, qs, k=_k_overfetch(ds, k), nprobes=nprobes,
-        refine_factor=refine_factor,
-        overfetch=overfetch, exclude_fragments=tail, rowid_map=rmap,
-    )
-    if tail and not fast_search:
-        flat = ds.scanner(spark, columns=[column], with_row_id=True, fragments=tail)
-        hits = hits.unionByName(flat_hits(flat))
-    return hits.join(
-        ds.to_df(spark, with_row_id=True).select(F.col(ROWID_COL).alias("id")),
-        on="id",
-        how="left_semi",
+    return _indexed_hits_with_tail(
+        ds, spark, column, meta,
+        lambda index, tail_mask: ann_maxsim(
+            spark, index, qs, k=_k_overfetch(ds, k), nprobes=nprobes,
+            refine_factor=refine_factor, overfetch=overfetch, tail_mask=tail_mask,
+        ),
+        flat_hits,
+        fast_search,
     )
 
 
@@ -2192,11 +2161,11 @@ def dataset_nearest_join(
             ).withColumnRenamed("id", ROWID_COL)
         hits = _indexed_hits_with_tail(
             ds, spark, column, meta,
-            lambda index, tail, rmap: ann_maxsim_join(
+            lambda index, tail_mask: ann_maxsim_join(
                 spark, index, queries, query_vec_col, query_id_col,
                 k=_k_overfetch(ds, k),
                 nprobes=nprobes, refine_factor=refine_factor, overfetch=overfetch,
-                exclude_fragments=tail, rowid_map=rmap,
+                tail_mask=tail_mask,
             ),
             lambda flat: multivector_maxsim_join(
                 flat, column, ROWID_COL, queries, query_vec_col, query_id_col, k=k
@@ -2226,12 +2195,11 @@ def dataset_nearest_join(
     else:
         hits = _indexed_hits_with_tail(
             ds, spark, column, meta,
-            lambda index, tail, rmap: ann_join(
+            lambda index, tail_mask: ann_join(
                 spark, index, queries, query_vec_col, query_id_col,
                 k=_k_overfetch(ds, k),
                 nprobes=nprobes, use_codes=use_codes, refine_factor=refine_factor,
-                exclude_fragments=tail,
-                rowid_map=rmap,
+                tail_mask=tail_mask,
             ),
             lambda flat: knn_batch(
                 flat, queries, column, ROWID_COL, query_id_col,

@@ -10,10 +10,10 @@ Reference semantics:
 
 Spark-first HOW: because ``_rowid`` is a materialized column, compaction just
 carries it through the rewrite — stable ids for free. After compaction a
-fragment's rowids are no longer ``fragment_id<<32|offset``-aligned, so the
-manifest flags ``rowid_address_style=false`` and point lookups fall back to
-parquet min/max pruning on the pushed ``_rowid IN (...)`` filter (rowid runs
-stay dense per file, so row-group stats prune well).
+fragment's rowids are no longer ``fragment_id<<32|offset``-aligned; the
+commit records that in the manifest config, and from then on the dataset
+(``LanceDataset._with_fragment_id`` / ``_fragments_holding``) answers which
+fragment holds a rowid from the files themselves.
 """
 
 from __future__ import annotations
@@ -169,16 +169,20 @@ class Compaction:
             cfg = dict(base.config)
             cfg["rowid_address_style"] = False
             # Remap index coverage (Operation::Rewrite remap, optimize.rs:982):
-            # rowids are stable so index entries stay valid; a task's new
-            # fragments are covered iff every victim that task absorbed was
-            # covered (rows from an unindexed victim would otherwise be
-            # wrongly skipped by fast_search).
+            # rowids are stable so rowid-keyed entries stay valid; a task's
+            # new fragments are covered iff every victim that task absorbed
+            # was covered (rows from an unindexed victim would otherwise be
+            # wrongly skipped by fast_search). Fragment-keyed entries name
+            # the victims, so their new fragments stay uncovered until
+            # optimize_indices rebuilds them.
+            from lance_spark.indexes.scalar import FRAGMENT_KEYED
+
             indices = []
             for i in base.indices:
                 cov = set(i.fragment_ids)
                 fids = cov - all_victims
                 for r in rewrites:
-                    if set(r.victim_ids) <= cov:
+                    if set(r.victim_ids) <= cov and i.index_type not in FRAGMENT_KEYED:
                         fids |= {f.id for f in r.new_fragments}
                 indices.append(
                     mf.IndexMeta(
@@ -288,10 +292,10 @@ def optimize_indices(
 
                 df = df.select(ROWID_COL, F.explode(meta.column).alias(meta.column))
             index = IvfIndex(os.path.join(out.uri, meta.path))
-            # post-compaction (rowid_address_style=False) the tail may hold
-            # rowids already encoded in a committed segment — dedup them or
-            # both copies become permanently visible (ADVICE r9 #1)
-            dedup = not out.manifest.config.get("rowid_address_style", True)
+            # post-compaction the tail may hold rowids already encoded in a
+            # committed segment — dedup them or both copies become
+            # permanently visible (ADVICE r9 #1)
+            dedup = not out._rowid_addressable()
             index = extend_ivf(index, spark, df, fragments=tail, dedup_existing=dedup)
             out = _commit_index_coverage(out, meta.name)
             # merge only COMMITTED segments: a torn merge is then a pure

@@ -32,8 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from lance_spark import manifest as mf
-from lance_spark.io import ROWID_SCHEMA, read_table
-from lance_spark.write import FRAGID_SHIFT, ROWID_COL, write_fragments
+from lance_spark.write import ROWID_COL, write_fragments
 
 _DEL_META_SCHEMA = StructType(
     [
@@ -42,54 +41,6 @@ _DEL_META_SCHEMA = StructType(
         StructField("num_deleted", LongType()),
     ]
 )
-
-
-def _rowid_fragment_map(ds, spark: SparkSession, fragments=None) -> DataFrame | None:
-    """(_rowid → fragment_id) for datasets where rowids no longer encode the
-    owning fragment (after compaction preserves ids into NEW fragments,
-    config flag rowid_address_style=False). None = shiftright fast path is
-    exact. The mapping scan reads only the _rowid column (parquet prunes).
-    ``fragments`` restricts the map to the given fragment metas — a
-    per-fragment caller (fragment.merge/merge_columns) must not scan the
-    WHOLE dataset's rowids, or its documented each-worker-merges-its-
-    fragments pattern goes O(fragments²) in file reads (r12 review)."""
-    if ds.manifest.config.get("rowid_address_style", True):
-        return None
-    frags = fragments if fragments is not None else ds.manifest.fragments
-    # fast path: our writer embeds the fragment id in the file name
-    # (write.py frag-<id>-<uuid>.parquet), so ONE scan + a filename regex
-    # replaces a per-fragment union chain (an O(fragments)-deep Catalyst
-    # plan — driver analysis blows up in the thousands). Files whose names
-    # don't carry their own fragment id (e.g. adopted via
-    # Fragment.create_from_file) fall back to the explicit chain.
-    import re as _re
-
-    def _embedded_id(path: str):
-        m = _re.search(r"frag-(\d+)-", os.path.basename(path))
-        return int(m.group(1)) if m else None
-
-    if all(_embedded_id(f.files[0].path) == f.id for f in frags):
-        return read_table(
-            spark, [os.path.join(ds.uri, f.files[0].path) for f in frags], ROWID_SCHEMA
-        ).select(
-            ROWID_COL,
-            # anchored to the basename: a directory component containing
-            # 'frag-<n>-' must not win over the file's own embedded id
-            # (the Python-side validation above reads the basename too)
-            F.regexp_extract(F.input_file_name(), r"frag-(\d+)-[^/]*$", 1)
-            .cast("int")
-            .alias("fragment_id"),
-        )
-    pieces = []
-    for frag in frags:
-        p = read_table(
-            spark, os.path.join(ds.uri, frag.files[0].path), ROWID_SCHEMA
-        ).select(ROWID_COL, F.lit(frag.id).alias("fragment_id"))
-        pieces.append(p)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _write_deletion_files(ds, spark: SparkSession, del_rowids: DataFrame) -> dict[int, tuple[str, int]]:
@@ -103,12 +54,7 @@ def _write_deletion_files(ds, spark: SparkSession, del_rowids: DataFrame) -> dic
     affected fragments' sidecars are rewritten — a fragment with no new
     deletions forms no group."""
     root = ds.uri
-    mapping = _rowid_fragment_map(ds, spark)
-    dels = del_rowids.select(ROWID_COL)
-    if mapping is None:
-        dels = dels.withColumn("fragment_id", F.shiftright(F.col(ROWID_COL), FRAGID_SHIFT))
-    else:
-        dels = dels.join(mapping, ROWID_COL, "inner")
+    dels = ds._with_fragment_id(spark, del_rowids.select(ROWID_COL))
     existing = {
         f.id: os.path.join(root, f.deletion_file)
         for f in ds.manifest.fragments

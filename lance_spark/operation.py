@@ -316,7 +316,7 @@ def _apply(op, base: mf.Manifest | None, version: int) -> mf.Manifest:
         if op.config_updates is not None:
             # flat config keys only — the metadata namespaces have their own
             # UpdateMaps, and the engine-maintained format flags
-            # (rowid_address_style, column_renames, ...) must survive a
+            # (the rowid regime, column_renames, ...) must survive a
             # config replace (update_config method semantics, dataset.py)
             flat = {
                 k: v for k, v in config.items()

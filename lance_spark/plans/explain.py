@@ -42,19 +42,63 @@ def analyze_plan(df: DataFrame) -> str:
         return plan
 
 
-def _metrics_tree(jplan, depth: int = 0, out: list | None = None) -> list:
-    """Walk the executed SparkPlan, one line per node with its SQLMetric
-    values (SparkPlan.toString never prints metrics)."""
-    out = [] if out is None else out
-    parts = []
-    it = jplan.metrics().iterator()
+def _metrics_tree(jplan) -> list:
+    """One line per executed-plan node, indented by depth, with its
+    SQLMetric values (SparkPlan.toString never prints metrics)."""
+    out = []
+    for depth, node in walk_plan(jplan):
+        parts = [f"{name}={value}" for _, name, value in node_metrics(node)]
+        out.append("  " * depth + node.nodeName() + (": " + ", ".join(parts) if parts else ""))
+    return out
+
+
+def walk_plan(jplan, limit: int = 10_000):
+    """Pre-order ``(depth, node)`` over an executed SparkPlan, piercing
+    AQE's wrappers: AdaptiveSparkPlanExec exposes its final plan through
+    ``executedPlan`` (its ``children`` is empty), and each materialized
+    QueryStageExec hides its subtree behind ``plan``."""
+    stack = [(0, jplan)]
+    seen = 0
+    while stack and seen < limit:
+        depth, node = stack.pop()
+        seen += 1
+        yield depth, node
+        kids = []
+        try:
+            cname = node.getClass().getSimpleName()
+            if "AdaptiveSparkPlan" in cname:
+                kids.append(node.executedPlan())
+            if "QueryStage" in cname:
+                kids.append(node.plan())
+        except Exception:  # py4j surface drift: walk the plain children
+            pass
+        try:
+            ch = node.children()
+            kids.extend(ch.apply(i) for i in range(ch.size()))
+        except Exception:
+            pass
+        stack.extend((depth + 1, k) for k in reversed(kids))
+
+
+def node_metrics(node) -> list:
+    """``(accumulator id or None, name, value)`` for each SQLMetric of one
+    plan node; the name is the metric's description (e.g. ``number of
+    output rows``)."""
+    out = []
+    it = node.metrics().iterator()
     while it.hasNext():
         kv = it.next()
-        parts.append(f"{kv._1()}={kv._2().value()}")
-    out.append("  " * depth + jplan.nodeName() + (": " + ", ".join(parts) if parts else ""))
-    ch = jplan.children().iterator()
-    while ch.hasNext():
-        _metrics_tree(ch.next(), depth + 1, out)
+        metric = kv._2()
+        try:
+            acc_id = int(metric.id())
+        except Exception:
+            acc_id = None
+        try:
+            nm = metric.name()
+            name = str(nm.get()) if nm.isDefined() else str(kv._1())
+        except Exception:
+            name = str(kv._1())
+        out.append((acc_id, name, int(metric.value())))
     return out
 
 

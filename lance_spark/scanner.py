@@ -69,67 +69,30 @@ def iops_counter() -> int:
 
 
 def _executed_plan_metrics(df: DataFrame) -> dict:
-    """Sum SQLMetric values across the executed plan's nodes (post-run).
+    """Sum SQLMetric values across the executed plan's nodes (post-run)."""
+    from lance_spark.plans.explain import node_metrics, walk_plan
 
-    Traversal must pierce AQE's wrappers: AdaptiveSparkPlanExec exposes the
-    final plan via ``executedPlan`` (its ``children`` is empty), and each
-    materialized QueryStageExec hides its subtree behind ``plan``."""
     out: dict[str, int] = {}
     try:
-        stack = [df._jdf.queryExecution().executedPlan()]  # noqa: SLF001
+        root = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
     except Exception:
         return out
-    seen = 0
     # SQLMetrics are accumulators shared by reused exchanges / query-stage
     # wrappers; dedup by accumulator id so a metric reachable through two
     # plan paths is counted once.
     seen_acc: set[int] = set()
-    while stack and seen < 10_000:
-        node = stack.pop()
-        seen += 1
+    for _, node in walk_plan(root):
         try:
-            it = node.metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                metric = kv._2()
-                try:
-                    acc_id = int(metric.id())
-                    if acc_id in seen_acc:
-                        continue
-                    seen_acc.add(acc_id)
-                except Exception:
-                    pass
-                try:
-                    nm = metric.name()
-                    desc = str(nm.get()) if nm.isDefined() else str(kv._1())
-                except Exception:
-                    desc = str(kv._1())
-                val = int(metric.value())
-                if val > 0:
-                    out[desc] = out.get(desc, 0) + val
+            metrics = node_metrics(node)
         except Exception:
-            pass
-        cname = ""
-        try:
-            cname = node.getClass().getSimpleName()
-        except Exception:
-            pass
-        if "AdaptiveSparkPlan" in cname:
-            try:
-                stack.append(node.executedPlan())
-            except Exception:
-                pass
-        if "QueryStage" in cname:
-            try:
-                stack.append(node.plan())
-            except Exception:
-                pass
-        try:
-            ch = node.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        except Exception:
-            pass
+            continue
+        for acc_id, name, val in metrics:
+            if acc_id is not None:
+                if acc_id in seen_acc:
+                    continue
+                seen_acc.add(acc_id)
+            if val > 0:
+                out[name] = out.get(name, 0) + val
     return out
 
 
@@ -217,10 +180,8 @@ class LanceScanner(DataFrame):
         in CHUNKS of ``fragment_batch_size`` fragments — ONE Spark job per
         chunk, not one per fragment (a sharded loader over a 10k-fragment
         dataset would otherwise pay 10k driver job launches; r11 fix). The
-        per-row tag derives driver-side from ``_rowid``'s embedded fragment
-        id; post-compaction datasets (few fragments by construction — the
-        compactor consolidates) fall back to the per-fragment path since
-        their rowids don't encode the owner. A global ``limit``/``offset``
+        per-row tag is the dataset's ``_with_fragment_id``, in either rowid
+        regime. A global ``limit``/``offset``
         has no per-fragment meaning and is refused rather than silently
         mis-sliced. Driver memory is bounded by one chunk's rows —
         ``max_chunk_bytes`` (default 2 GiB of on-disk file size, a proxy
@@ -260,7 +221,7 @@ class LanceScanner(DataFrame):
         frags = [
             f for f in ds.manifest.fragments if wanted is None or f.id in wanted
         ]
-        if not ds._rowid_addressable() or fragment_batch_size <= 1:
+        if fragment_batch_size <= 1:
             for frag in frags:
                 part = ds.scanner(
                     self.sparkSession, columns=kwargs["columns"],
@@ -271,7 +232,7 @@ class LanceScanner(DataFrame):
                     yield TaggedRecordBatch(record_batch=b, fragment=frag)
             return
 
-        from lance_spark.write import FRAGID_SHIFT, ROWID_COL
+        from lance_spark.write import ROWID_COL
 
         drop_rowid = not kwargs["with_row_id"]
 
@@ -301,19 +262,18 @@ class LanceScanner(DataFrame):
                 yield cur
 
         for chunk in _chunks():
+            ids = [f.id for f in chunk]
             part = ds.scanner(
                 self.sparkSession, columns=kwargs["columns"],
-                filter=kwargs["filter"], fragments=[f.id for f in chunk],
+                filter=kwargs["filter"], fragments=ids,
                 with_row_id=True, **passthrough,
             )
-            tbl = part.toArrow()  # ONE job for the whole chunk
-            import numpy as np
-
-            fids = tbl[ROWID_COL].to_numpy() >> np.int64(FRAGID_SHIFT)
-            if drop_rowid:
-                out_tbl = tbl.drop_columns([ROWID_COL])
-            else:
-                out_tbl = tbl
+            # ONE scan for the whole chunk, each row tagged with its holder
+            tbl = ds._with_fragment_id(self.sparkSession, part, fragments=ids).toArrow()
+            fids = tbl["fragment_id"].to_numpy()
+            out_tbl = tbl.drop_columns(
+                ["fragment_id"] + ([ROWID_COL] if drop_rowid else [])
+            )
             for frag in chunk:  # manifest order, like the per-fragment path
                 mask = fids == frag.id
                 if not mask.any():

@@ -374,7 +374,27 @@ def project_to_schema(df, schema):
     missing = [f.name for f in schema.fields if f.name not in df.columns]
     if missing:
         raise ValueError(f"declared schema columns missing from input: {missing}")
-    return df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+    return df.select(
+        *[F.col(f.name).cast(_nested_nullable(f.dataType)) for f in schema.fields]
+    )
+
+
+def _nested_nullable(dt):
+    """``dt`` with every nested nullability flag set. Parquet reads always
+    come back with nullable elements, values and fields, and Spark refuses
+    to cast those to a non-nullable nested type even when no null is
+    present (rows read back from a dataset could not be appended to it)."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nested_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _nested_nullable(dt.valueType), True)
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nested_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    return dt
 
 
 def write_dataset(

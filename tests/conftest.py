@@ -5,6 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# Driver heap: a quarter of RAM clamped to 1-4g (perfbench/run.py's rule);
+# the session's own 48g default lets a test JVM outgrow a small host.
+_MEM_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(4, int(_MEM_GB // 4)))}g")
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

@@ -271,3 +271,24 @@ def test_fuzzy_and_mlt_join_never_degenerate(spark, sf_dir, tmp_path):
     # two 1-row crossJoins are legitimate here: n_docs for selection idf,
     # stats for BM25 scoring
     assert e2.count("BroadcastNestedLoopJoin") <= 2
+
+
+def test_analyze_plan_reaches_below_adaptive_plan(spark, sf_dir):
+    """With AQE on, the metrics tree descends through AdaptiveSparkPlan
+    (whose children() is empty) into the final plan's nodes."""
+    import re
+
+    from lance_spark.plans.explain import analyze_plan
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    q = li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("q"))
+    tree = analyze_plan(q).split("== Metrics ==\n", 1)[1].splitlines()
+    assert tree[0].startswith("AdaptiveSparkPlan")
+    rows = [
+        int(n)
+        for line in tree[1:]
+        if line.startswith("  ")
+        for n in re.findall(r"number of output rows=(\d+)", line)
+    ]
+    assert any(n > 0 for n in rows), tree

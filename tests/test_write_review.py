@@ -164,3 +164,20 @@ def test_append_preserves_concurrent_base_registry(spark, sf_dir, tmp_path, monk
     monkeypatch.undo()
     assert "b2" in {b["name"] for b in ds.manifest.bases}
     assert ds.count_rows() == 10
+
+
+def test_append_rows_read_back_from_the_dataset(spark, tmp_path):
+    """A non-nullable nested type (``F.array(F.lit(...))`` records
+    ``containsNull=false``) must still accept rows read back from parquet,
+    whose nested types are always nullable."""
+    uri = str(tmp_path / "nested")
+    src = spark.range(6).select(
+        "id",
+        F.array(F.lit("a"), F.lit("b")).alias("tags"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("x")).alias("s"),
+    )
+    ds = ls.write_dataset(src, uri, mode="create")
+    ds = ds.insert(ds.to_df(spark).limit(2))
+    assert ds.count_rows() == 8
+    assert ds.to_df(spark).filter("tags[1] = 'b'").count() == 8

@@ -51,6 +51,10 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    # driver heap: a quarter of RAM clamped to 1-4g (perfbench/run.py's
+    # rule); the session's own 48g default can outgrow a small host
+    mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(4, int(mem_gb // 4)))}g")
     if vanilla:
         os.environ.pop("LANCE_SPARK_PUSHDOWN", None)
         from pyspark.sql import SparkSession
