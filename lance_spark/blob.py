@@ -239,13 +239,18 @@ def blob_files(ds, column: str, rowids: list[int]) -> list[BlobFile]:
     def files_of(frag) -> list[str]:
         return [f.path for f in frag.files[1:] if column in f.columns]
 
+    holders: dict[int, list] = {}
+    paths_of: dict[int, list[str]] = {}
+    for f, held in ds._fragments_holding(rowids, file_of=files_of):
+        paths_of[f.id] = [ds._abs(p) for p in files_of(f)]
+        for rid in held:
+            holders.setdefault(rid, []).append(f)
     out = []
     for rid in rowids:
-        holders = ds._fragments_holding([rid], file_of=files_of)
-        paths = [ds._abs(p) for f in holders for p in files_of(f)]
+        paths = [p for f in holders.get(rid, []) for p in paths_of[f.id]]
         if not paths:
             raise KeyError(f"rowid {rid}: no fragment holds it in blob column {column}")
-        if any(rid in _deleted_rowids_local(ds, f) for f in holders):
+        if any(rid in _deleted_rowids_local(ds, f) for f in holders[rid]):
             raise KeyError(
                 f"rowid {rid} is deleted; its blob bytes are no longer live"
             )

@@ -892,32 +892,27 @@ class LanceDataset:
         self, spark: SparkSession, df: DataFrame, col: str = ROWID_COL,
         fragments=None, how: str = "inner",
     ) -> DataFrame:
-        """``df`` plus ``fragment_id``: the fragment holding each row's
-        rowid ``col``. With ``fragments``, rows held elsewhere are dropped
-        (``how="inner"``) or kept with a null ``fragment_id``
+        """``df`` plus a trailing ``fragment_id``: the fragment holding each
+        row's rowid ``col``. With ``fragments``, rows held elsewhere are
+        dropped (``how="inner"``) or kept with a null ``fragment_id``
         (``how="left"``, the form the index tail masks use).
 
         While rowids are addresses this is a pure expression and runs no
         job; after compaction it joins ``_rowid_owners`` of the requested
-        fragments only."""
+        fragments only. An inner lookup over named fragments (one fragment,
+        one ``scan_batches`` chunk) broadcasts those owners, so ``df`` keeps
+        its row order and no shuffle runs."""
         if not self._rowid_addressable():
             owners = self._rowid_owners(spark, fragments).select(
                 F.col(ROWID_COL).alias(col), "fragment_id"
             )
-            return df.join(owners, col, how)
+            if fragments is not None and how == "inner":
+                owners = F.broadcast(owners)
+            return df.join(owners, col, how).select(*df.columns, "fragment_id")
         fid = F.shiftright(F.col(col), FRAGID_SHIFT)
         if fragments is None:
             return df.withColumn("fragment_id", fid)
-        # contiguous id runs become rowid ranges, which parquet can push down
-        import itertools
-
-        held = F.lit(False)
-        ids = sorted({int(f) for f in fragments})
-        for _, run in itertools.groupby(enumerate(ids), lambda p: p[1] - p[0]):
-            run = [f for _, f in run]
-            held = held | F.col(col).between(
-                run[0] << FRAGID_SHIFT, ((run[-1] + 1) << FRAGID_SHIFT) - 1
-            )
+        held = fid.isin([int(f) for f in fragments])
         if how == "inner":
             return df.filter(held).withColumn("fragment_id", fid)
         return df.withColumn("fragment_id", F.when(held, fid))
@@ -965,40 +960,44 @@ class LanceDataset:
         cache[path] = rng
         return rng
 
-    def _fragments_holding(self, rowids: list[int], file_of=None) -> list:
-        """The fragments that may hold any of ``rowids``, decided on the
+    def _fragments_holding(self, rowids: list[int], file_of=None) -> list[tuple]:
+        """``(fragment, the requested rowids it may hold)`` for each fragment
+        that may hold any of ``rowids``, in manifest order, decided on the
         driver with no Spark job (the TakeExec pruning, take.rs:103). While
         rowids are addresses the prefix names the fragment. After
         compaction each file's ``_rowid`` footer min/max bounds its ids
-        (compaction writes ids in sorted runs): a fragment is kept iff a
-        requested id falls inside one of its files' ranges, the files being
+        (compaction writes ids in sorted runs): a fragment may hold the ids
+        inside one of its files' ranges, the files being
         ``file_of(fragment)`` (default: all its data files). A file with no
-        stats is kept."""
+        stats may hold every id."""
         frags = self.manifest.fragments
         if self._rowid_addressable():
-            fids = {rid >> FRAGID_SHIFT for rid in rowids}
-            return [f for f in frags if f.id in fids]
+            by_fid: dict[int, list[int]] = {}
+            for rid in rowids:
+                by_fid.setdefault(rid >> FRAGID_SHIFT, []).append(rid)
+            return [(f, by_fid[f.id]) for f in frags if f.id in by_fid]
         import bisect
 
-        rid_sorted = sorted(rowids)
-
-        def hit(path: str) -> bool:
-            rng = self._rowid_range(path)
-            if rng is None:
-                return True
-            i = bisect.bisect_left(rid_sorted, rng[0])
-            return i < len(rid_sorted) and rid_sorted[i] <= rng[1]
-
-        return [
-            f for f in frags
-            if any(hit(p) for p in (file_of(f) if file_of else [d.path for d in f.files]))
-        ]
+        rid_sorted = sorted(set(rowids))
+        out = []
+        for f in frags:
+            held: set[int] = set()
+            for p in file_of(f) if file_of else [d.path for d in f.files]:
+                rng = self._rowid_range(p)
+                if rng is None:
+                    held.update(rid_sorted)
+                    break
+                lo = bisect.bisect_left(rid_sorted, rng[0])
+                held.update(rid_sorted[lo:bisect.bisect_right(rid_sorted, rng[1])])
+            if held:
+                out.append((f, sorted(held)))
+        return out
 
     def take(self, spark: SparkSession, rowids: list[int], columns: list[str] | None = None) -> DataFrame:
         """Random access by _rowid (dataset/take.rs:103). Small id sets prune
         to the owning fragments first → targeted file reads, the parquet
         analogue of Lance's point reads."""
-        frags = self._fragments_holding(rowids)
+        frags = [f for f, _ in self._fragments_holding(rowids)]
         df = self._fragment_df(spark, frags, columns if columns else None)
         df = df.filter(F.col(ROWID_COL).isin(rowids))
         return df.select(*(columns or self.columns), ROWID_COL)
@@ -1038,10 +1037,12 @@ class LanceDataset:
         (a ranged read of the out-of-line store)."""
         # a small take on a many-fragment dataset opens only the owning
         # blob files, never the whole store
-        frags = self._fragments_holding(
-            rowids,
-            file_of=lambda f: [df.path for df in f.files[1:] if column in df.columns],
-        )
+        frags = [
+            f for f, _ in self._fragments_holding(
+                rowids,
+                file_of=lambda f: [df.path for df in f.files[1:] if column in df.columns],
+            )
+        ]
         self._blob_files(column)  # validate the column even if pruning emptied frags
         paths = [p for f in frags for df in f.files[1:] if column in df.columns
                  for p in [df.path]]
@@ -1650,12 +1651,10 @@ class LanceDataset:
 
     # mutation / evolution / maintenance entry points (implemented in their
     # own modules; bound here for the reference's method-on-dataset API)
-    def delete(
-        self, spark: SparkSession, predicate: str, scope_rowids=None
-    ) -> "LanceDataset":
+    def delete(self, spark: SparkSession, predicate: str) -> "LanceDataset":
         from lance_spark.mutation import delete
 
-        return delete(self, spark, predicate, scope_rowids=scope_rowids)
+        return delete(self, spark, predicate)
 
     def update(self, spark: SparkSession, values: dict[str, str], where: str | None = None) -> "LanceDataset":
         from lance_spark.mutation import update

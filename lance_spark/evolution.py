@@ -232,11 +232,10 @@ def add_columns(ds, spark: SparkSession, transforms, read_columns: list[str] | N
             done = checkpoint.done(expected_columns=new_cols)
             if done:
                 # resume: skip completed fragments BEFORE the UDF runs —
-                # the fragment-id filter prunes whole fragments at the scan
-                base = (
-                    ds._with_fragment_id(spark, base, fragments=done, how="left")
-                    .filter(F.col("fragment_id").isNull())
-                    .drop("fragment_id")
+                # the scan reads only the fragments still to do
+                base = ds.scanner(
+                    spark, with_row_id=True,
+                    fragments=[f.id for f in ds.manifest.fragments if f.id not in done],
                 )
             # the UDF must run INSIDE the per-fragment write task (not a
             # map stage before the shuffle barrier): a failure on one

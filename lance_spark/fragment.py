@@ -441,21 +441,12 @@ class LanceFragment:
     # ------------------------------------------------------------ mutation
 
     def delete(self, spark: SparkSession, predicate: str):
-        """Fragment-scoped delete (fragment.py:780-824): rows of OTHER
-        fragments never match, so only this fragment's deletion sidecar
-        changes. Returns the updated dataset (functional, like all
-        mutations here). The scope is the set of rows this fragment holds
-        (``_with_fragment_id``), in either rowid regime."""
-        from lance_spark.mutation import _apply_deletes_and_appends, _retrying
+        """Fragment-scoped delete (fragment.py:780-824): the predicate scans
+        this fragment's files only, so only its deletion sidecar changes.
+        Returns the updated dataset (functional, like all mutations here)."""
+        from lance_spark.mutation import delete
 
-        def run(d):
-            hits = d.scanner(spark, filter=predicate, with_row_id=True).select(ROWID_COL)
-            held = d._with_fragment_id(spark, hits, fragments=[self.id])
-            return _apply_deletes_and_appends(
-                d, spark, held.select(ROWID_COL), None, "delete"
-            )
-
-        return _retrying(self._ds, run)
+        return delete(self._ds, spark, predicate, fragments=[self.id])
 
 
 class FragmentSession:

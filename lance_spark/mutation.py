@@ -257,20 +257,14 @@ def _retrying(ds, fn, max_retries: int = 10, timeout_s: float | None = None):
     ) from last
 
 
-def delete(ds, spark: SparkSession, predicate: str, scope_rowids=None):
-    """``scope_rowids``: optional DataFrame with a ``_rowid`` column that
-    bounds the delete to a membership set (fragment-scoped deletes on
-    compacted datasets). A semi-join instead of an ``_rowid IN (...)``
-    literal — a compacted fragment holds ~millions of rowids and the
-    enumerated predicate was a multi-MB string Catalyst had to parse."""
+def delete(ds, spark: SparkSession, predicate: str, fragments: list[int] | None = None):
+    """Delete the rows matching ``predicate``; ``fragments`` bounds the
+    scan to those fragments (``LanceFragment.delete``), so rows held
+    elsewhere never match."""
 
     def run(d):
-        hits = d.scanner(spark, filter=predicate, with_row_id=True).select(ROWID_COL)
-        if scope_rowids is not None:
-            hits = hits.join(
-                F.broadcast(scope_rowids.select(ROWID_COL)), ROWID_COL, "left_semi"
-            )
-        return _apply_deletes_and_appends(d, spark, hits, None, "delete")
+        hits = d.scanner(spark, filter=predicate, with_row_id=True, fragments=fragments)
+        return _apply_deletes_and_appends(d, spark, hits.select(ROWID_COL), None, "delete")
 
     return _retrying(ds, run)
 

@@ -52,14 +52,14 @@ def _metrics_tree(jplan) -> list:
     return out
 
 
-def walk_plan(jplan, limit: int = 10_000):
+def walk_plan(jplan):
     """Pre-order ``(depth, node)`` over an executed SparkPlan, piercing
     AQE's wrappers: AdaptiveSparkPlanExec exposes its final plan through
     ``executedPlan`` (its ``children`` is empty), and each materialized
     QueryStageExec hides its subtree behind ``plan``."""
     stack = [(0, jplan)]
     seen = 0
-    while stack and seen < limit:
+    while stack and seen < 10_000:
         depth, node = stack.pop()
         seen += 1
         yield depth, node

@@ -181,7 +181,8 @@ class LanceScanner(DataFrame):
         chunk, not one per fragment (a sharded loader over a 10k-fragment
         dataset would otherwise pay 10k driver job launches; r11 fix). The
         per-row tag is the dataset's ``_with_fragment_id``, in either rowid
-        regime. A global ``limit``/``offset``
+        regime; each batch keeps the scan's column and row order, as with
+        ``fragment_batch_size=1``. A global ``limit``/``offset``
         has no per-fragment meaning and is refused rather than silently
         mis-sliced. Driver memory is bounded by one chunk's rows —
         ``max_chunk_bytes`` (default 2 GiB of on-disk file size, a proxy

@@ -78,3 +78,41 @@ def test_scan_batches_tags_the_holding_fragment(spark, compacted):
             assert holder[rid] == tagged.fragment.id
             seen += 1
     assert seen == compacted.count_rows() == 390
+
+
+def test_scan_batches_chunks_keep_the_per_fragment_order(spark, compacted):
+    """A chunk's owner lookup must not reorder the scan: the same columns
+    and, per fragment, the same rows in the same order as one scan per
+    fragment. Automatic broadcasts are off so a shuffled join would show."""
+
+    def by_fragment(size):
+        names, rows = set(), {}
+        scan = compacted.scanner(spark, columns=["price", "id"], with_row_id=True)
+        for tagged in scan.scan_batches(fragment_batch_size=size):
+            names.add(tuple(tagged.record_batch.schema.names))
+            rows.setdefault(tagged.fragment.id, []).extend(tagged.record_batch.to_pylist())
+        return names, rows
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        chunked = by_fragment(4)
+    finally:
+        spark.conf.set(key, old)
+    assert chunked[0] == {("price", "id", "_rowid")}
+    assert chunked == by_fragment(1)
+
+
+def test_fragment_delete_touches_only_its_fragment(spark, compacted):
+    from lance_spark.fragment import LanceFragment
+
+    first, *rest = compacted.manifest.fragments
+    even = "id % 2 = 0"
+    hit = compacted.scanner(spark, filter=even, fragments=[first.id]).count()
+    assert 0 < hit < first.num_rows
+    out = LanceFragment(compacted, first.id).delete(spark, even)
+    after = {f.id: f.num_deleted_rows for f in out.manifest.fragments}
+    assert after[first.id] == first.num_deleted_rows + hit
+    assert all(after[f.id] == f.num_deleted_rows for f in rest)
+    assert out.count_rows() == compacted.count_rows() - hit
