@@ -43,6 +43,7 @@ from lance_spark.indexes.vector import (
     IvfIndex,
     _as_matrix,
     _normalize,
+    _write_codes,
     compute_partition_radii,
     train_kmeans,
     train_pq_codebooks,
@@ -226,11 +227,12 @@ class IndicesBuilder:
         # from the monolithic path by construction (r13 review). The staged
         # API stages IVF_FLAT/IVF_PQ only, so SQ/RQ artifacts are None and
         # their rq_* columns are dropped.
-        out = _assign_encode_df(
+        out, _ = _assign_encode_df(
             df, self.column, ROWID_COL, self.spark, ivf.centroids,
             pq.codebook if pq else None, None, None,
             ivf.distance_type == "cosine",
-        ).drop("rq_norm", "rq_corr")
+        )
+        out = out.drop("rq_norm", "rq_corr")
         covered = fids if fids is not None else [f.id for f in self.dataset.manifest.fragments]
         return out, covered
 
@@ -337,10 +339,7 @@ class IndicesBuilder:
             f if os.path.isabs(f) else os.path.join(dir_path, f)
             for f in unsorted_filenames
         ]
-        write_table(
-            read_table(self.spark, src).repartition("partition_id"), out_dir,
-            partition_by="partition_id",
-        )
+        _write_codes(read_table(self.spark, src), out_dir, ivf.num_partitions)
         covered: set[int] = set()
         for s in src:
             cov = os.path.join(s, "_coverage.json")

@@ -28,9 +28,11 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -42,6 +44,12 @@ from lance_spark.io import read_table, write_table
 # rows are ~24 bytes, so 1M rows ≈ 24 MB — corpus-independent no matter how
 # wide a k × refine_factor configuration the caller asks for (ADVICE r8).
 _MAX_REFINE_CANDIDATES = 1_000_000
+
+# Wall seconds from submitting a small Python-worker job to collecting its
+# result when the tasks themselves do nothing: a no-op 8-task
+# ``parallelize(...).map(...)`` took 0.5–0.6 s on a 4-core local[4]
+# session. Driver work shorter than this is not worth shipping to a job.
+_SPARK_JOB_FIXED_S = 0.5
 
 
 def _tail_mask(ds, spark: SparkSession, tail: list[int]):
@@ -80,39 +88,65 @@ def train_kmeans(x: np.ndarray, k: int, iters: int = 12, seed: int = 42) -> np.n
     """Plain Lloyd's with deterministic kmeans++-ish seeding (sampled by a
     fixed RNG). Runs on the driver over a bounded sample — identical role to
     the reference's kmeans trainer (vector/kmeans.rs), which also trains on a
-    sample; the full-data pass stays distributed."""
+    sample; the full-data pass stays distributed. The one kernel behind IVF
+    centroids, PQ codebooks, ``IndicesBuilder`` and ``util.KMeans``.
+
+    Every step is a whole-array numpy call, so the cost is a few GEMM-sized
+    passes per iteration however large ``k`` is: the kmeans++ draw is
+    ``rng.random()`` against the cumulative distribution (what
+    ``rng.choice(n, p=...)`` computes, on the same random stream), and the
+    centroid update is one ``np.bincount`` of the rows' coordinates keyed
+    by (cluster, dimension)."""
     rng = np.random.default_rng(seed)
     x = np.ascontiguousarray(x, dtype=np.float64)
-    n = x.shape[0]
+    n, dim = x.shape
     k = min(k, n)
     # kmeans++ initialization
-    centroids = np.empty((k, x.shape[1]), dtype=np.float64)
+    centroids = np.empty((k, dim), dtype=np.float64)
     centroids[0] = x[rng.integers(n)]
     d2 = np.full(n, np.inf)
+    # dimension-major copy: each seeding step is dim whole-column passes
+    # instead of n per-row reductions of length dim
+    xt = np.ascontiguousarray(x.T)
+    diff = np.empty_like(xt)
     for i in range(1, k):
-        d2 = np.minimum(d2, ((x - centroids[i - 1]) ** 2).sum(axis=1))
+        np.subtract(xt, centroids[i - 1][:, None], out=diff)
+        np.square(diff, out=diff)
+        np.minimum(d2, diff.sum(axis=0), out=d2)
         s = float(d2.sum())
         if s <= 0:
             # fewer distinct points than k (duplicate-heavy data): every
             # remaining point coincides with a chosen centroid — a zero
-            # probability vector would crash rng.choice; uniform pick keeps
-            # the build going (Lloyd's empty-cluster re-seed handles dupes)
+            # probability vector has no distribution to draw from; a
+            # uniform pick keeps the build going (Lloyd's empty-cluster
+            # re-seed handles dupes)
             centroids[i] = x[rng.integers(n)]
         else:
-            centroids[i] = x[rng.choice(n, p=d2 / s)]
+            cdf = np.cumsum(d2 / s)
+            cdf /= cdf[-1]
+            centroids[i] = x[int(cdf.searchsorted(rng.random(), side="right"))]
     x2 = (x * x).sum(axis=1, keepdims=True)
+    # flat (cluster, dimension) bin of every coordinate, for the update
+    bins = np.empty((n, dim), dtype=np.intp)
+    cols = np.arange(dim)
+    rows = np.arange(n)
     for _ in range(iters):
-        # assign via |x|² - 2x·c + |c|² (GEMM; the (n,k,dim) broadcast
-        # temporary of the naive form dominates runtime for k=256)
-        dists = x2 - 2.0 * (x @ centroids.T) + (centroids * centroids).sum(axis=1)
+        # assign via |x|² - 2x·c + |c|², in place in the one (n, k) GEMM
+        # output (the (n,k,dim) broadcast temporary of the naive form
+        # dominates runtime for k=256)
+        dists = x @ centroids.T
+        dists *= -2.0
+        dists += x2
+        dists += (centroids * centroids).sum(axis=1)
         assign = dists.argmin(axis=1)
-        # update
-        for j in range(k):
-            mask = assign == j
-            if mask.any():
-                centroids[j] = x[mask].mean(axis=0)
-            else:  # re-seed empty cluster at the farthest point
-                centroids[j] = x[dists.min(axis=1).argmax()]
+        # update: per-cluster means, summed in row order
+        np.add(assign[:, None] * dim, cols, out=bins)
+        sums = np.bincount(bins.ravel(), weights=x.ravel(), minlength=k * dim)
+        counts = np.bincount(assign, minlength=k)
+        full = counts > 0
+        centroids[full] = sums.reshape(k, dim)[full] / counts[full, None]
+        if not full.all():  # re-seed empty clusters at the farthest point
+            centroids[~full] = x[dists[rows, assign].argmax()]
     return centroids.astype(np.float32)
 
 
@@ -273,14 +307,19 @@ def train_pq_codebooks(
     Shared by the monolithic build (build_ivf) and the staged
     IndicesBuilder so the two build paths cannot drift numerically.
 
-    ``sc`` (optional SparkContext): train the ``num_subvectors``
-    independent 256-way kmeans as one parallelized Spark job instead of a
-    sequential driver loop — the per-book Lloyd loop is Python-call-bound
-    (256 tiny mask/mean numpy ops per iteration), so m books serialize
-    ~m× the single-book wall on the driver while the cluster idles
-    (guide §5: the driver should do almost no data work). Each task runs
+    The books train on the driver, on a pool of threads (numpy releases
+    the interpreter lock inside its array operations). A Spark job pays a
+    fixed start-up cost (``_SPARK_JOB_FIXED_S``) before its first task
+    runs, which exceeds the whole m-book loop on a sample of a few
+    thousand rows. So the first book is timed on the driver, and only when
+    the rest would take longer there than ``sc`` (optional SparkContext)
+    would — fixed cost plus the books spread over ``defaultParallelism``
+    tasks — do books 1..m−1 train as one parallelized job. Every path runs
     the IDENTICAL ``train_kmeans(resid_sub, seed+j)`` call, so the
-    codebooks are bit-for-bit the driver loop's."""
+    codebooks are bit-for-bit the sequential loop's either way."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
     dim = centroids.shape[1]
     sub = dim // num_subvectors
     cf = centroids.astype(np.float64)
@@ -292,30 +331,29 @@ def train_pq_codebooks(
         + (cf * cf).sum(axis=1)
     )
     resid = sample - cf[d2.argmin(axis=1)]
-    # tiny samples train faster on the driver than a job round-trips;
-    # the gate only skips the job when the whole loop is ~tens of ms
-    if sc is not None and num_subvectors > 1 and resid.shape[0] >= 1000:
+
+    def _book(r: np.ndarray, j: int) -> np.ndarray:
+        return train_kmeans(r[:, j * sub : (j + 1) * sub], 256, iters=iters, seed=seed + j)
+
+    t0 = time.perf_counter()
+    books = [_book(resid, 0)]
+    rest = range(1, num_subvectors)
+    per_book = time.perf_counter() - t0
+    threads = max(1, min(len(rest), os.cpu_count() or 1))
+    if sc is not None and per_book * -(-len(rest) // threads) > (
+        _SPARK_JOB_FIXED_S + per_book * -(-len(rest) // max(1, sc.defaultParallelism))
+    ):
         resid_b = sc.broadcast(resid)
-
-        def _one(j: int) -> np.ndarray:
-            r = resid_b.value
-            return train_kmeans(
-                r[:, j * sub : (j + 1) * sub], 256, iters=iters, seed=seed + j
-            )
-
-        books = (
-            sc.parallelize(range(num_subvectors), num_subvectors)
-            .map(_one)
+        books += (
+            sc.parallelize(rest, len(rest))
+            .map(lambda j: _book(resid_b.value, j))
             .collect()
         )
         resid_b.unpersist()
-        return np.stack(books)
-    return np.stack(
-        [
-            train_kmeans(resid[:, j * sub : (j + 1) * sub], 256, iters=iters, seed=seed + j)
-            for j in range(num_subvectors)
-        ]
-    )  # (m, 256, sub)
+    else:
+        with ThreadPoolExecutor(threads) as pool:
+            books += pool.map(lambda j: _book(resid, j), rest)
+    return np.stack(books)  # (m, 256, sub)
 
 
 def _unpack_bits(x: np.ndarray) -> np.ndarray:
@@ -422,8 +460,10 @@ def compute_partition_radii(
 ) -> np.ndarray:
     """Per-partition covering radius max‖x − c_p‖ over a codes table —
     enables triangle-inequality partition pruning for distance_range
-    (lower bound ‖q−c‖ − r_p). One distributed aggregation; shared by both
-    index-build paths.
+    (lower bound ‖q−c‖ − r_p). One distributed aggregation over a table
+    already on disk: ``_ensure_radii`` (an index that has no radii file)
+    and the staged IndicesBuilder's load step. build_ivf and extend_ivf
+    take the same values from the encode pass instead (``_radii_seen``).
 
     Fast path: codes written by ``_assign_encode_df`` carry the residual
     norm as an ``rnorm`` column (bit-identical float path, see there), so
@@ -666,7 +706,7 @@ def build_ivf(
             sample, centroids, m, seed=seed, sc=spark.sparkContext
         )
 
-    enc = _assign_encode_df(
+    enc, radii_acc = _assign_encode_df(
         df, vec_col, id_col, spark, centroids, codebooks, sq_bounds, rotation,
         cosine, packed=packed,
     )
@@ -702,13 +742,8 @@ def build_ivf(
         old_sfx = old_meta.get("artifact_suffix", "")
         if old_sfx != sfx:
             retired[f"npy:{old_sfx}"] = now
-    write_table(
-        enc.repartition("partition_id"), os.path.join(uri, seg), partition_by="partition_id"
-    )
-    radii = compute_partition_radii(
-        spark, os.path.join(uri, seg), centroids, cosine, packed=packed
-    )
-    _np_save_atomic(uri, f"radii{sfx}.npy", radii)
+    _write_codes(enc, os.path.join(uri, seg), k)
+    _np_save_atomic(uri, f"radii{sfx}.npy", _radii_seen(radii_acc)[0])
     _np_save_atomic(uri, f"centroids{sfx}.npy", centroids)
     if codebooks is not None:
         _np_save_atomic(uri, f"codebooks{sfx}.npy", codebooks)
@@ -824,25 +859,30 @@ def _assign_encode_df(
     rotation,
     cosine: bool,
     packed: bool = False,
-) -> DataFrame:
-    """(id, vec, partition_id, pq_code, rq_norm, rq_corr) for every non-null
-    vector row: row-local centroid assignment + quantization with FIXED
-    training artifacts. Shared by build_ivf and the delta-optimize path
-    (extend_ivf) so fresh and delta rows cannot drift numerically."""
-    cent_b = spark.sparkContext.broadcast(centroids)
-    cb_b = spark.sparkContext.broadcast(codebooks)
-    sq_b = spark.sparkContext.broadcast(sq_bounds)
-    rot_b = spark.sparkContext.broadcast(rotation)
+):
+    """(id, vec, partition_id, pq_code, rq_norm, rq_corr, rnorm) for every
+    non-null vector row: row-local centroid assignment + quantization with
+    FIXED training artifacts. Shared by build_ivf, the delta-optimize path
+    (extend_ivf) and the staged IndicesBuilder so fresh and delta rows
+    cannot drift numerically.
+
+    Returns ``(df, radii)``. ``radii`` is an accumulator that the pass
+    fills as a side effect: ``_radii_seen(radii)`` after the first action
+    over ``df`` gives each partition's covering radius (the max of its
+    rows' ``rnorm``) and whether any row landed in it — exactly what
+    ``compute_partition_radii`` would read back from the written codes."""
+    sc = spark.sparkContext
+    artifacts_b = sc.broadcast((centroids, codebooks, sq_bounds, rotation))
+    k = centroids.shape[0]
+    radii = sc.accumulator(np.full((2, k), -np.inf), _MaxParam())
 
     @pandas_udf(
         "struct<partition_id:int, pq_code:array<smallint>, rq_norm:float, rq_corr:float,"
         " rnorm:double>"
     )
     def assign_encode(s: pd.Series) -> pd.DataFrame:
-        cents = cent_b.value.astype(np.float32)
-        cbs = cb_b.value
-        sq = sq_b.value
-        rot = rot_b.value
+        cent, cbs, sq, rot = artifacts_b.value
+        cents = cent.astype(np.float32)
         raw = _as_matrix(s)
         x = raw
         if packed:
@@ -851,14 +891,17 @@ def _assign_encode_df(
             x = _normalize(x)
         # argmin ||x - c||^2 = argmax (x·c - ||c||²/2)
         pid = (x @ cents.T - 0.5 * (cents * cents).sum(axis=1)).argmax(axis=1)
-        # residual norm ‖x − c_pid‖, persisted with the codes so the
-        # covering-radius pass (compute_partition_radii) is a column max
-        # instead of a second Python-boundary pass over every vector
-        # (guide §4: one crossing). Same kernel calls as the radii UDF, so
-        # the stored value is bit-identical to what the fallback pass
-        # would recompute from the written vec column.
-        c64 = cent_b.value.astype(np.float64)[pid]
+        # residual norm ‖x − c_pid‖, persisted with the codes and folded
+        # into the radii accumulator, so no pass reads the codes back for
+        # the covering radii. Same kernel calls as compute_partition_radii's
+        # fallback UDF, so the value is bit-identical to what it would
+        # recompute from the written vec column.
+        c64 = cent.astype(np.float64)[pid]
         rnorm = _finalize_distance(_score(_prep(raw, packed, cosine), c64, "l2"), "l2")
+        part = np.full((2, k), -np.inf)
+        np.fmax.at(part[0], pid, rnorm)
+        part[1, pid] = 1.0
+        radii.add(part)
         rq_norm = rq_corr = [None] * len(x)
         if rot is not None:
             resid = (x - cents[pid]).astype(np.float64)
@@ -901,13 +944,48 @@ def _assign_encode_df(
             }
         )
 
-    return df.filter(F.col(vec_col).isNotNull()).select(
+    enc = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<float>").alias("vec"),
         assign_encode(F.col(vec_col)).alias("e"),
     ).select(
         "id", "vec", "e.partition_id", "e.pq_code", "e.rq_norm", "e.rq_corr",
         "e.rnorm",
+    )
+    return enc, radii
+
+
+class _MaxParam(AccumulatorParam):
+    """Elementwise max of float64 arrays, NaN ignored (a NaN ``rnorm``
+    reaches the codes table as null, which a max skips). A max is
+    idempotent, so a retried or re-run task cannot inflate it."""
+
+    def zero(self, value):
+        return np.full_like(value, -np.inf)
+
+    def addInPlace(self, a, b):
+        return np.fmax(a, b, out=a)
+
+
+def _radii_seen(radii) -> tuple[np.ndarray, np.ndarray]:
+    """(covering radius per partition, partitions that got a row) from
+    the accumulator ``_assign_encode_df`` returns. A partition without a
+    row has radius 0, as ``compute_partition_radii`` reports it."""
+    top, seen = radii.value
+    return np.where(top == -np.inf, 0.0, top), seen > 0
+
+
+def _write_codes(df: DataFrame, seg_dir: str, num_partitions: int) -> None:
+    """Write a codes segment, one directory per IVF partition. The rows
+    are hash-partitioned by ``partition_id`` into one task per core (or
+    per IVF partition, if fewer), so every directory is one file and the
+    directories are written in parallel. A ``repartition`` by column alone
+    lets AQE coalesce a small shuffle into one task, which writes every
+    directory in series."""
+    tasks = min(num_partitions, df.sparkSession.sparkContext.defaultParallelism)
+    write_table(
+        df.repartition(max(1, tasks), "partition_id"), seg_dir,
+        partition_by="partition_id",
     )
 
 
@@ -940,8 +1018,8 @@ def extend_ivf(
     rows per-fragment (``tail_mask``), so the torn window reads
     consistently too.
 
-    Scale: cost is one assign+encode pass over the NEW rows plus their
-    radii aggregation; the existing index is never read or rewritten. The
+    Scale: cost is one assign+encode pass over the NEW rows, which also
+    yields their radii; the existing index is never read or rewritten. The
     trade (reference-documented) is recall drift if the new data shifts
     distribution — retrain=True is the reset.
 
@@ -972,7 +1050,7 @@ def extend_ivf(
             )
             seen = d if seen is None else seen.unionByName(d)
         df = df.join(seen, id_col, "left_anti")
-    enc = _assign_encode_df(
+    enc, radii_acc = _assign_encode_df(
         df.select(F.col(id_col), F.col(vec_col)),
         vec_col,
         id_col,
@@ -984,50 +1062,45 @@ def extend_ivf(
         index.metric == "cosine",
         packed=index.packed,
     )
-    if enc.isEmpty():
-        # nothing indexable in the new fragments (e.g. all-null vectors, or
-        # every tail row already indexed pre-compaction): no segment to
-        # write — the caller's coverage commit is all that's needed, and an
-        # empty parquet dir would break the segment union
-        return index
     n = 0
     for s in kept:
         if s.startswith("codes_v"):
             n = max(n, int(s[len("codes_v"):]))
     seg = f"codes_v{n + 1}"
     seg_dir = os.path.join(index.uri, seg)
-    write_table(enc.repartition("partition_id"), seg_dir, partition_by="partition_id")
-    new_radii = compute_partition_radii(
-        spark, seg_dir, index.centroids, index.metric == "cosine",
-        packed=index.packed,
-    )
-    if index.radii is None:
-        # radii-less legacy index: compute the kept segments' radii now so
-        # the saved file covers EVERY segment — skipping would leave
+    _write_codes(enc, seg_dir, index.centroids.shape[0])
+    new_radii, got_rows = _radii_seen(radii_acc)
+    if got_rows.any():
+        # a radii-less legacy index gets the existing segments' radii now,
+        # so the saved file covers EVERY segment — skipping would leave
         # distance_range blind to the new rows forever
-        base_radii = np.zeros(index.centroids.shape[0], dtype=np.float64)
-        for s in kept:
-            base_radii = np.maximum(
-                base_radii,
-                compute_partition_radii(
-                    spark, os.path.join(index.uri, s), index.centroids,
-                    index.metric == "cosine", packed=index.packed,
-                ),
-            )
-    else:
-        base_radii = index.radii
-    _np_save_atomic(index.uri, f"radii{index.artifact_suffix}.npy", np.maximum(base_radii, new_radii))
-    if index.index_type.startswith("IVF_HNSW"):
-        from lance_spark.indexes.hnsw import build_hnsw_graphs
-
-        build_hnsw_graphs(
-            index, spark, codes_dir=seg_dir,
-            out_dir=os.path.join(index.uri, "hnsw" + seg[len("codes"):]),
+        base_radii = _ensure_radii(index, spark)
+        _np_save_atomic(
+            index.uri, f"radii{index.artifact_suffix}.npy",
+            np.maximum(base_radii, new_radii),
         )
+        if index.index_type.startswith("IVF_HNSW"):
+            from lance_spark.indexes.hnsw import build_hnsw_graphs
+
+            build_hnsw_graphs(
+                index, spark, codes_dir=seg_dir,
+                out_dir=os.path.join(index.uri, "hnsw" + seg[len("codes"):]),
+            )
+        segments = kept + [seg]
+        if frag_set:
+            seg_frags[seg] = sorted(frag_set)
+    else:
+        # nothing indexable in the new fragments (e.g. all-null vectors, or
+        # every tail row already indexed pre-compaction): the caller's
+        # coverage commit is all that's needed, and an empty parquet dir
+        # would break the segment union. Only when the directory held a
+        # dropped torn segment does the meta need to stop listing it.
+        shutil.rmtree(seg_dir)
+        if seg not in index.segments:
+            return index
+        segments = kept
     meta = dict(index.meta)
-    meta["segments"] = kept + [seg]
-    if frag_set:
-        seg_frags[seg] = sorted(frag_set)
+    meta["segments"] = segments
     meta["segment_fragments"] = seg_frags
     # opportunistically reclaim merge-retired dirs past their grace period
     meta["retired_segments"] = _reclaim_retired_segments(index.uri, meta)
@@ -1045,7 +1118,6 @@ _RETIRE_GRACE_SECONDS = 15 * 60
 def _reclaim_retired_segments(index_uri: str, meta: dict) -> dict:
     """Delete retired segment dirs past the grace period; returns the
     still-retired map (segment → retire timestamp) to persist back."""
-    import shutil
     import time
 
     retired = dict(meta.get("retired_segments") or {})
@@ -1088,10 +1160,7 @@ def merge_ivf_segments(index: IvfIndex, spark: SparkSession) -> IvfIndex:
     )
     seg = f"codes_v{n + 1}"
     seg_dir = os.path.join(index.uri, seg)
-    write_table(
-        index.codes_df(spark).repartition("partition_id"), seg_dir,
-        partition_by="partition_id",
-    )
+    _write_codes(index.codes_df(spark), seg_dir, index.centroids.shape[0])
     old = list(index.segments)
     if index.index_type.startswith("IVF_HNSW"):
         from lance_spark.indexes.hnsw import build_hnsw_graphs
