@@ -227,7 +227,7 @@ class IndicesBuilder:
         # from the monolithic path by construction (r13 review). The staged
         # API stages IVF_FLAT/IVF_PQ only, so SQ/RQ artifacts are None and
         # their rq_* columns are dropped.
-        out, _ = _assign_encode_df(
+        out = _assign_encode_df(
             df, self.column, ROWID_COL, self.spark, ivf.centroids,
             pq.codebook if pq else None, None, None,
             ivf.distance_type == "cosine",

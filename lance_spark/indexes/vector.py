@@ -45,13 +45,6 @@ from lance_spark.io import read_table, write_table
 # wide a k × refine_factor configuration the caller asks for (ADVICE r8).
 _MAX_REFINE_CANDIDATES = 1_000_000
 
-# Wall seconds from submitting a small Python-worker job to collecting its
-# result when the tasks themselves do nothing: a no-op 8-task
-# ``parallelize(...).map(...)`` took 0.5–0.6 s on a 4-core local[4]
-# session. Driver work shorter than this is not worth shipping to a job.
-_SPARK_JOB_FIXED_S = 0.5
-
-
 def _tail_mask(ds, spark: SparkSession, tail: list[int]):
     """The ``tail_mask`` argument of the index search paths: a function
     that sets ``fragment_id`` on the ``id`` rows held by the fragments the
@@ -125,6 +118,7 @@ def train_kmeans(x: np.ndarray, k: int, iters: int = 12, seed: int = 42) -> np.n
             cdf = np.cumsum(d2 / s)
             cdf /= cdf[-1]
             centroids[i] = x[int(cdf.searchsorted(rng.random(), side="right"))]
+    del xt, diff
     x2 = (x * x).sum(axis=1, keepdims=True)
     # flat (cluster, dimension) bin of every coordinate, for the update
     bins = np.empty((n, dim), dtype=np.intp)
@@ -307,17 +301,12 @@ def train_pq_codebooks(
     Shared by the monolithic build (build_ivf) and the staged
     IndicesBuilder so the two build paths cannot drift numerically.
 
-    The books train on the driver, on a pool of threads (numpy releases
-    the interpreter lock inside its array operations). A Spark job pays a
-    fixed start-up cost (``_SPARK_JOB_FIXED_S``) before its first task
-    runs, which exceeds the whole m-book loop on a sample of a few
-    thousand rows. So the first book is timed on the driver, and only when
-    the rest would take longer there than ``sc`` (optional SparkContext)
-    would — fixed cost plus the books spread over ``defaultParallelism``
-    tasks — do books 1..m−1 train as one parallelized job. Every path runs
-    the IDENTICAL ``train_kmeans(resid_sub, seed+j)`` call, so the
-    codebooks are bit-for-bit the sequential loop's either way."""
-    import time
+    The books train on the driver, on one thread per usable core (numpy
+    releases the interpreter lock inside its array operations). Each book
+    is the same ``train_kmeans(resid_sub, seed+j)`` call it would be in a
+    sequential loop, so the codebooks are that loop's bit for bit. ``sc``
+    is accepted and unused: a Spark job's fixed start-up cost exceeds the
+    whole m-book loop on a sample of a few thousand rows."""
     from concurrent.futures import ThreadPoolExecutor
 
     dim = centroids.shape[1]
@@ -332,27 +321,15 @@ def train_pq_codebooks(
     )
     resid = sample - cf[d2.argmin(axis=1)]
 
-    def _book(r: np.ndarray, j: int) -> np.ndarray:
-        return train_kmeans(r[:, j * sub : (j + 1) * sub], 256, iters=iters, seed=seed + j)
+    def _book(j: int) -> np.ndarray:
+        return train_kmeans(resid[:, j * sub : (j + 1) * sub], 256, iters=iters, seed=seed + j)
 
-    t0 = time.perf_counter()
-    books = [_book(resid, 0)]
-    rest = range(1, num_subvectors)
-    per_book = time.perf_counter() - t0
-    threads = max(1, min(len(rest), os.cpu_count() or 1))
-    if sc is not None and per_book * -(-len(rest) // threads) > (
-        _SPARK_JOB_FIXED_S + per_book * -(-len(rest) // max(1, sc.defaultParallelism))
-    ):
-        resid_b = sc.broadcast(resid)
-        books += (
-            sc.parallelize(rest, len(rest))
-            .map(lambda j: _book(resid_b.value, j))
-            .collect()
-        )
-        resid_b.unpersist()
+    if hasattr(os, "sched_getaffinity"):
+        cores = len(os.sched_getaffinity(0))
     else:
-        with ThreadPoolExecutor(threads) as pool:
-            books += pool.map(lambda j: _book(resid, j), rest)
+        cores = os.cpu_count() or 1
+    with ThreadPoolExecutor(max(1, min(num_subvectors, cores))) as pool:
+        books = list(pool.map(_book, range(num_subvectors)))
     return np.stack(books)  # (m, 256, sub)
 
 
@@ -706,9 +683,10 @@ def build_ivf(
             sample, centroids, m, seed=seed, sc=spark.sparkContext
         )
 
-    enc, radii_acc = _assign_encode_df(
+    radii_acc = _radii_accumulator(spark, k)
+    enc = _assign_encode_df(
         df, vec_col, id_col, spark, centroids, codebooks, sq_bounds, rotation,
-        cosine, packed=packed,
+        cosine, packed=packed, radii=radii_acc,
     )
 
     os.makedirs(uri, exist_ok=True)
@@ -859,22 +837,22 @@ def _assign_encode_df(
     rotation,
     cosine: bool,
     packed: bool = False,
-):
+    radii=None,
+) -> DataFrame:
     """(id, vec, partition_id, pq_code, rq_norm, rq_corr, rnorm) for every
     non-null vector row: row-local centroid assignment + quantization with
     FIXED training artifacts. Shared by build_ivf, the delta-optimize path
     (extend_ivf) and the staged IndicesBuilder so fresh and delta rows
     cannot drift numerically.
 
-    Returns ``(df, radii)``. ``radii`` is an accumulator that the pass
-    fills as a side effect: ``_radii_seen(radii)`` after the first action
-    over ``df`` gives each partition's covering radius (the max of its
-    rows' ``rnorm``) and whether any row landed in it — exactly what
+    ``radii`` (optional, from ``_radii_accumulator``) is filled by the
+    pass as a side effect: ``_radii_seen(radii)`` after the first action
+    over the result gives each partition's covering radius (the max of
+    its rows' ``rnorm``) and whether any row landed in it — exactly what
     ``compute_partition_radii`` would read back from the written codes."""
     sc = spark.sparkContext
     artifacts_b = sc.broadcast((centroids, codebooks, sq_bounds, rotation))
     k = centroids.shape[0]
-    radii = sc.accumulator(np.full((2, k), -np.inf), _MaxParam())
 
     @pandas_udf(
         "struct<partition_id:int, pq_code:array<smallint>, rq_norm:float, rq_corr:float,"
@@ -898,10 +876,11 @@ def _assign_encode_df(
         # recompute from the written vec column.
         c64 = cent.astype(np.float64)[pid]
         rnorm = _finalize_distance(_score(_prep(raw, packed, cosine), c64, "l2"), "l2")
-        part = np.full((2, k), -np.inf)
-        np.fmax.at(part[0], pid, rnorm)
-        part[1, pid] = 1.0
-        radii.add(part)
+        if radii is not None:
+            part = np.full((2, k), -np.inf)
+            np.fmax.at(part[0], pid, rnorm)
+            part[1, pid] = 1.0
+            radii.add(part)
         rq_norm = rq_corr = [None] * len(x)
         if rot is not None:
             resid = (x - cents[pid]).astype(np.float64)
@@ -952,7 +931,7 @@ def _assign_encode_df(
         "id", "vec", "e.partition_id", "e.pq_code", "e.rq_norm", "e.rq_corr",
         "e.rnorm",
     )
-    return enc, radii
+    return enc
 
 
 class _MaxParam(AccumulatorParam):
@@ -967,11 +946,27 @@ class _MaxParam(AccumulatorParam):
         return np.fmax(a, b, out=a)
 
 
+def _radii_accumulator(spark: SparkSession, k: int):
+    """An empty covering-radii accumulator over ``k`` partitions for
+    ``_assign_encode_df`` to fill; read it once with ``_radii_seen``."""
+    return spark.sparkContext.accumulator(np.full((2, k), -np.inf), _MaxParam())
+
+
 def _radii_seen(radii) -> tuple[np.ndarray, np.ndarray]:
-    """(covering radius per partition, partitions that got a row) from
-    the accumulator ``_assign_encode_df`` returns. A partition without a
-    row has radius 0, as ``compute_partition_radii`` reports it."""
+    """(covering radius per partition, partitions that got a row) from a
+    ``_radii_accumulator`` after the action that ran the encode pass. A
+    partition without a row has radius 0, as ``compute_partition_radii``
+    reports it.
+
+    PySpark's driver keeps every accumulator in a registry for the life
+    of the session, so this drops the entry: one build or extend must not
+    hold its (2, k) array forever. No update can arrive for it afterwards:
+    every task of the finished action has been merged, and the scheduler
+    discards completions from a stage it no longer tracks."""
+    from pyspark.accumulators import _accumulatorRegistry
+
     top, seen = radii.value
+    _accumulatorRegistry.pop(radii.aid, None)
     return np.where(top == -np.inf, 0.0, top), seen > 0
 
 
@@ -1050,7 +1045,8 @@ def extend_ivf(
             )
             seen = d if seen is None else seen.unionByName(d)
         df = df.join(seen, id_col, "left_anti")
-    enc, radii_acc = _assign_encode_df(
+    radii_acc = _radii_accumulator(spark, index.centroids.shape[0])
+    enc = _assign_encode_df(
         df.select(F.col(id_col), F.col(vec_col)),
         vec_col,
         id_col,
@@ -1061,6 +1057,7 @@ def extend_ivf(
         index.rotation,
         index.metric == "cosine",
         packed=index.packed,
+        radii=radii_acc,
     )
     n = 0
     for s in kept:

@@ -1,7 +1,6 @@
 """IVF build internals: the vectorized k-means kernel against the per-cluster
 loop it replaced, covering radii taken from the encode pass against radii
-read back from the written codes, PQ-book training on and off the driver,
-and the job shape of an IVF_PQ build."""
+read back from the written codes, and the job shape of an IVF_PQ build."""
 
 import os
 import uuid
@@ -88,28 +87,6 @@ def test_train_kmeans_matches_the_loop(x, k, iters):
         assert _quant_error(x, got) <= _quant_error(x, want) * (1 + 1e-9)
 
 
-def test_pq_books_job_path_equals_driver_path(spark, monkeypatch):
-    """With no fixed job cost the books after the first train in a Spark
-    job; they must equal the driver loop's bit for bit."""
-    from lance_spark.indexes import vector as v
-
-    rng = np.random.default_rng(7)
-    sample = rng.standard_normal((1200, 16))
-    cents = v.train_kmeans(sample, 4, seed=42)
-    driver = v.train_pq_codebooks(sample, cents, 4, seed=42)
-    monkeypatch.setattr(v, "_SPARK_JOB_FIXED_S", -1.0)
-    sc = spark.sparkContext
-    group = f"pq-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        job = v.train_pq_codebooks(sample, cents, 4, seed=42, sc=sc)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert np.array_equal(driver, job)
-
-
 def _codes_radii(spark, idx):
     from lance_spark.indexes.vector import compute_partition_radii
 
@@ -154,6 +131,33 @@ def test_extend_with_nothing_to_index_leaves_no_segment(spark, emb, tmp_path):
     assert out.segments == ["codes"]
     assert sorted(d for d in os.listdir(idx.uri) if d.startswith("codes")) == ["codes"]
     assert np.array_equal(IvfIndex(idx.uri).radii, idx.radii)
+
+
+def test_radii_accumulators_do_not_pile_up(spark, emb, tmp_path):
+    """PySpark's driver registry keeps an accumulator for the session's
+    life unless dropped: builds and extends leave it as they found it, and
+    an encode pass with no radii reader registers none. The last extend
+    finds nothing to index (``vec_id`` stops at 499)."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    from lance_spark.indexes.vector import _assign_encode_df, build_ivf, extend_ivf
+
+    before = len(_accumulatorRegistry)
+    idx = build_ivf(
+        emb.filter(F.col("vec_id") < 200), "embedding", "vec_id", str(tmp_path / "idx"),
+        num_partitions=4, metric="l2", index_type="IVF_PQ", num_sub_vectors=8,
+    )
+    assert len(_accumulatorRegistry) == before
+    for f, lo in enumerate((200, 300, 400, 500), start=1):
+        part = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 100))
+        idx = extend_ivf(idx, spark, part, fragments=[f])
+        assert len(_accumulatorRegistry) == before
+    assert len(idx.segments) == 4
+    enc = _assign_encode_df(
+        emb, "embedding", "vec_id", spark, idx.centroids, idx.codebooks, None, None, False
+    )
+    assert enc.count() > 0
+    assert len(_accumulatorRegistry) == before
 
 
 def test_ivf_pq_build_job_shape(spark, emb, tmp_path):
