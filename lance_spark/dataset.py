@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from lance_spark import manifest as mf
-from lance_spark.io import ROWID_SCHEMA, read_table
+from lance_spark.io import ROWID_SCHEMA, local_df, read_table
 from lance_spark.write import FRAGID_SHIFT, ROWADDR_COL, ROWID_COL
 
 
@@ -349,7 +349,7 @@ class LanceDataset:
         applied with a single broadcast anti-join on _rowid.
         """
         if not fragments:
-            return spark.createDataFrame([], self.schema).withColumn(ROWID_COL, F.lit(0).cast("long"))
+            return local_df(spark, [], self.schema).withColumn(ROWID_COL, F.lit(0).cast("long"))
 
         # group fragments by file-layout signature
         by_layout: dict[tuple, list[mf.Fragment]] = {}
@@ -849,8 +849,8 @@ class LanceDataset:
         wanted = None if fragments is None else {int(f) for f in fragments}
         frags = [f for f in self.manifest.fragments if wanted is None or f.id in wanted]
         if not frags:
-            return spark.createDataFrame(
-                [], f"{ROWID_COL} long, fragment_id long, {ROWADDR_COL} long"
+            return local_df(
+                spark, [], f"{ROWID_COL} long, fragment_id long, {ROWADDR_COL} long"
             )
 
         def _embedded_id(path: str):
@@ -916,6 +916,27 @@ class LanceDataset:
         if how == "inner":
             return df.filter(held).withColumn("fragment_id", fid)
         return df.withColumn("fragment_id", F.when(held, fid))
+
+    def _rowids_held(self, rowids, fragments):
+        """The driver-side form of ``_with_fragment_id(..., fragments=...)``
+        for a numpy array of rowids: a bool mask, True where one of
+        ``fragments`` holds the row. Runs no Spark job. While rowids are
+        addresses it is the prefix arithmetic; after compaction it reads the
+        ``_rowid`` column of those fragments' first files with pyarrow, the
+        rows ``_rowid_owners`` would scan."""
+        import numpy as np
+
+        wanted = {int(f) for f in fragments}
+        if self._rowid_addressable():
+            return np.isin(rowids >> FRAGID_SHIFT, list(wanted))
+        import pyarrow.parquet as pq
+
+        held = [
+            pq.read_table(self._abs(f.files[0].path), columns=[ROWID_COL])
+            .column(0).to_numpy()
+            for f in self.manifest.fragments if f.id in wanted
+        ]
+        return np.isin(rowids, np.concatenate(held) if held else [])
 
     def _attach_row_address(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         """Add ``_rowaddr`` to a DataFrame carrying ``_rowid``. Pre-compaction
@@ -1047,7 +1068,7 @@ class LanceDataset:
         paths = [p for f in frags for df in f.files[1:] if column in df.columns
                  for p in [df.path]]
         if not paths:
-            return spark.createDataFrame([], f"{ROWID_COL} long, {column} binary")
+            return local_df(spark, [], f"{ROWID_COL} long, {column} binary")
         df = self._read_files(spark, paths)
         out = df.filter(F.col(ROWID_COL).isin(rowids)).select(ROWID_COL, column)
         # blob sidecars are never rewritten on delete: without the

@@ -39,7 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lance_spark.io import read_table, write_table
+from lance_spark.io import local_df, read_table, write_table
 from lance_spark.write import ROWID_COL
 
 
@@ -389,7 +389,7 @@ def query_index(ds, spark: SparkSession, meta, op: str, value) -> IndexResult:
             # repr and the Spark literal cast — the union can only widen the
             # fragment set (bloom-safe), never prune a matching fragment
             # that either representation would keep
-            py = spark.createDataFrame([(str(v),) for v in vals], ["value"])
+            py = local_df(spark, [(str(v),) for v in vals], "value string")
             lit = spark.range(1).select(
                 F.explode(
                     F.array(*[F.lit(v).cast("string") for v in vals])

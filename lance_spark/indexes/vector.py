@@ -14,18 +14,19 @@ Semantics mirror the reference's vector index (WHAT, not HOW):
     (scanner.rs:2884-2905 refine).
 
 Spark-first layout (SURVEY §2.5): the index IS a parquet table partitioned
-by ``partition_id`` — Spark's partition pruning implements the IVF probe
-(only the probed directories are read; at 100 TB an nprobes/num_partitions
-fraction of the index is scanned). Kmeans trains on a driver-side sample
-(the reference trains on a sample too); assignment/encoding run distributed
-as Arrow-batched pandas_udfs. The shuffle that ``partitionBy`` performs at
-write is exactly the reference's index-build shuffler
-(rust/lance-index/src/vector/ivf/shuffler.rs).
+by ``partition_id``, so an IVF probe reads only the probed directories (an
+nprobes/num_partitions fraction of the index). A single query probes on the
+driver, as Lance's does in one process: pyarrow reads the probed
+directories and numpy scores them. The bulk joins (``ann_join``,
+``ann_maxsim_join``) probe through Spark's partition pruning. Kmeans trains
+on a driver-side sample (the reference trains on a sample too);
+assignment/encoding run distributed as Arrow-batched pandas_udfs. The
+shuffle that ``partitionBy`` performs at write is exactly the reference's
+index-build shuffler (rust/lance-index/src/vector/ivf/shuffler.rs).
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
@@ -37,24 +38,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from lance_spark.io import read_table, write_table
+from lance_spark.io import local_df, read_table, write_table
 
 
-# Cap on the refine stage's driver-side candidate collect: (id, _approx)
-# rows are ~24 bytes, so 1M rows ≈ 24 MB — corpus-independent no matter how
-# wide a k × refine_factor configuration the caller asks for (ADVICE r8).
+# Cap on the refine stage's candidate set: the refine point-reads the
+# vectors of at most this many ids, corpus-independent no matter how wide a
+# k × refine_factor configuration the caller asks for (ADVICE r8).
 _MAX_REFINE_CANDIDATES = 1_000_000
 
+
+class _TailMask:
+    """The ``tail_mask`` argument of the index search paths: it marks the
+    rows held by the fragments the index does not cover yet (``tail``).
+    Called on a DataFrame of ``id`` rows it sets ``fragment_id`` on those
+    rows and leaves it null elsewhere (the distributed paths, through
+    ``_drop_tail``); ``held(ids)`` makes the same decision on the driver
+    for a numpy array of ids (the single-query probe of ``ann_search``)."""
+
+    def __init__(self, ds, spark: SparkSession, tail: list[int]):
+        self.ds, self.spark, self.tail = ds, spark, list(tail)
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        return self.ds._with_fragment_id(
+            self.spark, df, col="id", fragments=self.tail, how="left"
+        )
+
+    def held(self, ids: np.ndarray) -> np.ndarray:
+        return self.ds._rowids_held(ids, self.tail)
+
+
 def _tail_mask(ds, spark: SparkSession, tail: list[int]):
-    """The ``tail_mask`` argument of the index search paths: a function
-    that sets ``fragment_id`` on the ``id`` rows held by the fragments the
-    index does not cover yet (``tail``) and leaves it null elsewhere. None
-    when the index covers every fragment."""
-    if not tail:
-        return None
-    return functools.partial(
-        ds._with_fragment_id, spark, col="id", fragments=tail, how="left"
-    )
+    """A ``_TailMask`` over ``tail``; None when the index covers every
+    fragment."""
+    return _TailMask(ds, spark, tail) if tail else None
 
 
 def _drop_tail(df: DataFrame, tail_mask) -> DataFrame:
@@ -796,17 +812,29 @@ def _gated_broadcast(df: DataFrame | None):
     return F.broadcast(df) if small else df
 
 
-def _k_overfetch(ds, k: int) -> int:
-    """Index-side fetch width compensating for deleted rows that linger in
-    the index (deletion sidecars apply at scan, not at index build): each
-    deleted row can displace one live row from an index top-k, so without
-    widening a query whose nearest neighbors were deleted returns FEWER
-    than k live rows despite plenty of live candidates. Callers re-cut to
-    k after the live-rowid gate. Bounded by the refine cap."""
-    ndel = sum(f.num_deleted_rows for f in ds.manifest.fragments)
-    if not ndel:
+def _k_overfetch(ds, k: int, index: IvfIndex) -> int:
+    """Index-side fetch width compensating for rows that linger in the
+    index but are no longer live: each can displace one live row from an
+    index top-k, so without widening, a query whose nearest neighbors were
+    deleted returns FEWER than k live rows despite plenty of live
+    candidates. Deletion sidecars apply at scan, not at index build; and a
+    compaction drops deleted rows from the fragments but not from the
+    index, so the rows the index holds beyond the live rows of the
+    fragments it covers count too (their number is in the codes' parquet
+    footers). Callers re-cut to k after the live-rowid gate. Bounded by
+    the refine cap."""
+    stale = sum(f.num_deleted_rows for f in ds.manifest.fragments)
+    meta = next(
+        (i for i in ds.manifest.indices if os.path.join(ds.uri, i.path) == index.uri), None
+    )
+    if meta is not None and not meta.params.get("multivector", False):
+        # (a multivector index holds one row per vector, not per row)
+        covered = set(meta.fragment_ids)
+        live = sum(f.num_rows for f in ds.manifest.fragments if f.id in covered)
+        stale += max(0, _codes_dataset(index).count_rows() - live)
+    if not stale:
         return k
-    return min(k + ndel, max(k, _MAX_REFINE_CANDIDATES))
+    return min(k + stale, max(k, _MAX_REFINE_CANDIDATES))
 
 
 def _np_save_atomic(uri: str, name: str, arr: np.ndarray) -> None:
@@ -1199,6 +1227,70 @@ def probe_partitions(index: IvfIndex, query: list[float], nprobes: int) -> list[
     return [int(i) for i in np.argsort(d, kind="stable")[:nprobes]]
 
 
+def _codes_dataset(index: IvfIndex):
+    """Every codes segment of ``index`` as one pyarrow dataset over its hive
+    layout: a ``partition_id`` filter opens only the probed directories."""
+    import pyarrow.dataset as pads
+
+    return pads.dataset(
+        [pads.dataset(p, partitioning="hive") for p in index.codes_paths()]
+    )
+
+
+def _id_ddl(arrow_type) -> str:
+    """The Spark type of an index's ``id`` column, from its Arrow type."""
+    import pyarrow as pa
+
+    if pa.types.is_string(arrow_type) or pa.types.is_large_string(arrow_type):
+        return "string"
+    if pa.types.is_int32(arrow_type):
+        return "int"
+    return "long"  # int64 and the legacy default
+
+
+def _rows_matrix(col):
+    """An Arrow list column → its (n, m) numpy matrix, read from the values
+    buffer when every row is non-null and m long; otherwise the rows as a
+    list, for ``_prep``'s per-row NULL and ragged rules."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    n = len(arr)
+    if n and not arr.null_count:
+        lens = np.diff(arr.offsets.to_numpy())
+        if (lens == lens[0]).all():
+            return arr.flatten().to_numpy(zero_copy_only=False).reshape(n, int(lens[0]))
+    return arr.to_pylist()
+
+
+def _rank(ids: np.ndarray, d: np.ndarray, k: int):
+    """The first ``k`` distinct ids in (NaN last, distance, id) order, with
+    their distances. An id that a torn delta left in two segments keeps
+    its better slot only. String ids sort by code point, as Python does."""
+    if ids.dtype == object:
+        ids = ids.astype(str)
+    nan = np.isnan(d)
+    order = np.lexsort((ids, np.where(nan, 0.0, d), nan))
+    ranked = ids[order]
+    _, first = np.unique(ranked, return_index=True)
+    keep = order[np.sort(first)[:k]]
+    return ids[keep], d[keep]
+
+
+def _hits_df(spark: SparkSession, ids, d, id_ddl: str) -> DataFrame:
+    """(id, _distance) rows built on the driver as a JVM-only relation. A
+    NaN (undefined) distance becomes NULL, as the scoring kernel's NULL
+    rule says, and ranks last."""
+    import pyarrow as pa
+
+    d = np.asarray(d, dtype=np.float64)
+    return local_df(
+        spark,
+        {"id": ids, "_distance": pa.array(d, mask=np.isnan(d))},
+        f"id {id_ddl}, _distance double",
+    )
+
+
 def ann_search(
     spark: SparkSession,
     index: IvfIndex,
@@ -1210,16 +1302,24 @@ def ann_search(
     ef_search: int = 64,
     tail_mask=None,
 ) -> DataFrame:
-    """ANN top-k: partition prune → (prefilter) → score → topk → optional
-    exact refine.
+    """ANN top-k of one query: partition probe → (prefilter) → score →
+    top-k → optional exact refine.
 
     Returns (id, _distance) following the reference's ``_distance`` meta
-    column. The ``partition_id IN probes`` filter prunes parquet partitions
-    at the source — only nprobes/num_partitions of the index is read.
+    column. For IVF_FLAT, IVF_PQ, IVF_SQ and IVF_RQ the search runs on the
+    driver, as Lance's runs in one process (knn.rs:359 → knn.rs:579 →
+    refine): pyarrow reads the ``nprobes`` probed ``partition_id``
+    directories of every codes segment, so only nprobes/num_partitions of
+    the index is read, and numpy scores them. The result is an Arrow-built
+    relation, so a plan over it runs no Python worker. The bulk paths
+    (``ann_join``, ``ann_maxsim_join``) stay distributed.
+
     ``prefilter_rowids`` restricts candidates BEFORE top-k selection
-    (prefilter semantics, scanner.rs:3558-3619) so k survivors are
-    guaranteed from the allowed set. ``ef_search`` applies to the
-    IVF_HNSW_FLAT graph traversal only.
+    (prefilter semantics, scanner.rs:3558-3619), so k survivors come from
+    the allowed set: one semi-join job keeps the allowed ids among the
+    probed ones. ``tail_mask`` (see ``_tail_mask``) drops the rows of
+    fragments the index does not cover yet, before the cut.
+    ``ef_search`` applies to the IVF_HNSW graph traversal only.
     """
     if index.index_type.startswith("IVF_HNSW"):
         from lance_spark.indexes.hnsw import hnsw_search
@@ -1228,197 +1328,136 @@ def ann_search(
             spark, index, query, k, nprobes, ef_search, prefilter_rowids,
             refine_factor, tail_mask=tail_mask,
         )
-    # The refine stage collects k·refine_factor (id, _approx) rows to the
-    # driver; cap it at a corpus-independent bound so a wide-fetch
-    # configuration (e.g. the oracle suite's k=100_000 × refine=100-200)
-    # never turns the bounded point-read into a corpus-sized collect
-    # (ADVICE r8). 1M rows ≈ 24 MB — still a TakeExec-shaped read.
+    import pyarrow.dataset as pads
+
+    # The refine reads k·refine_factor candidate vectors; cap it at a
+    # corpus-independent bound so a wide-fetch configuration (e.g. the
+    # oracle suite's k=100_000 × refine=100-200) never turns the bounded
+    # point-read into a corpus-sized one (ADVICE r8).
     n_cand = min(k * max(refine_factor, 1), _MAX_REFINE_CANDIDATES)
     q = _query_prep(index, query)
     probes = probe_partitions(index, query, nprobes)
-    codes = index.codes_df(spark, tail_mask).filter(
-        F.col("partition_id").isin(probes)
-    )
-    if prefilter_rowids is not None:
-        allow = prefilter_rowids.toDF("id")
-        codes = codes.join(_gated_broadcast(allow), "id", "left_semi")
-    metric, packed = index.metric, index.packed
+    metric = index.metric
     cosine = metric == "cosine"
-
-    if index.index_type == "IVF_FLAT":
-        qb = spark.sparkContext.broadcast(q)
-
-        @pandas_udf("double")
-        def flat_dist(s: pd.Series) -> pd.Series:
-            # float64 scoring over float32 storage: bit-matches any engine
-            # that widens-then-computes (the DuckDB oracle, numpy references)
-            return pd.Series(_score(_prep(s, packed, cosine), qb.value, metric))
-
-        scored = codes.select("id", flat_dist("vec").alias("_distance"))
-        scored = _finalize_distance(scored, metric)
-        # torn-delta guard: an id visible in two segments scores twice and
-        # would fill two of the k slots. Over-fetch 2k through the map-side
-        # TakeOrdered (a torn delta duplicates an id at most once), then
-        # dedup the 2k-row head — keeps the no-shuffle top-k plan (r12,
-        # sibling of the ann_join refine hardening)
-        head = scored.orderBy(F.asc_nulls_last("_distance"), "id").limit(2 * k)
-        return (
-            head.groupBy("id")
-            .agg(F.min("_distance").alias("_distance"))
-            .orderBy(F.asc_nulls_last("_distance"), "id")
-            .limit(k)
+    kind = index.index_type
+    # what each kind scores: IVF_FLAT the raw vectors, the quantized kinds
+    # only their codes (the scan IO is codes-sized, not vector-sized)
+    cols = {
+        "IVF_FLAT": ["id", "vec"],
+        "IVF_SQ": ["id", "pq_code"],
+        "IVF_PQ": ["id", "pq_code", "partition_id"],
+        "IVF_RQ": ["id", "pq_code", "rq_norm", "rq_corr", "partition_id"],
+    }[kind]
+    dset = _codes_dataset(index)
+    id_ddl = _id_ddl(dset.schema.field("id").type)
+    tbl = dset.to_table(columns=cols, filter=pads.field("partition_id").isin(probes))
+    ids = tbl.column("id").to_numpy(zero_copy_only=False)
+    keep = np.ones(len(ids), dtype=bool)
+    if tail_mask is not None and len(ids):
+        keep &= ~tail_mask.held(ids)
+    if prefilter_rowids is not None and keep.any():
+        probed = local_df(spark, {"id": np.unique(ids[keep])}, f"id {id_ddl}")
+        allowed = (
+            prefilter_rowids.toDF("id").join(F.broadcast(probed), "id", "left_semi")
+            .toArrow().column(0).to_numpy(zero_copy_only=False)
         )
+        keep &= np.isin(ids, allowed)
+    if not keep.all():
+        tbl, ids = tbl.filter(keep), ids[keep]
+    if not len(ids):
+        return _hits_df(spark, ids, np.zeros(0), id_ddl)
 
-    if index.index_type == "IVF_RQ":
-        # RabitQ estimator (bq.rs): per probed partition, rotate the query
-        # residual once on the driver; each vector contributes its sign-bit
-        # dot with the rotated residual, scaled by the stored norm and
-        # alignment correction. Scoring reads only {id, pq_code(bits),
-        # rq_norm, rq_corr} — 1 bit/dim + 8 bytes — never raw vectors.
-        rot = index.rotation.astype(np.float64)
-        dim = int(index.meta["dim"])
-        t = {}
-        for pid in probes:
-            tv = rot @ (q.astype(np.float64) - index.centroids[pid].astype(np.float64))
-            t[pid] = (tv, float(np.sqrt((tv * tv).sum())))
-        t_b = spark.sparkContext.broadcast(t)
+    if kind == "IVF_FLAT":
+        # float64 scoring over float32 storage: bit-matches any engine that
+        # widens-then-computes (the DuckDB oracle, numpy references)
+        x = _prep(_rows_matrix(tbl.column("vec")), index.packed, cosine)
+        d = _finalize_distance(_score(x, q, metric), metric)
+        return _hits_df(spark, *_rank(ids, d, k), id_ddl)
 
-        @pandas_udf("double")
-        def rq_dist(code: pd.Series, norm: pd.Series, corr: pd.Series, pid: pd.Series) -> pd.Series:
-            tabs = t_b.value
-            bits = np.unpackbits(
-                np.asarray(code.tolist(), dtype=np.uint8), axis=1
-            )[:, :dim].astype(np.float64)
-            sgn = 2.0 * bits - 1.0
-            pids = pid.to_numpy()
-            nx = norm.to_numpy().astype(np.float64)
-            cr = corr.to_numpy().astype(np.float64)
-            out = np.empty(len(sgn), dtype=np.float64)
+    codes = _rows_matrix(tbl.column("pq_code"))
+    if kind == "IVF_SQ":
+        # dequantize the codes, then score them like vectors
+        lo, span = (b.astype(np.float64) for b in index.sq_bounds)
+        deq = lo + _prep(codes) / 255.0 * span
+        # cosine renormalizes: drops the quantization norm error
+        approx = _score(_prep(deq, cosine=cosine), q, metric)
+    else:
+        codes = np.asarray(codes, dtype=np.int64)  # (n, m)
+        pids = tbl.column("partition_id").to_numpy()
+        approx = np.empty(len(ids), dtype=np.float64)
+        if kind == "IVF_RQ":
+            # RabitQ estimator (bq.rs): per probed partition, rotate the
+            # query residual once; each vector contributes its sign-bit dot
+            # with the rotated residual, scaled by the stored norm and
+            # alignment correction
+            dim = int(index.meta["dim"])
+            rot = index.rotation.astype(np.float64)
+            sgn = 2.0 * np.unpackbits(codes.astype(np.uint8), axis=1)[:, :dim] - 1.0
+            nx = tbl.column("rq_norm").to_numpy().astype(np.float64)
+            cr = tbl.column("rq_corr").to_numpy().astype(np.float64)
             for p in np.unique(pids):
                 mask = pids == p
-                tv, nt = tabs[int(p)]
+                tv = rot @ (q - index.centroids[p].astype(np.float64))
+                nt = float(np.sqrt((tv * tv).sum()))
                 if nt < 1e-12:
-                    out[mask] = nx[mask] ** 2
+                    approx[mask] = nx[mask] ** 2
                     continue
                 est_cos = (sgn[mask] @ tv) / (np.sqrt(dim) * nt) / cr[mask]
                 est_cos = np.clip(est_cos, -1.0, 1.0)
-                out[mask] = nx[mask] ** 2 + nt**2 - 2.0 * nx[mask] * nt * est_cos
-            return pd.Series(out)
-
-        scored = codes.select(
-            "id", rq_dist("pq_code", "rq_norm", "rq_corr", "partition_id").alias("_approx")
-        )
-        cand = scored.orderBy("_approx", "id").limit(n_cand).collect()
-        return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k)
-
-    if index.index_type == "IVF_SQ":
-        # dequantize codes → squared-L2 to the query, then exact refine.
-        # Scoring reads ONLY {id, pq_code} — never the raw vectors (the point
-        # of quantization: the scan IO is codes-sized, not vector-sized).
-        sqb = index.sq_bounds
-        qb = spark.sparkContext.broadcast(q)
-        sq_b2 = spark.sparkContext.broadcast(sqb)
-
-        @pandas_udf("double")
-        def sq_dist(code: pd.Series) -> pd.Series:
-            lo, span = sq_b2.value[0].astype(np.float64), sq_b2.value[1].astype(np.float64)
-            deq = lo + _prep(code) / 255.0 * span
-            # cosine renormalizes: drops the quantization norm error
-            return pd.Series(_score(_prep(deq, cosine=cosine), qb.value, metric))
-
-        scored = codes.select("id", sq_dist("pq_code").alias("_approx"))
-        cand = scored.orderBy(F.asc_nulls_last("_approx"), "id").limit(n_cand).collect()
-        return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k)
-
-    # IVF_PQ: one ADC lookup table per probed partition, then one
-    # gather-and-sum per row over its m codes
-    cbs = index.codebooks
-    m = cbs.shape[0]
-    adc = {pid: _adc_table(cbs, index.centroids[pid], q, metric) for pid in probes}
-    adc_b = spark.sparkContext.broadcast(adc)
-
-    @pandas_udf("double")
-    def pq_dist(code: pd.Series, pid: pd.Series) -> pd.Series:
-        tables = adc_b.value
-        codes = np.asarray(code.tolist(), dtype=np.int64)  # (n, m)
-        pids = pid.to_numpy()
-        out = np.empty(len(codes), dtype=np.float64)
-        cols = np.arange(m)[None, :]
-        for p in np.unique(pids):  # one vectorized gather per probed partition
-            mask = pids == p
-            out[mask] = tables[int(p)][cols, codes[mask]].sum(axis=1)
-        return pd.Series(out)
-
-    # Scoring reads ONLY {id, pq_code, partition_id}: raw vectors never enter
-    # the scan, the Python transfer, or the top-k heap — codes are ~dim/sub×
-    # smaller, which is the entire IO story of PQ at 100 TB.
-    scored = codes.select("id", pq_dist("pq_code", "partition_id").alias("_approx"))
-    cand = scored.orderBy("_approx", "id").limit(n_cand).collect()
-    return _exact_refine_local(spark, index, probes, [r["id"] for r in cand], q, k)
+                approx[mask] = nx[mask] ** 2 + nt**2 - 2.0 * nx[mask] * nt * est_cos
+        else:
+            # IVF_PQ: one ADC lookup table per probed partition, then one
+            # gather-and-sum per row over its m codes
+            cbs = index.codebooks
+            cols_m = np.arange(cbs.shape[0])[None, :]
+            for p in np.unique(pids):
+                mask = pids == p
+                tbl_p = _adc_table(cbs, index.centroids[p], q, metric)
+                approx[mask] = tbl_p[cols_m, codes[mask]].sum(axis=1)
+    # the n_cand best (approx, id) rows go to the exact refine; an id a torn
+    # delta left in two segments may take two slots, as a top-k over the
+    # union of segments does, and the refine keeps one
+    nan = np.isnan(approx)
+    sort_ids = ids.astype(str) if ids.dtype == object else ids
+    order = np.lexsort((sort_ids, np.where(nan, 0.0, approx), nan))[:n_cand]
+    return _exact_refine_local(spark, index, probes, ids[order].tolist(), q, k, dset)
 
 
 def _exact_refine_local(
     spark: SparkSession,
     index: IvfIndex,
     probes: list[int],
-    cand_ids: list[int],
+    cand_ids: list,
     q: np.ndarray,
     k: int,
+    dset=None,
 ) -> DataFrame:
-    """Exact re-rank of the ADC candidates (scanner.rs:2884-2905 refine).
+    """Exact re-rank of the approximate candidates (scanner.rs:2884-2905
+    refine).
 
-    The candidate set is O(k·refine_factor) — bounded, independent of corpus
-    size — so this is a TakeExec-shaped point read: pyarrow fetches the
-    candidate vectors with partition + id predicates pushed into parquet
-    row-group pruning, and the re-rank is one tiny numpy pass. No second
-    Spark job or Python-worker round trip (measured: halves per-query
-    latency vs a pandas_udf refine stage at sf0.1)."""
-    import pyarrow as pa
+    The candidate set is O(k·refine_factor), bounded and independent of
+    corpus size, so this is a TakeExec-shaped point read: pyarrow fetches
+    the candidate vectors with partition + id predicates pushed into
+    parquet row-group pruning, numpy re-ranks them, and the result is an
+    Arrow-built relation. No Spark job runs here."""
     import pyarrow.dataset as pads
 
-    dset = pads.dataset(
-        [pads.dataset(p, partitioning="hive") for p in index.codes_paths()]
-    )
-    id_arrow = dset.schema.field("id").type
-    if pa.types.is_string(id_arrow) or pa.types.is_large_string(id_arrow):
-        id_spark = "string"
-    elif pa.types.is_int32(id_arrow):
-        id_spark = "int"
-    else:
-        id_spark = "long"  # int64 and the legacy default
+    dset = dset if dset is not None else _codes_dataset(index)
+    id_ddl = _id_ddl(dset.schema.field("id").type)
     if not cand_ids:
-        return spark.createDataFrame([], f"id {id_spark}, _distance double")
+        return _hits_df(spark, [], [], id_ddl)
     # candidate ids come pre-masked (the torn-delta guard runs at scoring),
     # so the point read may touch every segment — including a superseded
-    # copy of a candidate id, which the seen-set below collapses
+    # copy of a candidate id, which _rank collapses to one slot
     tbl = dset.to_table(
         columns=["id", "vec"],
         filter=pads.field("partition_id").isin(probes) & pads.field("id").isin(cand_ids),
     )
     ids = tbl.column("id").to_numpy(zero_copy_only=False)
     metric = index.metric
-    x = _prep(tbl.column("vec").to_pylist(), index.packed, metric == "cosine")
+    x = _prep(_rows_matrix(tbl.column("vec")), index.packed, metric == "cosine")
     d = _finalize_distance(_score(x, q, metric), metric)
-    # python key-sort: type-agnostic (string ids lexsort-safe) and the
-    # candidate set is O(k·refine) — tiny. The seen-set keeps ONE rank slot
-    # per id when a torn delta left the same id in two segments (r12,
-    # sibling of the ann_join refine hardening). NaN (undefined cosine)
-    # sorts LAST via the isnan flag — raw NaN breaks tuple ordering.
-    order = sorted(
-        range(len(d)),
-        key=lambda i: (bool(np.isnan(d[i])), 0.0 if np.isnan(d[i]) else float(d[i]), ids[i]),
-    )
-    seen: set = set()
-    rows = []
-    for i in order:
-        key = ids[i].item() if isinstance(ids[i], np.generic) else ids[i]
-        if key in seen:
-            continue
-        seen.add(key)
-        rows.append((key, float(d[i])))
-        if len(rows) == k:
-            break
-    return spark.createDataFrame(rows, f"id {id_spark}, _distance double")
+    return _hits_df(spark, *_rank(ids, d, k), id_ddl)
 
 
 def _ensure_radii(index: IvfIndex, spark: SparkSession) -> np.ndarray:
@@ -1483,7 +1522,7 @@ def distance_range_search(
             range_max_l2 = range_max
         probes = [int(i) for i in np.nonzero(lower <= range_max_l2)[0]]
     if not probes:
-        return spark.createDataFrame([], "id long, _distance double")
+        return local_df(spark, [], "id long, _distance double")
     codes = index.codes_df(spark).filter(F.col("partition_id").isin(probes))
     qb = spark.sparkContext.broadcast(q)
 
@@ -1710,8 +1749,8 @@ def ann_maxsim(
     # a single query IS a one-row query table: delegate to the bulk plan
     # so the XTR imputation/aggregation algebra lives in ONE place (the
     # two copies had already drifted on broadcast gating; r12 judge item)
-    qdf = spark.createDataFrame(
-        [(0, [[float(x) for x in q] for q in query_vectors])],
+    qdf = local_df(
+        spark, [(0, [[float(x) for x in q] for q in query_vectors])],
         "qid int, mv array<array<double>>",
     )
     out = ann_maxsim_join(
@@ -1937,9 +1976,10 @@ def _indexed_hits_with_tail(
 ) -> DataFrame:
     """Index-pruned hits UNION exact hits over the post-index fragment tail,
     live-rowid gated — the knn_combined split (scanner.rs:2946-3029) shared
-    by dataset_nearest, dataset_nearest_join, and the multivector route (a
-    fix applied to one copy previously had to be re-applied three times;
-    r12 judge item). ``indexed_fn(index, tail_mask)`` searches the indexed
+    by dataset_nearest_join and the multivector route (a fix applied to one
+    copy previously had to be re-applied three times; r12 judge item). The
+    single-vector ``dataset_nearest`` gates through its final column join
+    instead. ``indexed_fn(index, tail_mask)`` searches the indexed
     fragments with the torn-delta mask; ``flat_fn(flat)`` scores the
     unindexed-tail scanner frame exactly."""
     from lance_spark.write import ROWID_COL
@@ -1981,15 +2021,21 @@ def dataset_nearest(
     (``knn_combined``, scanner.rs:2946-3029), then global top-k. Returns the
     dataset's columns + ``_distance``.
 
+    The single-vector route is one Spark query after the driver-side index
+    probe: the index hits (an Arrow-built relation) union the exact top-k
+    of the unindexed tail, join the live rows of ``to_df`` (which applies
+    the deletions that linger in the index) for the dataset columns, and
+    are cut to k.
+
     ``metric`` defaults to the index's recorded metric, or to ``l2`` with
     no index (the reference's flat-search default, scanner.rs:1074); a
     metric conflicting with an existing index raises (r12 review fix — the
     old silent cosine fallback mis-ranked l2/dot corpora).
 
-    ``filter`` is a PREfilter (dataset.py:4353 prefilter=True): the allowed
-    row-id set is computed first and candidates are restricted before top-k,
-    so k matching rows come back. ``fast_search`` searches only indexed
-    fragments (dataset.py:4502), skipping the flat tail branch.
+    ``filter`` is a PREfilter (dataset.py:4353 prefilter=True): candidates
+    are restricted to the rows it allows before top-k, so k matching rows
+    come back. ``fast_search`` searches only indexed fragments
+    (dataset.py:4502), skipping the flat tail branch.
     """
     from lance_spark.operators.knn import knn_bruteforce
     from lance_spark.write import ROWID_COL
@@ -2014,6 +2060,31 @@ def dataset_nearest(
             f"multivector query against the single-vector index on {column!r};"
             " pass one query vector or index a multivector column"
         )
+    if meta is not None:
+        idx_metric = meta.params["metric"]
+        if not (mv_index or mv_query) and metric is not None and metric != idx_metric:
+            raise ValueError(
+                f"metric={metric!r} conflicts with the {idx_metric!r} index "
+                f"on {column!r}"
+            )
+        metric = idx_metric
+    elif metric is None:
+        # the reference's flat-search default (scanner.rs:1074
+        # MetricType::L2, overridden by the index's metric when one
+        # exists) — this repo defaulted to cosine, a silent parity break
+        # that mis-ranked l2 corpora (r12 review fix)
+        metric = "l2"
+
+    def flat_hits(fragments=None):
+        # exact top-k of the scanned rows, the prefilter applied by the scan
+        flat = ds.scanner(
+            spark, columns=[column], filter=filter, with_row_id=True,
+            fragments=fragments,
+        )
+        return knn_bruteforce(
+            flat, column, query, k=k, metric=metric, id_col=ROWID_COL
+        ).withColumnRenamed(ROWID_COL, "id")
+
     if mv_index or mv_query:
         # multivector column: route through the maxsim plans (reference
         # multivec_ann, scanner.rs:3471-3552; a single query vector is the
@@ -2025,66 +2096,37 @@ def dataset_nearest(
             overfetch=overfetch,
         )
     elif meta is None or not use_index:
-        full = ds.to_df(spark, with_row_id=True)
-        if allow is not None:
-            full = full.join(_gated_broadcast(allow), ROWID_COL, "left_semi")
-        if meta is not None:
-            idx_metric = meta.params["metric"]
-            if metric is not None and metric != idx_metric:
-                raise ValueError(
-                    f"metric={metric!r} conflicts with the {idx_metric!r} index "
-                    f"on {column!r}"
-                )
-            metric = idx_metric
-        elif metric is None:
-            # the reference's flat-search default (scanner.rs:1074
-            # MetricType::L2, overridden by the index's metric when one
-            # exists) — this repo defaulted to cosine, a silent parity break
-            # that mis-ranked l2 corpora (r12 review fix)
-            metric = "l2"
-        scored = knn_bruteforce(full, column, query, k=k, metric=metric, id_col=ROWID_COL)
-        hits = scored.withColumnRenamed(ROWID_COL, "id")
+        hits = flat_hits()
     else:
-        if metric is not None and metric != meta.params["metric"]:
-            raise ValueError(
-                f"metric={metric!r} conflicts with the "
-                f"{meta.params['metric']!r} index on {column!r}"
-            )
-
-        def _indexed(index, tail_mask):
-            return ann_search(
-                spark, index, query, k=_k_overfetch(ds, k), nprobes=nprobes,
-                refine_factor=refine_factor,
-                prefilter_rowids=allow, ef_search=ef_search,
-                # torn-delta guard: index rows of still-uncovered fragments
-                # are flat-searched by the tail union, so the index copies
-                # must not also score
-                tail_mask=tail_mask,
-            )
-
-        def _flat(flat):
-            if allow is not None:
-                flat = flat.join(_gated_broadcast(allow), ROWID_COL, "left_semi")
-            return knn_bruteforce(
-                flat, column, query, k=k, metric=meta.params["metric"],
-                id_col=ROWID_COL,
-            ).withColumnRenamed(ROWID_COL, "id")
-
-        hits = _indexed_hits_with_tail(
-            ds, spark, column, meta, _indexed, _flat, fast_search
+        index = IvfIndex(os.path.join(ds.uri, meta.path))
+        covered = set(meta.fragment_ids)
+        tail = [f.id for f in ds.manifest.fragments if f.id not in covered]
+        hits = ann_search(
+            spark, index, query, k=_k_overfetch(ds, k, index), nprobes=nprobes,
+            refine_factor=refine_factor, prefilter_rowids=allow,
+            ef_search=ef_search,
+            # torn-delta guard: index rows of still-uncovered fragments are
+            # flat-searched by the tail union, so the index copies must
+            # not also score
+            tail_mask=_tail_mask(ds, spark, tail),
         )
-    topk = hits.orderBy(F.asc_nulls_last("_distance"), "id").limit(k)
-    # fetch the dataset columns for the winners (TakeExec role, take.rs:284)
+        if tail and not fast_search:
+            hits = hits.unionByName(flat_hits(tail))
+    # fetch the dataset columns of the live hits (TakeExec role,
+    # take.rs:284); the inner join drops the deleted rows that linger in
+    # the index, before the cut to k. The reserved join-key name keeps a
+    # USER column named id in the fetched dataset columns.
     base = ds.to_df(spark, with_row_id=True)
-    # reserved join-key name: a bare drop("id") would also drop a USER
-    # column named id from the fetched dataset columns
-    topk = topk.withColumnRenamed("id", "__match_id")
-    out = base.join(
-        F.broadcast(topk), base[ROWID_COL] == topk["__match_id"], "inner"
-    ).drop("__match_id")
+    hits = hits.withColumnRenamed("id", "__match_id")
+    out = (
+        base.join(F.broadcast(hits), base[ROWID_COL] == hits["__match_id"], "inner")
+        .drop("__match_id")
+        .orderBy(F.asc_nulls_last("_distance"), ROWID_COL)
+        .limit(k)
+    )
     if not with_row_id:
         out = out.drop(ROWID_COL)
-    return out.orderBy(F.asc_nulls_last("_distance"))
+    return out
 
 
 def _multivector_nearest_hits(
@@ -2111,8 +2153,8 @@ def _multivector_nearest_hits(
     from lance_spark.operators.knn import multivector_maxsim_join
     from lance_spark.write import ROWID_COL
 
-    qdf = spark.createDataFrame(
-        [(0, [[float(x) for x in q] for q in qs])], "qid int, mv array<array<double>>"
+    qdf = local_df(
+        spark, [(0, [[float(x) for x in q] for q in qs])], "qid int, mv array<array<double>>"
     )
 
     def flat_hits(df):
@@ -2136,7 +2178,7 @@ def _multivector_nearest_hits(
     return _indexed_hits_with_tail(
         ds, spark, column, meta,
         lambda index, tail_mask: ann_maxsim(
-            spark, index, qs, k=_k_overfetch(ds, k), nprobes=nprobes,
+            spark, index, qs, k=_k_overfetch(ds, k, index), nprobes=nprobes,
             refine_factor=refine_factor, overfetch=overfetch, tail_mask=tail_mask,
         ),
         flat_hits,
@@ -2229,7 +2271,7 @@ def dataset_nearest_join(
             ds, spark, column, meta,
             lambda index, tail_mask: ann_maxsim_join(
                 spark, index, queries, query_vec_col, query_id_col,
-                k=_k_overfetch(ds, k),
+                k=_k_overfetch(ds, k, index),
                 nprobes=nprobes, refine_factor=refine_factor, overfetch=overfetch,
                 tail_mask=tail_mask,
             ),
@@ -2263,7 +2305,7 @@ def dataset_nearest_join(
             ds, spark, column, meta,
             lambda index, tail_mask: ann_join(
                 spark, index, queries, query_vec_col, query_id_col,
-                k=_k_overfetch(ds, k),
+                k=_k_overfetch(ds, k, index),
                 nprobes=nprobes, use_codes=use_codes, refine_factor=refine_factor,
                 tail_mask=tail_mask,
             ),

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from lance_spark.functions.text import tokenize
-from lance_spark.io import read_table, write_table
+from lance_spark.io import local_df, read_table, write_table
 
 END_OF_WORD = "▁"  # sentencepiece-style word-boundary marker
 
@@ -157,12 +157,10 @@ def bpe_train(
         if t not in seen:
             seen.add(t)
             vocab.append(t)
-    merges_df = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)], "rank INT, left STRING, right STRING"
+    merges_df = local_df(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)], "rank INT, left STRING, right STRING"
     )
-    vocab_df = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(vocab)], "token STRING, id BIGINT"
-    )
+    vocab_df = local_df(spark, [(t, i) for i, t in enumerate(vocab)], "token STRING, id BIGINT")
     return merges_df, vocab_df
 
 

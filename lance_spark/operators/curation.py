@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lance_spark.functions.text import tokenize
-from lance_spark.io import read_table, write_table
+from lance_spark.io import local_df, read_table, write_table
 
 # char classes, not (?i): the same literal must run on Spark (Java regex)
 # and the DuckDB oracle (RE2) — and a lowercase-only pattern leaves
@@ -776,8 +776,8 @@ def pack_sequences(
     ).collect()[0]
     lo, hi = stats["lo"], stats["hi"]
     if lo is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, n_tokens long, bin long, bin_offset long"
+        return local_df(
+            df.sparkSession, [], f"{id_col} long, n_tokens long, bin long, bin_offset long"
         )
     span = max((hi - lo + 1 + num_shards - 1) // num_shards, 1)
     shard = ((F.col(id_col) - F.lit(lo)) / F.lit(span)).cast("long")
@@ -825,9 +825,7 @@ def pack_sequences(
         offsets[s] = acc
         acc += totals[s]
     off_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(s, o) for s, o in offsets.items()], "__shard long, __offset long"
-        )
+        local_df(df.sparkSession, list(offsets.items()), "__shard long, __offset long")
     )
     # pass 2: local cumsum within each shard (partitioned window, parallel)
     w = (

@@ -1064,7 +1064,10 @@ def connected_components(
         node_field = nodes.select(F.col(id_col)).schema.fields[0]
         from pyspark.sql.types import StructField, StructType
 
-        map_df = spark.createDataFrame(
+        from lance_spark.io import local_df
+
+        map_df = local_df(
+            spark,
             mapping,
             StructType(
                 [
